@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Driver-contract benchmark: total seconds across the full query suite at
   * `SPARK_GRAFT_SF_DIR` (default sf0.1), printed as one JSON line.
   *
@@ -14,14 +16,10 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Untimed warmup pass (see scaladoc).
-    names.foreach { name =>
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => () }
-    }
+    names.foreach(name => timeQuery(spark, sfDir, name)(_.count()))
     // Timed pass: best of two runs per query — single-run totals swing
     // ±30% on this box (GC debt and scheduler jitter land on random
     // queries; observed across rounds), and min-of-2 suppresses exactly
@@ -31,19 +29,13 @@ object Bench {
     // can't masquerade as a speedup.
     System.gc()
     val results = names.map { name =>
-      def once(): (Double, Boolean) = {
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-          catch { case scala.util.control.NonFatal(_) => false }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      val (t1, ok1) = once()
-      val (t2, ok2) = once()
+      def once() = timeQuery(spark, sfDir, name)(_.count())
       // a failed query reports -1 and contributes nothing to the total —
       // its fast-fail elapsed must not read as a speedup anywhere
-      if (ok1 && ok2) (name, math.min(t1, t2), true)
-      else (name, -1.0, false)
+      (once(), once()) match {
+        case (Some(t1), Some(t2)) => (name, math.min(t1, t2), true)
+        case _                    => (name, -1.0, false)
+      }
     }
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + Jfmt.num(v) }
       .mkString("{", ",", "}")
@@ -68,4 +60,26 @@ object Bench {
     spark.stop()
     if (failed.nonEmpty) sys.exit(2)
   }
+
+  /** Seconds from building contract query `name` to the end of `action`
+    * on it, or None (with the error on stderr) when either throws — the
+    * one timer Bench, BenchMedian and TimeQueries share. */
+  def timeQuery(spark: SparkSession, sfDir: String, name: String)(
+      action: DataFrame => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      action(SparkEntry.queries(name)(spark, sfDir))
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"FAILED $name: $e")
+      None
+    }
+  }
+
+  /** Run the COMPLETE plan and discard its rows: under count() Catalyst
+    * elides the final orderBy/projection beneath the aggregate, the noop
+    * writer consumes every output row (collect-equivalent execution
+    * without driver-heap skew from large results). */
+  def noopSink(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 }

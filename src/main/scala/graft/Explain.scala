@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print schema, formatted physical plan, and a sample for one
   * query (or a raw table with `table:<name>`). Used to iterate on plans —
   * pushdown, broadcast choice, whole-stage codegen spans.
@@ -12,13 +10,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    // the library session recipe (incl. GraftExtensions — a query using a
-    // SQL-registered kernel must explain here, not fail to resolve)
-    val spark = GraftSession.configure(SparkSession.builder()
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // the bench's session shape, so the plan shown is the plan it times
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val df =
       if (name.startsWith("table:"))

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library entry point: a SparkSession wired the way the engine expects.
+/** Library entry point and the one place a SparkSession is built: every
+  * main, tool and spec takes its session from here, so the numbers one
+  * entry point measures describe the session the others run.
   *
   * - `spark.sql.legacy.parquet.nanosAsLong=true` — the events fixtures (and
   *   any TIMESTAMP(NANOS) parquet) read as long nanos; `Tables.events`
@@ -13,26 +15,41 @@ import org.apache.spark.sql.SparkSession
   *   coalescing, which is enabled.
   * - `GraftExtensions` registered, so simhash64/dot_d/minhash_sig/
   *   minhash_shingled/word_ngrams work from SQL.
+  * - `SPARK_GRAFT_EVENTLOG=<dir>`, when set, writes the standard Spark
+  *   event log there (`tools/stage_profile.py` renders its per-stage
+  *   wall/shuffle/spill table); unset, the session has no event log.
   *
-  * Builder-style: `GraftSession.local(32)` for a local[n] session,
-  * `GraftSession.configure(builder)` to wire an existing builder (e.g. one
-  * pointed at a cluster master) without taking over its lifecycle.
+  * `GraftSession.local()` for a local[n] session with n =
+  * `SPARK_GRAFT_CPUS` (default 4), `GraftSession.session(master)` for one
+  * pointed at a cluster master.
   */
 object GraftSession {
 
-  def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
+  /** `SPARK_GRAFT_CPUS`, default 4: the core count of every entry point's
+    * session. */
+  lazy val defaultCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  def local(cores: Int = defaultCores): SparkSession =
+    session(s"local[$cores]", cores)
+
+  def session(master: String, cores: Int = defaultCores): SparkSession = {
+    val b = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .withExtensions(new graft.functions.GraftExtensions)
-
-  def local(cores: Int, shufflePartitions: Option[Int] = None): SparkSession = {
-    val s = configure(SparkSession.builder()
-        .master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions",
-          shufflePartitions.getOrElse(cores).toString)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    sys.env.get("SPARK_GRAFT_EVENTLOG").foreach { dir =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      b.config("spark.eventLog.enabled", "true")
+        .config("spark.eventLog.dir", dir)
+        // plain single-file JSON so the parser needs no codec
+        .config("spark.eventLog.compress", "false")
+        .config("spark.eventLog.rolling.enabled", "false")
+    }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -38,17 +38,9 @@ object Main {
         java.nio.file.Files.readString(java.nio.file.Paths.get(confPath)))
       .fold(e => sys.error(s"config: $e"), identity)
 
-    val spark = {
-      val s = GraftSession.configure(SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-          .appName("graft-archiver")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-          .config("spark.ui.enabled", "false"))
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    // SPARK_MASTER: the deployment's cluster master; unset, local[n]
+    val spark = sys.env.get("SPARK_MASTER")
+      .fold(GraftSession.local())(GraftSession.session(_))
 
     // SIGTERM/SIGQUIT parity with the reference (cmd/main.go:29-35:
     // signal → context cancel). The JVM runs shutdown hooks on both

@@ -17,8 +17,7 @@ object Verify {
       case other =>
         sys.error(s"usage: Verify <sfDir> <outDir> [--only a,b,c]; got: ${other.mkString(" ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val selected = only.fold(SparkEntry.queries)(ns => SparkEntry.queries.filter(kv => ns(kv._1)))
     selected.foreach { case (name, fn) =>

@@ -59,20 +59,25 @@ object ScalarOps {
     // greatest, least picks the finite bound), where +Inf — the largest
     // value — belongs; NaN values group last in Spark ordering and land
     // in the last bucket explicitly. The clamp runs in double space
-    // BEFORE the int cast (ANSI: casting NaN/overflow throws). B scales
-    // with the session's parallelism (4× for spread, guide §2.5), never
-    // with data.
+    // BEFORE the int cast (ANSI: casting NaN/overflow throws). A null
+    // scaled value — decimal overflow with ANSI off — has no place in
+    // the order (greatest would clamp it to bucket 0, and the offsets
+    // join would drop a null bucket's rows), so it fails the query.
+    // B scales with the session's parallelism (4× for spread, guide
+    // §2.5), never with data.
     val nBuckets = math.max(32,
       4 * df.sparkSession.sparkContext.defaultParallelism)
     val stats = vc.agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"),
       sum(col("freq")).as("n"))
+    val scaled = floor((col("v") - col("vmin")) / (col("vmax") - col("vmin"))
+      * nBuckets)
     val bucket =
       when(isnan(col("v")), lit(nBuckets - 1))
         .when(col("v") === col("vmin"), lit(0))
-        .otherwise(least(greatest(
-          floor((col("v") - col("vmin")) / (col("vmax") - col("vmin"))
-            * nBuckets), lit(0.0)), lit((nBuckets - 1).toDouble))
-          .cast("int"))
+        .when(scaled.isNull, raise_error(lit(
+          s"exactPercentiles: null bucket for a value of $valueCol")))
+        .otherwise(least(greatest(scaled, lit(0.0)),
+          lit((nBuckets - 1).toDouble)).cast("int"))
     val withB = vc.crossJoin(broadcast(stats)).withColumn("b", bucket)
     // pass 1: per-bucket totals → exclusive running offsets. B rows total;
     // the constant partition key (pmod(b,1) ≡ 0, but not foldable — a

@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.nio.file.{FileSystemException, Files, Path}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -146,6 +147,18 @@ object StreamingOps {
     s.conf.set("spark.sql.streaming.stateStore.providerClass", chosen)
     chosen
   }
+
+  /** Hard-link `existing` as `link` (metadata-only), or copy its bytes
+    * where the filesystem refuses the link: a staging dir on another
+    * mount, or a mount without hard links. `createLink` is a parameter so
+    * a spec can force the fallback. */
+  private[graft] def linkOrCopy(link: Path, existing: Path,
+      createLink: (Path, Path) => Path = Files.createLink(_, _)): Unit =
+    try createLink(link, existing): Unit
+    catch {
+      case _: UnsupportedOperationException | _: FileSystemException =>
+        Files.copy(existing, link): Unit
+    }
 
   /** Base dir for throwaway memory-sink checkpoints: tmpfs when the host
     * provides one (no fsync tax on the per-micro-batch WAL/commit/state
@@ -605,9 +618,7 @@ object StreamingOps {
       val genInit = new java.io.File(s"$snapRoot/gen-init")
       require(genInit.mkdirs(), s"cannot create $genInit")
       new java.io.File(seedDir).listFiles().foreach { f =>
-        if (f.isFile)
-          java.nio.file.Files.createLink(
-            genInit.toPath.resolve(f.getName), f.toPath): Unit
+        if (f.isFile) linkOrCopy(genInit.toPath.resolve(f.getName), f.toPath)
       }
       StreamingArchiver.publishSnapshot(s, snapRoot, "gen-init")
       val schema = stagedSchema.computeIfAbsent(chDir,

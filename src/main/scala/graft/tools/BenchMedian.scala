@@ -20,41 +20,24 @@ object BenchMedian {
     val iters = args.headOption.map(_.toInt).getOrElse(5)
     val outPath = if (args.length > 1) args(1) else "bench_local.json"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = graft.GraftSession.defaultCores
     val spark = graft.GraftSession.local(cpus)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
 
-    // Drive each query through the noop SINK, not count(): under count()
-    // Catalyst eliminates the query's final orderBy/projection beneath
-    // the aggregate, so medians under-measure real output cost. The noop
-    // writer consumes every output row of the COMPLETE plan (sort,
-    // projection, row assembly) and discards it — collect-equivalent
-    // execution without driver-heap skew from large results.
-    // GRAFT_BENCH_ACTION=count reproduces the pre-round-8 methodology for
-    // mechanical round-over-round diffs against older records; the default
-    // (noop) is the honest measure going forward.
-    val useCount =
-      sys.env.get("GRAFT_BENCH_ACTION").exists(_.equalsIgnoreCase("count"))
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        if (useCount) { df.count(): Unit }
-        else df.write.format("noop").mode("overwrite").save()
-      }
-      catch { case scala.util.control.NonFatal(e) =>
-        println(s"FAILED $name: $e"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    // Drive each query through the noop SINK, not count(): count() lets
+    // Catalyst elide the final orderBy/projection, so medians would
+    // under-measure real output cost (graft.Bench is the count record).
+    def once(name: String) = graft.Bench.timeQuery(spark, sfDir, name)(
+      graft.Bench.noopSink)
 
     names.foreach(once) // untimed warmup (JIT, codegen cache, footers)
     val samples = collection.mutable.Map[String, List[Double]]()
     for (i <- 1 to iters) {
       System.gc()
       var passTotal = 0.0
-      for (name <- names) {
-        val s = once(name)
-        if (s >= 0) { samples(name) = s :: samples.getOrElse(name, Nil); passTotal += s }
+      for (name <- names; s <- once(name)) {
+        samples(name) = s :: samples.getOrElse(name, Nil)
+        passTotal += s
       }
       println(f"PASS $i/$iters total $passTotal%.2f s")
     }
@@ -72,9 +55,8 @@ object BenchMedian {
     val qs = med.map { case (k, v) => "\"" + k + "\":" + graft.Jfmt.num(v) }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val action = if (useCount) "count" else "noop-sink"
     val json =
-      s"""{"metric":"total_of_medians","value":${graft.Jfmt.num(total, 3)},"unit":"sec","iters":$iters,"cpus":$cpus,"sf":"$sfDir","action":"$action","failed":$failedJson,"queries":$qs}"""
+      s"""{"metric":"total_of_medians","value":${graft.Jfmt.num(total, 3)},"unit":"sec","iters":$iters,"cpus":$cpus,"sf":"$sfDir","action":"noop-sink","failed":$failedJson,"queries":$qs}"""
     Files.write(Paths.get(outPath), json.getBytes(StandardCharsets.UTF_8))
     println(s"WROTE $outPath total_of_medians=" + f"$total%.2f")
     spark.stop()

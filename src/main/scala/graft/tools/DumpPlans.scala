@@ -18,7 +18,7 @@ object DumpPlans {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = ToolSession.create()
+    val spark = graft.GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

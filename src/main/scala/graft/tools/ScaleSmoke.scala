@@ -45,7 +45,7 @@ object ScaleSmoke {
     // queries also free driver references mid-flight (AQE stage frames),
     // and a periodic GC lets the ContextCleaner return that disk early.
     System.setProperty("spark.cleaner.periodicGC.interval", "90s")
-    val spark = ToolSession.create()
+    val spark = graft.GraftSession.local()
     val dir = Files.createTempDirectory("graft-scale-tier").toString
 
     // --- documents: vocab 30k, 40-79 words/doc, 4 sources, 4 langs;
@@ -195,7 +195,7 @@ object ScaleSmoke {
     // quality numbers (recall etc.) into `metrics` for the JSON record.
     val metrics = scala.collection.mutable.LinkedHashMap[String, Double]()
     def noop(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.write.format("noop").mode("overwrite").save()
+      graft.Bench.noopSink(df)
       // SPARK_GRAFT_DEBUG_PLAN=1: dump the FINAL adaptive plan (the one
       // with runtime stage reuse resolved — static explain of an AQE
       // plan shows duplicate exchange subtrees even when the stage
@@ -481,7 +481,7 @@ object ScaleSmoke {
         val g2 = graft.ops.AnnOps.knnGraphTwoLevel(
           spark, en, n2, 32, 32, 2, 4, 3)
         val t0 = System.nanoTime()
-        g2.write.format("noop").mode("overwrite").save()
+        graft.Bench.noopSink(g2)
         val sec = (System.nanoTime() - t0) / 1e9
         metrics += ("twolevel_graph_s" -> sec)
         val rec = knnRecallAt3(spark, s"$tDir/embeddings.parquet", g2,

@@ -8,7 +8,9 @@ package graft.tools
   * as Bench's `bench_sidecar.json` ({"metric":"isolated","queries":{…}})
   * so cross-round suspect triage reads one record per round
   * (`bench_isolated_r{N}.json`) instead of scraping TIMED lines out of
-  * commit messages.
+  * commit messages. A query that fails any run is left out of the map,
+  * listed under "failed", and makes the process exit non-zero, as in
+  * graft.Bench.
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
@@ -17,30 +19,27 @@ object TimeQueries {
       case Seq("--out", f, rest @ _*) => (Some(f), rest)
       case rest                       => (None, rest)
     }
-    val spark = ToolSession.create()
+    val spark = graft.GraftSession.local()
 
     val timed = names.map { name =>
-      // noop sink, not count(): executes the COMPLETE plan including the
-      // final orderBy/projection (count() lets Catalyst elide them) —
-      // same action BenchMedian times, so numbers compare
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warmup
-      val best = (1 to 2).map(_ => once()).min
-      println(f"TIMED $name%-28s $best%6.2f s")
+      // noop sink, the same action BenchMedian times, so numbers compare
+      def once() = graft.Bench.timeQuery(spark, sfDir, name)(
+        graft.Bench.noopSink)
+      val runs = Seq(once(), once(), once()) // warmup + best of 2
+      val best = if (runs.forall(_.isDefined)) Some(runs.tail.flatten.min) else None
+      best.foreach(b => println(f"TIMED $name%-28s $b%6.2f s"))
       name -> best
     }
+    val failed = timed.collect { case (k, None) => k }
     out.foreach { f =>
-      val qs = timed.map { case (k, v) => "\"" + k + "\":" + graft.Jfmt.num(v) }
+      val qs = timed.collect { case (k, Some(v)) => "\"" + k + "\":" + graft.Jfmt.num(v) }
         .mkString("{", ",", "}")
+      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       java.nio.file.Files.write(java.nio.file.Paths.get(f),
-        s"""{"metric":"isolated","unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+        s"""{"metric":"isolated","unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(2)
   }
 }

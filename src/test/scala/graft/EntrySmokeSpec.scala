@@ -2,6 +2,20 @@ package graft
 
 class EntrySmokeSpec extends SparkSpec {
 
+  test("GraftSession.local(n) is the engine's session recipe") {
+    // TestSpark is GraftSession.local(4): the session perfbench and every
+    // main run on, so these are the confs their numbers rest on
+    val conf = spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.sql("SELECT simhash64(array('a', 'b')) AS h").schema
+      .head.dataType == org.apache.spark.sql.types.LongType)
+  }
+
   test("entry flagship query returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -43,16 +43,20 @@ class ApproxSpec extends SparkSpec {
     // the r13 range-bucketed running count must stay bit-equal to
     // percentile() when the monotone bucket map degrades: all-equal
     // values (vmax = vmin), ±Infinity endpoints (NaN ratios), ranges
-    // whose width overflows to Inf, and tiny n with many empty buckets
-    val cases = Seq(
+    // whose width overflows to Inf, and tiny n with many empty buckets;
+    // the decimal cases take the map through decimal arithmetic (the
+    // production caller's l_extendedprice is decimal(12,2))
+    val doubles = Seq(
       Seq.fill(7)(3.25),                                     // one distinct value
       Seq(Double.NegativeInfinity, -1.0, 0.0, 2.5, 2.5),     // -Inf = vmin
       Seq(-4.0, 0.5, Double.PositiveInfinity),               // +Inf = vmax
       Seq(Double.NegativeInfinity, 1.0, Double.PositiveInfinity),
       Seq(-1.7e308, 0.0, 1.2e308, 1.2e308),                  // width overflows
       Seq(42.0))                                             // n = 1
-    for (vals <- cases) {
-      val df = vals.toDF("x")
+    val decimals = Seq(Seq.fill(7)("91234.56"), Seq("42.10"))
+      .map(_.toDF("x").select(col("x").cast("decimal(12,2)").as("x")))
+    for (df <- doubles.map(_.toDF("x")) ++ decimals) {
+      val vals = df.collect().map(_.get(0)).toSeq
       val want = df.agg(expr(
         "percentile(x, array(0.25D, 0.5D, 0.75D, 0.99D))").as("p"))
         .head().getSeq[Double](0)
@@ -60,6 +64,21 @@ class ApproxSpec extends SparkSpec {
         .head().getSeq[Double](0)
       assert(got == want, s"vals=$vals got=$got want=$want")
     }
+  }
+
+  test("exactPercentiles fails loudly on a value it cannot bucket") {
+    import org.apache.spark.sql.functions._
+    // with ANSI off a decimal overflow is null, not an error: vmax − vmin
+    // here exceeds decimal(38,0), so the top value has no bucket
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    import s.implicits._
+    val df = Seq("-9" + "0" * 37, "0", "9" + "0" * 37).toDF("x")
+      .select(col("x").cast("decimal(38,0)").as("x"))
+    val e = intercept[Exception] {
+      ScalarOps.exactPercentiles(df, "x", Seq(0.5)).collect()
+    }
+    assert(e.getMessage.contains("null bucket"), e.getMessage)
   }
 
   test("raw HLL estimate tracks exact count on a bigger column too") {

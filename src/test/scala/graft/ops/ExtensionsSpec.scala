@@ -1,34 +1,15 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.SparkSession
 
 /** The SQL surface of the native expressions must agree with the DataFrame
-  * helpers — same kernels, two registration paths.
+  * helpers — same kernels, two registration paths. The shared session is
+  * GraftSession's, which registers the extensions.
   */
 class ExtensionsSpec extends SparkSpec {
 
-  private lazy val ext: SparkSession = {
-    // Extensions only apply when a NEW SparkSession is constructed — an
-    // existing default session would be returned as-is by getOrCreate with
-    // withExtensions silently dropped. Clear the default (the SparkContext
-    // is reused), build the extended session, then restore the shared one
-    // so other suites are unaffected.
-    val shared = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(shared)
-    SparkSession.setActiveSession(shared)
-    s
-  }
-
   test("simhash64 / dot_d / minhash_shingled / word_ngrams callable from SQL") {
-    val rows = ext.sql(
+    val rows = spark.sql(
       """SELECT simhash64(array('a', 'b', 'c')) AS sh,
         |  dot_d(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp,
         |  size(minhash_shingled(array('x', 'y', 'z', 'w'), 2, 16)) AS mh,
@@ -38,14 +19,14 @@ class ExtensionsSpec extends SparkSpec {
     assert(rows.getSeq[String](3) == Seq("p q", "q r"))
     // same kernel as the DataFrame path
     import org.apache.spark.sql.functions._
-    val viaDf = ext.range(1)
+    val viaDf = spark.range(1)
       .select(graft.functions.SimHash64.simhash64(
         array(lit("a"), lit("b"), lit("c")))).head().getLong(0)
     assert(rows.getLong(0) == viaDf)
   }
 
   test("sql plan with native functions stays whole-stage-codegen") {
-    val df = ext.sql(
+    val df = spark.sql(
       "SELECT dot_d(array(id * 1.0d, 2.0d), array(3.0d, 4.0d)) AS d FROM range(100)")
     df.collect()
     assert(df.queryExecution.executedPlan.toString.contains("*("))
@@ -54,7 +35,7 @@ class ExtensionsSpec extends SparkSpec {
   test("normalize_nfc / word_rep_stats / block_rep_stats callable from SQL") {
     // Spark's chr() is ASCII-mod-256, so the decomposed sequence is a
     // Scala literal: 'e' + U+0301 combining acute
-    val r = ext.sql(
+    val r = spark.sql(
       s"""SELECT normalize_nfc('é') AS nfc,
          |  word_rep_stats(array('a', 'b', 'a')) AS w,
          |  block_rep_stats(split('a a a', ' ')) AS b""".stripMargin).head()
@@ -65,7 +46,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(b.getLong(0) == 1L && b.getString(4) == "a a" && b.getLong(5) == 2L)
     // same kernel as the DataFrame path
     import org.apache.spark.sql.functions._
-    val viaDf = ext.range(1)
+    val viaDf = spark.range(1)
       .select(graft.functions.TextStats.block_rep_stats(
         split(lit("a a a"), " ")).getField("top_gram")).head().getString(0)
     assert(b.getString(4) == viaDf)
@@ -73,7 +54,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("non-literal nHash is rejected with a clear error") {
     val e = intercept[Exception] {
-      ext.sql("SELECT minhash_sig(array('a'), cast(rand() * 4 as int))").collect()
+      spark.sql("SELECT minhash_sig(array('a'), cast(rand() * 4 as int))").collect()
     }
     assert(e.getMessage.toLowerCase.contains("literal"), e.getMessage)
   }

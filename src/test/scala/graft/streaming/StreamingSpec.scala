@@ -322,11 +322,18 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingOps.parseMemBytes("1024k") == 1L << 20)
     assert(StreamingOps.parseMemBytes("123") == 123L)
     val s2 = spark.newSession()
-    // both measured tiers stay on the in-memory provider at the local
-    // heap (the 30M-key run WON there, 19.1 s vs 134.5 s)
-    val small = StreamingOps.configureStateStore(s2, 30000000L)
+    // both measured tiers stay on the in-memory provider at the measured
+    // local corner (16 GiB, 1 executor: the 30M-key run WON there,
+    // 19.1 s vs 134.5 s)
+    val small = StreamingOps.configureStateStore(s2, 30000000L,
+      executors = Some(1), heapBytes = Some(16L << 30))
     assert(small.contains("HDFSBacked"))
     assert(s2.conf.get("spark.sql.streaming.stateStore.providerClass") == small)
+    // with no override the rule reads this JVM's heap
+    assert(StreamingOps.configureStateStore(s2, 30000000L) ==
+      StreamingOps.stateProviderFor(StreamingOps.effectiveStateBytes(
+        30000000L, StreamingOps.KeySetBytesPerKey, false), 1,
+        Runtime.getRuntime.maxMemory))
     // a cluster shape (100 × 4 GiB executors — static confs, so passed
     // as the explicit overrides) flips once the projected per-executor
     // share crosses the heap budget
@@ -352,5 +359,18 @@ class StreamingSpec extends SparkSpec {
       assert(StreamingOps.configureStateStore(s2, 10000000000L)
         .contains("HDFSBacked"))
     finally sys.props.remove("graft.state.store"): Unit
+  }
+
+  test("linkOrCopy copies the bytes where the filesystem refuses a hard link") {
+    import java.nio.file.FileSystemException
+    val dir = Files.createTempDirectory("graft-link")
+    val src = dir.resolve("seed.parquet")
+    val bytes = Array.tabulate[Byte](4096)(i => (i * 31).toByte)
+    Files.write(src, bytes)
+    val dst = dir.resolve("gen-init.parquet")
+    graft.ops.StreamingOps.linkOrCopy(dst, src,
+      (_, _) => throw new FileSystemException("no hard links here"))
+    assert(!Files.isSameFile(dst, src))
+    assert(Files.readAllBytes(dst).sameElements(bytes))
   }
 }
