@@ -3,6 +3,8 @@ package graft.dml
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
 
+import graft.ParquetFooters
+
 /** Delete-after-sync (SURVEY.md §2 K5-K7). On MySQL the reference deletes
   * in rate-limited batches of `LIMIT min(batch, remaining)` with
   * `batchMaxInterval`-second sleeps (source/mysql.go:134-172); other
@@ -95,11 +97,14 @@ object DeleteBack {
     * reads the table. */
   def deleteFromParquet(spark: SparkSession, path: String, where: String): Long = {
     recoverParquet(path): Unit
-    val df = spark.read.parquet(path)
-    val keep = df.where(not(coalesce(expr(where), lit(false))))
-    val deleted = df.count() - keep.count()
+    val keep = spark.read.parquet(path)
+      .where(not(coalesce(expr(where), lit(false))))
     val tmp = path + ".rewrite"
     keep.write.mode(SaveMode.Overwrite).parquet(tmp)
+    // rows deleted = footer rows before minus footer rows of the rewrite:
+    // the rewrite is the only scan, the counts are metadata reads
+    val deleted = ParquetFooters.rowCount(spark, path) -
+      ParquetFooters.rowCount(spark, tmp)
     val target = new java.io.File(path)
     val old = new java.io.File(path + ".old")
     if (!target.renameTo(old))

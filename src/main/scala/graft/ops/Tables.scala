@@ -36,35 +36,20 @@ object Tables {
     * the metadata probe a planner uses for path decisions (e.g.
     * pack_sequences' hybrid prefix sum). No Spark job: a `df.count()`
     * schedules a scan stage (~150 ms warm at sf0.1) where the footers
-    * already carry the answer; footer reads are planning-sized (one
-    * ~KB-range read per file), memoized per path keyed on the file
-    * listing (names + lengths + mtimes) so a rewrite invalidates.
-    * Listing recurses — hive-partitioned layouts nest data files under
-    * key=value dirs, and skipping them silently would undercount. */
+    * already carry the answer ([[graft.ParquetFooters]]); memoized per
+    * path keyed on the file listing (names + lengths + mtimes) so a
+    * rewrite invalidates. */
   def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
     val path = s"$dir/$name.parquet"
     val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    def list(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Seq.empty
-      else if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(list)
-      else Seq(st)
-    }
-    val files = list(fs.getFileStatus(p))
+    val files = graft.ParquetFooters.dataFiles(conf, path)
     val sig = files.map(f =>
         s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
-      .sorted.mkString("|")
+      .mkString("|")
     val cached = rowCountCache.get(path)
     if (cached != null && cached._1 == sig) cached._2
     else {
-      val n = files.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      val n = graft.ParquetFooters.rowCount(conf, files)
       rowCountCache.put(path, (sig, n))
       n
     }
@@ -73,20 +58,9 @@ object Tables {
   /** Total on-disk bytes of a table's data files, from the driver-side
     * listing alone (no footer reads, no Spark job) — the size probe for
     * planning gates where ROW count is the wrong proxy (a broadcast
-    * decision cares how big the data is, not how many rows it has).
-    * Same recursive listing discipline as [[parquetRowCount]]. */
-  def parquetBytes(spark: SparkSession, dir: String, name: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = p.getFileSystem(conf)
-    def list(st: org.apache.hadoop.fs.FileStatus): Long = {
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) 0L
-      else if (st.isDirectory) fs.listStatus(st.getPath).map(list).sum
-      else st.getLen
-    }
-    list(fs.getFileStatus(p))
-  }
+    * decision cares how big the data is, not how many rows it has). */
+  def parquetBytes(spark: SparkSession, dir: String, name: String): Long =
+    dataFiles(spark, dir, name).map(_.getLen).sum
 
   /** Spread a scan across the session's parallelism — CONDITIONALLY. The
     * fixtures are single-row-group parquet files, so Spark schedules the
@@ -199,22 +173,13 @@ object Tables {
       case _ => df
     }
   }
-  /** Sorted data-file listing of a table (same recursion/underscore rules
-    * as [[parquetRowCount]]), for planners that probe a bounded,
-    * region-covering SUBSET of files rather than the whole scan. */
+  /** Sorted data-file listing of a table ([[graft.ParquetFooters.dataFiles]]),
+    * for planners that probe a bounded, region-covering SUBSET of files
+    * rather than the whole scan. */
   def dataFiles(spark: SparkSession, dir: String,
-                name: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = p.getFileSystem(conf)
-    def list(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Seq.empty
-      else if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(list)
-      else Seq(st)
-    }
-    list(fs.getFileStatus(p)).sortBy(_.getPath.toString)
-  }
+                name: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    graft.ParquetFooters.dataFiles(spark.sessionState.newHadoopConf(),
+      s"$dir/$name.parquet")
 
   def documents(s: SparkSession, d: String): DataFrame  = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")

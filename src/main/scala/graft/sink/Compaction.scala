@@ -100,9 +100,8 @@ object Compaction {
     val total = parts.map(_.getLen).sum
     val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val tmp = tmpPath(targetDir)
-    // row count from the PRE-rewrite footers (metadata-weight count), not
-    // a second full scan of the rewritten data
-    val rows = spark.read.parquet(targetDir).count()
+    // row count from the PRE-rewrite footers: metadata reads, no scan job
+    val rows = graft.ParquetFooters.rowCount(spark, targetDir)
     spark.read.parquet(targetDir)
       .repartition(n).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     // RECREATE the tombstones in tmp (they are empty markers) and leave

@@ -3,7 +3,10 @@ package graft.sink
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+
+import graft.ParquetFooters
 
 /** The sink side of the pipeline (SURVEY.md §2 K1-K4): NDJSON staging,
   * schema-aligned bulk append, classified retry, and the idempotency gate.
@@ -35,9 +38,9 @@ import org.apache.spark.sql.types.StructType
   *   columns, exact types, ~5× smaller than NDJSON — at 100 TB the
   *   staging hop's bytes are the bottleneck); "orc" is the same full-
   *   fidelity columnar path for warehouses whose bulk loader prefers ORC.
-  * @param orderedCommitKey when set, each batch is range-sorted on this
-  *   column before commit and its files are renamed in ascending key
-  *   order — a crash mid-commit then leaves a key-PREFIX of the batch, so
+  * @param orderedCommitKey when set, each batch is sorted on this column
+  *   before commit and its files are renamed in ascending key order — a
+  *   crash mid-commit then leaves a key-PREFIX of the batch, so
   *   `max(committed key)` remains a sound incremental watermark (see
   *   Archiver.runIncremental). */
 final class StagedLoader(spark: SparkSession, val targetDir: String,
@@ -78,7 +81,10 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
     * failure and assert the retry does not duplicate rows. */
   private[graft] var postLoadFailpoint: () => Unit = () => ()
 
-  /** Stage one batch as NDJSON and load it, returning rows loaded.
+  /** Stage one batch as NDJSON and load it, returning rows loaded. The
+    * source is read once (the stage write) and the stage once (the load
+    * write); an empty batch stages, loads and commits nothing
+    * (ingest_databend.go:78-80).
     *
     * Stage/load failures are classified [[Retry.RetryableIngestError]]
     * (the reference retries staged-load errors only,
@@ -87,7 +93,6 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
     * deterministic per-ingest prefix that a retry cleans up first — a
     * partial or even completed prior attempt never duplicates rows. */
   def ingest(batch: DataFrame, stagingDir: String): Long = {
-    if (batch.isEmpty) return 0L // empty-batch no-op (ingest_databend.go:78-80)
     try {
       // full-µs timestampFormat: Spark's json/csv default is MILLISECOND
       // precision, which silently truncates µs timestamps through the
@@ -149,10 +154,24 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
     *     files means the batch was committed and later compacted away —
     *     a replay is a no-op (without this, compaction would reopen the
     *     at-least-once window);
-    *  2. otherwise remove any `ingest-<id>-*` files a failed or replayed
-    *     prior attempt left, write the aligned batch to a private temp
-    *     dir, rename the parts in under the prefix, then write the
-    *     tombstone. Renames are the only mutation of the target. */
+    *  2. otherwise write the aligned batch to the private `.load-<id>` temp
+    *     dir — the stage's one read — and take the loaded row count from
+    *     that dir's parquet footers, before touching the target. A
+    *     zero-row batch drops the temp dir and returns 0: no target dir,
+    *     no tombstone;
+    *  3. invalidate the tombstones, remove any `ingest-<id>-*` files a
+    *     failed or replayed prior attempt left, rename the parts in under
+    *     the prefix, then write the tombstone. Renames are the only
+    *     mutation of the target.
+    *
+    * With `orderedCommitKey` set, a batch whose staged bytes fit in
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` is written
+    * as ONE file sorted on the key (`repartition(1)`: the parse stays
+    * parallel, no range-sample job). AQE's coalesce target never drops
+    * below that size, so it would merge a range shuffle of such a batch
+    * into that one file anyway. A larger batch is range-partitioned on
+    * the key, so its part files are ascending, non-overlapping key ranges
+    * in name order. */
   private def copyInto(stagingDir: String): Long = {
     ensureRecovered() // never recreate a target whose live data sits in .old
     val id = ingestId(stagingDir)
@@ -181,6 +200,14 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
         })
     if ((tfs.exists(done) || tfs.exists(doneLegacy)) && prefixFiles().isEmpty)
       return 0L
+    val tmp = new Path(targetDir.stripSuffix("/") + s".load-$id")
+    sorted(align(readStage(stagingDir)), stagingDir)
+      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val loaded = ParquetFooters.rowCount(spark, tmp.toString)
+    if (loaded == 0L) {
+      fsOf(tmp).delete(tmp, true)
+      return 0L
+    }
     // invalidate the tombstones BEFORE touching data files: a crash between
     // deleting the prefix files and re-committing must leave a state the
     // next replay redoes (no tombstone, no files), never one it skips
@@ -188,7 +215,24 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
     tfs.delete(done, false)
     tfs.delete(doneLegacy, false)
     prefixFiles().foreach(p => tfs.delete(p, true))
-    val raw = stagingFormat match {
+    tfs.mkdirs(targetPath)
+    // sorted part files are ascending key ranges in name order, so this
+    // loop commits in key order when orderedCommitKey is set
+    val parts = fsOf(tmp).listStatus(tmp).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+    parts.zipWithIndex.foreach { case (p, i) =>
+      val dest = new Path(targetPath, f"ingest-$id-$i%05d.parquet")
+      if (!tfs.rename(p, dest))
+        sys.error(s"commit rename failed: $p -> $dest")
+    }
+    tfs.create(done, true).close()
+    fsOf(tmp).delete(tmp, true)
+    loaded
+  }
+
+  private def readStage(stagingDir: String): DataFrame =
+    stagingFormat match {
       case "json" => spark.read.schema(stagingSchema)
         .option("timestampFormat", StagedLoader.MicrosTimestampFormat)
         .json(stagingDir)
@@ -206,26 +250,18 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
       case "parquet" => spark.read.parquet(stagingDir)
       case "orc"     => spark.read.orc(stagingDir)
     }
-    val aligned0 = align(raw)
-    val aligned = orderedCommitKey.fold(aligned0)(k =>
-      aligned0.repartitionByRange(col(k)).sortWithinPartitions(col(k)))
-    val tmp = new Path(targetDir.stripSuffix("/") + s".load-$id")
-    aligned.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    tfs.mkdirs(targetPath)
-    // range-partitioned part files are ascending key ranges in name order,
-    // so this loop commits in key order when orderedCommitKey is set
-    val parts = fsOf(tmp).listStatus(tmp).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val dest = new Path(targetPath, f"ingest-$id-$i%05d.parquet")
-      if (!tfs.rename(p, dest))
-        sys.error(s"commit rename failed: $p -> $dest")
+
+  /** The ordered-commit layout (see [[copyInto]]): one key-sorted file
+    * when the staged bytes fit AQE's smallest coalesced partition, else
+    * key ranges. */
+  private def sorted(aligned: DataFrame, stagingDir: String): DataFrame =
+    orderedCommitKey.fold(aligned) { k =>
+      val stagedBytes = ParquetFooters.dataFiles(hconf, stagingDir).map(_.getLen).sum
+      val oneFile = stagedBytes <=
+        spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      (if (oneFile) aligned.repartition(1) else aligned.repartitionByRange(col(k)))
+        .sortWithinPartitions(col(k))
     }
-    tfs.create(done, true).close()
-    fsOf(tmp).delete(tmp, true)
-    raw.count()
-  }
 
   /** Read NDJSON with the sink's types but tolerate missing fields. */
   private def stagingSchema: StructType =

@@ -22,8 +22,9 @@ trait TableSource {
   def listTables(db: String): Seq[String]
 
   /** `dbRegex@tableRegex` expansion (SURVEY.md §2 S8): unanchored match,
-    * like Go's regexp.MatchString. */
+    * like Go's regexp.MatchString. No patterns, no catalog query. */
   def expandDbTables(patterns: Seq[String]): Map[String, Seq[String]] = {
+    if (patterns.isEmpty) return Map.empty
     val dbs = listDatabases()
     patterns.flatMap { p =>
       val Array(dbRe, tblRe) = p.split("@", 2)
@@ -320,7 +321,7 @@ object FileTableSource {
 /** JDBC-backed source for a real deployment: catalog queries and planning
   * aggregates go through single-row JDBC reads; the data scan hands the
   * planner's predicate array to spark.read.jdbc — one predicate per Spark
-  * partition. (Not exercised in the sandbox: zero egress, no RDBMS.) */
+  * partition. */
 final class JdbcTableSource(spark: SparkSession, dialect: JdbcDialect,
     host: String, port: Int, user: String, pass: String, defaultDb: String)
     extends TableSource {

@@ -119,6 +119,19 @@ class ArchiveE2ESpec extends SparkSpec {
     assert(report.reconciliation.targetRows == 30) // 25 nations + 5 regions
   }
 
+  test("discovery without db@table patterns sends no catalog query") {
+    val srcDir = tmpDir()
+    val src = new graft.source.ParquetTableSource(spark, srcDir) {
+      override def listDatabases(): Seq[String] = sys.error("catalog queried")
+    }
+    assert(src.expandDbTables(Seq.empty) == Map.empty)
+    val cfg = ArchiverConfig(sourceDB = "db", sourceTable = "orders")
+    val archiver = new Archiver(spark, cfg, src,
+      new StagedLoader(spark, tmpDir() + "/t",
+        spark.read.parquet(s"$sf/orders.parquet").schema), tmpDir())
+    assert(archiver.discoverTables() == Seq("db" -> "orders"))
+  }
+
   test("delete-back removes archived rows from the source") {
     val srcDir = tmpDir(); val tgt = tmpDir() + "/t"
     copyFixture("supplier", srcDir)

@@ -1,12 +1,19 @@
 #!/usr/bin/env python3
-"""Render a per-stage cost table from a Spark event log.
+"""Render a per-stage cost table, or a per-job timeline, from a Spark event log.
 
 Usage: python3 tools/stage_profile.py <eventlog-file-or-dir> [topN]
+       python3 tools/stage_profile.py --jobs <eventlog-file-or-dir>
 
 For each completed stage: wall time (submission->completion), summed task
 time, shuffle read/write bytes, memory/disk spill, input bytes, and the
 stage's callsite name. Sorted by wall time descending. This is the
 measurement SCALE.md stage diagnoses cite (round-12 verdict ask #1).
+
+--jobs lists every job in submission order: job id, the gap since the
+previous job ended, its duration in ms, its task count and the call site of
+the SQL execution that ran it (the job's own call site outside SQL). Stage
+walls at 0.1 s resolution hide sub-second jobs; this view counts them, e.g.
+the jobs one archive run issues.
 """
 import json
 import os
@@ -21,45 +28,89 @@ def fmt_bytes(n):
     return f"{n:.1f}PB"
 
 
-def main():
-    path = sys.argv[1]
-    top = int(sys.argv[2]) if len(sys.argv) > 2 else 20
+def latest_log(path):
     if os.path.isdir(path):
         files = sorted(
             (os.path.join(path, f) for f in os.listdir(path)
              if not f.startswith(".")),
             key=os.path.getmtime)
         path = files[-1]
-    stages = {}
-    task_metrics = {}
+    return path
+
+
+def events(path):
     with open(path) as fh:
         for line in fh:
             try:
-                ev = json.loads(line)
+                yield json.loads(line)
             except json.JSONDecodeError:
                 continue
-            kind = ev.get("Event")
-            if kind == "SparkListenerStageCompleted":
-                info = ev["Stage Info"]
-                sid = (info["Stage ID"], info["Stage Attempt ID"])
-                stages[sid] = info
-            elif kind == "SparkListenerTaskEnd":
-                sid = (ev["Stage ID"], ev["Stage Attempt ID"])
-                m = ev.get("Task Metrics") or {}
-                agg = task_metrics.setdefault(sid, {
-                    "run": 0, "tasks": 0, "srb": 0, "swb": 0,
-                    "mem_spill": 0, "disk_spill": 0, "inp": 0})
-                agg["tasks"] += 1
-                agg["run"] += m.get("Executor Run Time", 0)
-                sr = m.get("Shuffle Read Metrics") or {}
-                agg["srb"] += (sr.get("Local Bytes Read", 0)
-                               + sr.get("Remote Bytes Read", 0))
-                sw = m.get("Shuffle Write Metrics") or {}
-                agg["swb"] += sw.get("Shuffle Bytes Written", 0)
-                agg["mem_spill"] += m.get("Memory Bytes Spilled", 0)
-                agg["disk_spill"] += m.get("Disk Bytes Spilled", 0)
-                inp = m.get("Input Metrics") or {}
-                agg["inp"] += inp.get("Bytes Read", 0)
+
+
+def jobs(path):
+    starts, ends, stage_job, tasks, sql_site = {}, {}, {}, {}, {}
+    for ev in events(path):
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart":
+            starts[ev["Job ID"]] = ev
+            for sid in ev.get("Stage IDs", []):
+                stage_job[sid] = ev["Job ID"]
+        elif kind == "SparkListenerJobEnd":
+            ends[ev["Job ID"]] = ev["Completion Time"]
+        elif kind == "SparkListenerTaskEnd":
+            job = stage_job.get(ev["Stage ID"])
+            if job is not None:
+                tasks[job] = tasks.get(job, 0) + 1
+        elif (kind or "").endswith("SparkListenerSQLExecutionStart"):
+            sql_site[str(ev["executionId"])] = ev.get("description", "")
+    print(f"{len(starts)} jobs")
+    print(f"{'job':>5} {'gap_ms':>7} {'ms':>7} {'tasks':>6}  call site")
+    prev_end = None
+    for job in sorted(starts, key=lambda j: (starts[j]["Submission Time"], j)):
+        ev = starts[job]
+        sub = ev["Submission Time"]
+        end = ends.get(job)
+        props = ev.get("Properties") or {}
+        site = sql_site.get(props.get("spark.sql.execution.id"),
+                            props.get("callSite.short", ""))
+        gap = "" if prev_end is None else f"{sub - prev_end:>7}"
+        dur = "" if end is None else f"{end - sub:>7}"
+        print(f"{job:>5} {gap:>7} {dur:>7} {tasks.get(job, 0):>6}  {site[:110]}")
+        if end is not None:
+            prev_end = max(end, prev_end or end)
+
+
+def main():
+    if sys.argv[1] == "--jobs":
+        jobs(latest_log(sys.argv[2]))
+        return
+    path = latest_log(sys.argv[1])
+    top = int(sys.argv[2]) if len(sys.argv) > 2 else 20
+    stages = {}
+    task_metrics = {}
+    for ev in events(path):
+        kind = ev.get("Event")
+        if kind == "SparkListenerStageCompleted":
+            info = ev["Stage Info"]
+            sid = (info["Stage ID"], info["Stage Attempt ID"])
+            stages[sid] = info
+        elif kind == "SparkListenerTaskEnd":
+            sid = (ev["Stage ID"], ev["Stage Attempt ID"])
+            m = ev.get("Task Metrics") or {}
+            agg = task_metrics.setdefault(sid, {
+                "run": 0, "tasks": 0, "srb": 0, "swb": 0,
+                "mem_spill": 0, "disk_spill": 0, "inp": 0})
+            agg["tasks"] += 1
+            agg["run"] += m.get("Executor Run Time", 0)
+            sr = m.get("Shuffle Read Metrics") or {}
+            agg["srb"] += (sr.get("Local Bytes Read", 0)
+                           + sr.get("Remote Bytes Read", 0))
+            sw = m.get("Shuffle Write Metrics") or {}
+            agg["swb"] += sw.get("Shuffle Bytes Written", 0)
+            agg["mem_spill"] += m.get("Memory Bytes Spilled", 0)
+            agg["disk_spill"] += m.get("Disk Bytes Spilled", 0)
+            inp = m.get("Input Metrics") or {}
+            agg["inp"] += inp.get("Bytes Read", 0)
 
     rows = []
     for sid, info in stages.items():
