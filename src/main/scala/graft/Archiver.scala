@@ -59,7 +59,7 @@ final class Archiver(spark: SparkSession, cfg: ArchiverConfig,
         src.count(db, t, cfg.sourceWhereCondition)
       }.sum
       val targetTotal = loader.targetCount(cfg.sourceWhereCondition)
-      val rc = Reconciler.reconcile(sourceTotal, targetTotal)
+      val rc = Reconciler.Result(sourceTotal, targetTotal)
 
       val deleted =
         if (rc.correct && cfg.deleteAfterSync)
@@ -142,7 +142,7 @@ final class Archiver(spark: SparkSession, cfg: ArchiverConfig,
       val sourceTotal = tables.map { case (db, t) =>
         src.count(db, t, cfg.sourceWhereCondition)
       }.sum
-      val rc = Reconciler.reconcile(sourceTotal,
+      val rc = Reconciler.Result(sourceTotal,
         loader.targetCount(cfg.sourceWhereCondition))
       RunReport(reports, rc, 0L, rec.snapshot)
     } finally MetricsRecorder.detach(spark, rec)

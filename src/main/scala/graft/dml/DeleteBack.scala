@@ -1,9 +1,11 @@
 package graft.dml
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
 
 import graft.ParquetFooters
+import graft.sink.Compaction
 
 /** Delete-after-sync (SURVEY.md §2 K5-K7). On MySQL the reference deletes
   * in rate-limited batches of `LIMIT min(batch, remaining)` with
@@ -56,30 +58,20 @@ object DeleteBack {
     } finally conn.close()
   }
 
-  /** Crash recovery for [[deleteFromParquet]]'s rename-aside swap — the
-    * same three states Compaction.recover repairs for the target:
-    *  - table missing + `.old` present → the crash hit between the two
-    *    renames: restore `.old` (the pre-delete data; the DELETE is
-    *    idempotent and is simply redone by the caller);
-    *  - table present + `.old` present → crash after the swap, before
-    *    cleanup: the `.old` copy is obsolete, drop it;
-    *  - stale `.rewrite` → never live, always safe to drop.
+  /** Crash recovery for [[deleteFromParquet]]'s rename-aside swap, through
+    * the active session's file system: the three states
+    * [[graft.sink.Compaction.recoverSwap]] repairs, with the rewrite in
+    * `.rewrite`. The DELETE is idempotent, so a restored `.old` is simply
+    * redone by the caller.
     * @return true when it repaired something */
-  def recoverParquet(path: String): Boolean = {
-    val target = new java.io.File(path)
-    val old = new java.io.File(path + ".old")
-    val tmp = new java.io.File(path + ".rewrite")
-    var repaired = false
-    if (old.exists()) {
-      if (!target.exists()) {
-        if (!old.renameTo(target))
-          sys.error(s"delete-back recovery failed: $old -> $target")
-      } else delete(old)
-      repaired = true
-    }
-    if (tmp.exists()) { delete(tmp); repaired = true }
-    repaired
-  }
+  def recoverParquet(path: String): Boolean =
+    Compaction.recoverSwap(fileSystem(SparkSession.active, path), path,
+      rewritePath(path))
+
+  private def rewritePath(path: String) = new Path(path.stripSuffix("/") + ".rewrite")
+
+  private def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Sandbox execution over a parquet "table": rewrite keeping every row
     * where the predicate is NOT TRUE. SQL DELETE removes only rows where
@@ -88,35 +80,23 @@ object DeleteBack {
     * `NOT coalesce(pred, false)`, not `NOT pred` (NOT NULL = NULL would
     * silently drop those rows). Returns rows deleted.
     *
-    * The swap is rename-ASIDE (table → `.old`, rewrite → table, drop
-    * `.old`), never delete-then-rename: the live table must not be
-    * deleted before its replacement is in place, or a crash in between
-    * loses the only copy (the failure chain Compaction's swap closes for
-    * the target, closed here for the source). [[recoverParquet]] runs
-    * first so an interrupted prior swap is repaired before the rewrite
-    * reads the table. */
+    * The swap is rename-ASIDE ([[graft.sink.Compaction.swapIn]]), never
+    * delete-then-rename: the live table must not be deleted before its
+    * replacement is in place, or a crash in between loses the only copy.
+    * Recovery (as in [[recoverParquet]]) runs first so an interrupted
+    * prior swap is repaired before the rewrite reads the table. */
   def deleteFromParquet(spark: SparkSession, path: String, where: String): Long = {
-    recoverParquet(path): Unit
+    val fs = fileSystem(spark, path)
+    val tmp = rewritePath(path)
+    Compaction.recoverSwap(fs, path, tmp): Unit
     val keep = spark.read.parquet(path)
       .where(not(coalesce(expr(where), lit(false))))
-    val tmp = path + ".rewrite"
-    keep.write.mode(SaveMode.Overwrite).parquet(tmp)
+    keep.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     // rows deleted = footer rows before minus footer rows of the rewrite:
     // the rewrite is the only scan, the counts are metadata reads
     val deleted = ParquetFooters.rowCount(spark, path) -
-      ParquetFooters.rowCount(spark, tmp)
-    val target = new java.io.File(path)
-    val old = new java.io.File(path + ".old")
-    if (!target.renameTo(old))
-      sys.error(s"rewrite swap failed: $path -> $old")
-    if (!new java.io.File(tmp).renameTo(target))
-      sys.error(s"rewrite rename failed for $path") // .old still holds the data
-    delete(old)
+      ParquetFooters.rowCount(spark, tmp.toString)
+    Compaction.swapIn(fs, path, tmp)
     deleted
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(delete)
-    f.delete(): Unit
   }
 }

@@ -11,42 +11,6 @@ import org.apache.spark.sql.functions._
 object AnalyticsOps {
   import Tables._
 
-  /** PageRank's static edge frame (distinct edges + out-degrees), cached
-    * once per (session, fixture): every power iteration joins against it,
-    * and uncached each iteration would re-run the lineitem scan + distinct
-    * + degree aggregation (the q33 lesson — materialize the static side of
-    * an iteration once). Memoized so bench/verify re-invocations reuse the
-    * cache instead of stacking copies. Eviction is two-tier: entries whose
-    * SparkContext has STOPPED are dropped on every access (covers a
-    * long-lived JVM cycling contexts), and the application-end listener
-    * clears a context's entries when it shuts down. Sessions cycled on one
-    * LIVE context stay retained until that context ends — their `.cache()`
-    * blocks are context-level and would be reusable anyway; the map entry
-    * itself is two references. */
-  private val prEdgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
-  private val evictorInstalled =
-    java.util.Collections.newSetFromMap(new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.SparkSession, java.lang.Boolean]())
-
-  private def installEvictor(s: org.apache.spark.sql.SparkSession): Unit = {
-    // access-time sweep: a stopped context cannot serve its cached frames
-    // (and holds no blocks to unpersist — stop() dropped the executors),
-    // so retaining its sessions would leak both map entries and sessions
-    prEdgeCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    evictorInstalled.removeIf(_.sparkContext.isStopped)
-    if (evictorInstalled.add(s)) {
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          prEdgeCache.keySet.removeIf(_._1 eq s)
-          evictorInstalled.remove(s): Unit
-        }
-      })
-    }
-  }
-
   val all: Seq[Q] = Seq(
 
     // Ordered conversion funnel view → click → purchase: stage k counts
@@ -161,15 +125,19 @@ object AnalyticsOps {
          |ORDER BY rank DESC, node LIMIT 20""".stripMargin
     }) { (s, d) =>
       val nodes = supplier(s, d).select(col("s_suppkey").as("node"))
-      AnalyticsOps.installEvictor(s)
-      val ew = AnalyticsOps.prEdgeCache.computeIfAbsent((s, d), { _ =>
+      // the static edge frame (distinct edges + out-degrees), cached once
+      // per (session, fixture): every power iteration joins against it,
+      // and uncached each iteration would re-run the lineitem scan +
+      // distinct + degree aggregation (the q33 lesson — materialize the
+      // static side of an iteration once)
+      val ew = Memo(s, "analytics.prEdges", d) {
         val edges = lineitem(s, d)
           .select(col("l_suppkey").as("src"),
                   ((col("l_partkey") % 50) + 1).as("dst"))
           .distinct()
         val odeg = edges.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
         edges.join(odeg, "src").cache()
-      })
+      }
       val nN = nodes.count().toDouble
       var ranks = nodes.withColumn("p", lit(1.0) / lit(nN))
       for (_ <- 1 to 3) {

@@ -326,7 +326,7 @@ object ArchiveOps {
 
     // ORC sink/source roundtrip — the second columnar interchange format a
     // warehouse-adjacent archiver meets (Hive-lineage lakes are ORC). The
-    // fixture is staged to ORC ONCE per process (TempDirs.memoStaged, like
+    // fixture is staged to ORC ONCE per session (Memo.staged, like
     // the streaming staging) and every execution reads the ORC relation,
     // so the verified path is write→read→aggregate, not parquet. Types
     // crossing the boundary: int64 keys, double prices (aggregated through
@@ -342,7 +342,7 @@ object ArchiveOps {
         |  CAST(max(l_orderkey) AS BIGINT) AS max_key
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) {
       (s, d) =>
-        val dir = TempDirs.memoStaged(s"orc-lineitem:$d", "graft-orc") { tmp =>
+        val dir = Memo.staged(s, s"orc-lineitem:$d", "graft-orc") { tmp =>
           Tables.lineitem(s, d).write.mode("overwrite").orc(tmp)
         }
         s.read.orc(dir)
@@ -373,7 +373,7 @@ object ArchiveOps {
         |  CAST(max(epoch_us(CAST(ts AS TIMESTAMP))) AS BIGINT) AS max_t
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) {
       (s, d) =>
-        val dir = TempDirs.memoStaged(s"xml-events:$d", "graft-xml") { tmp =>
+        val dir = Memo.staged(s, s"xml-events:$d", "graft-xml") { tmp =>
           Tables.events(s, d)
             .select(col("event_id"), col("event_type"),
               unix_micros(col("ts")).as("t_us"), col("value"))
@@ -413,7 +413,7 @@ object ArchiveOps {
         |  CAST(sum(n_chars) AS BIGINT) AS chars
         |FROM documents WHERE source = 'src7'
         |GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
-      val dir = TempDirs.memoStaged(s"part-docs:$d", "graft-part") { tmp =>
+      val dir = Memo.staged(s, s"part-docs:$d", "graft-part") { tmp =>
         Tables.documents(s, d).write.mode("overwrite")
           .partitionBy("source").parquet(tmp)
       }
@@ -607,10 +607,10 @@ object ArchiveOps {
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty_sum,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS price_sum
         |FROM evolved GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-      // generations staged ONCE per fixture (TempDirs.memoStaged) — the op
+      // generations staged ONCE per fixture (Memo.staged) — the op
       // under test is the mergeSchema READ; re-staging identical data per
       // bench pass would only accumulate /tmp copies
-      val root = TempDirs.memoStaged(s"schema-evo:$d", "graft-schema-evo") { r =>
+      val root = Memo.staged(s, s"schema-evo:$d", "graft-schema-evo") { r =>
         val li = lineitem(s, d)
         li.where(col("l_orderkey") % 2 === 0)
           .select(col("l_returnflag"), col("l_quantity"))

@@ -173,25 +173,25 @@ object StreamingOps {
     TempDirs.register(base.toString)
   }
 
-  /** Bounded streaming read of the events fixture. The file source wants a
-    * DIRECTORY, so the µs-converted events are materialized once per
-    * fixture into a temp dir (memoized per process via [[TempDirs]]) — the
-    * stand-in for the landing directory a live deployment tails. */
-  private val stagedSchema =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-
-  private def eventStream(s: SparkSession, d: String): DataFrame = {
-    val dir = TempDirs.memoStaged(s"stream-events:$d", "graft-stream-events") {
+  /** Bounded streaming read of the events fixture on `reader`. The file
+    * source wants a DIRECTORY, so the µs-converted events are materialized
+    * once per (base session `s`, fixture) into a temp dir — the stand-in
+    * for the landing directory a live deployment tails. `reader` is
+    * usually a per-query clone of `s` (see [[runToMemory]]); the memo is
+    * keyed on `s` so every clone reads the one staging. */
+  private def eventStream(s: SparkSession, d: String,
+      reader: SparkSession): DataFrame = {
+    val dir = Memo.staged(s, s"stream-events:$d", "graft-stream-events") {
       tmp => Tables.events(s, d).write.mode("overwrite").parquet(tmp)
     }
-    // schema memoized per staged dir: the batch-read probe re-lists files
-    // and re-reads footers (~50-100 ms), and the join queries open two
-    // streams over the same staging
-    val schema = stagedSchema.computeIfAbsent(dir,
-      dd => s.read.parquet(dd).schema)
-    s.readStream.schema(schema).parquet(dir)
+    reader.readStream.schema(stagedSchema(s, dir)).parquet(dir)
   }
+
+  /** Schema of a staged parquet dir, memoized: the batch-read probe
+    * re-lists files and re-reads footers (~50-100 ms), and the join
+    * queries open two streams over the same staging. */
+  private def stagedSchema(s: SparkSession, dir: String) =
+    Memo(s, "streaming.schema", dir)(s.read.parquet(dir).schema)
 
   /** Run a streaming frame to completion into a uniquely-named memory
     * sink and return the materialized result. The sink table is dropped
@@ -291,7 +291,7 @@ object StreamingOps {
         |  count(*) AS n
         |FROM events GROUP BY 1, 2 ORDER BY 1""".stripMargin) { (s, d) =>
       runToMemory(s, "complete", noDataBatch = false) { s2 =>
-        StreamingArchiver.windowedCounts(eventStream(s2, d), "ts", "2 hours")
+        StreamingArchiver.windowedCounts(eventStream(s, d, s2), "ts", "2 hours")
       }
         .select(unix_micros(col("win_start")).as("win_start_us"),
                 unix_micros(col("win_end")).as("win_end_us"), col("n"))
@@ -307,7 +307,7 @@ object StreamingOps {
       """SELECT event_type, count(*) AS n
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       runToMemory(s, "complete", noDataBatch = false) { s2 =>
-        val replayed = eventStream(s2, d).union(eventStream(s2, d))
+        val replayed = eventStream(s, d, s2).union(eventStream(s, d, s2))
         val deduped = StreamingArchiver.dedupStream(
           replayed, "ts", Seq("event_id"), "960 hours")
         deduped.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
@@ -333,7 +333,7 @@ object StreamingOps {
         // against the stream's session at start())
         val dim = Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment"))
-        eventStream(s2, d)
+        eventStream(s, d, s2)
           .join(broadcast(dim), col("user_id") === col("c_custkey"))
           .groupBy(col("c_mktsegment").as("segment"))
           .agg(count(lit(1)).as("n"),
@@ -362,7 +362,7 @@ object StreamingOps {
       // by the batch staging tests)
       val loader = new graft.sink.StagedLoader(s, tgt, schema,
         compression = "none")
-      val q = StreamingArchiver.archiveStream(eventStream(s, d), loader,
+      val q = StreamingArchiver.archiveStream(eventStream(s, d, s), loader,
         s"$root/staging", s"$root/checkpoint")
       try q.processAllAvailable() finally q.stop()
       s.read.schema(schema).parquet(tgt)
@@ -426,10 +426,10 @@ object StreamingOps {
         |       AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)) t
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       runToMemory(s, "append", noDataBatch = false) { s2 =>
-        val p = eventStream(s2, d).where(col("event_type") === "purchase")
+        val p = eventStream(s, d, s2).where(col("event_type") === "purchase")
           .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
           .withWatermark("p_ts", "4 hours")
-        val c = eventStream(s2, d).where(col("event_type") === "click")
+        val c = eventStream(s, d, s2).where(col("event_type") === "click")
           .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
                   col("event_id").as("c_id"))
           .withWatermark("c_ts", "4 hours")
@@ -487,10 +487,10 @@ object StreamingOps {
         |FROM (SELECT * FROM j UNION ALL SELECT * FROM unm) t
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       runToMemory(s, "append") { s2 =>
-        val p = eventStream(s2, d).where(col("event_type") === "purchase")
+        val p = eventStream(s, d, s2).where(col("event_type") === "purchase")
           .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
           .withWatermark("p_ts", "4 hours")
-        val c = eventStream(s2, d).where(col("event_type") === "click")
+        val c = eventStream(s, d, s2).where(col("event_type") === "click")
           .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
                   col("event_id").as("c_id"))
           .withWatermark("c_ts", "4 hours")
@@ -530,7 +530,7 @@ object StreamingOps {
         |ORDER BY user_id, session_start_us""".stripMargin) { (s, d) =>
       import s.implicits._
       runToMemory(s, "append", noDataBatch = false) { s2 =>
-        val events = eventStream(s2, d)
+        val events = eventStream(s, d, s2)
           .select(col("user_id"), col("ts"), col("event_type"))
           .as[StreamingArchiver.Event]
         StreamingArchiver.sessionize(events, 30 * 60 * 1000L).toDF()
@@ -578,14 +578,14 @@ object StreamingOps {
       // The change-log and the initial-load snapshot are deterministic
       // functions of the immutable fixture — the landing directory a live
       // CDC consumer tails and the full sync it starts from. Stage both
-      // ONCE per process (the eventStream memoStaged pattern); what this
+      // ONCE per session (the eventStream staging pattern); what this
       // query verifies and times is the MERGE PROTOCOL below (2
       // micro-batches, latest-wins reduce, full-outer upsert, generation
       // write + atomic repoint + retire, audit through the pointer),
       // which runs in full on every invocation. Re-writing identical
       // staging parquet per bench pass measured ~2 s of setup jobs, not
       // the operator.
-      val chDir = TempDirs.memoStaged(s"stream-cdc-changes:$d",
+      val chDir = Memo.staged(s, s"stream-cdc-changes:$d",
         "graft-stream-cdc-ch") { tmp =>
         base.where(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 14 =!= 0)
           .select(col("o_orderkey").as("key"), lit(1).as("seq"),
@@ -602,7 +602,7 @@ object StreamingOps {
               lit("I").as("op"), col("o_totalprice").as("price")))
           .coalesce(1).write.mode("append").parquet(tmp)
       }
-      val seedDir = TempDirs.memoStaged(s"stream-cdc-seed:$d",
+      val seedDir = Memo.staged(s, s"stream-cdc-seed:$d",
         "graft-stream-cdc-seed") { tmp =>
         base.select(col("o_orderkey").as("key"),
             col("o_totalprice").as("price"))
@@ -621,9 +621,7 @@ object StreamingOps {
         if (f.isFile) linkOrCopy(genInit.toPath.resolve(f.getName), f.toPath)
       }
       StreamingArchiver.publishSnapshot(s, snapRoot, "gen-init")
-      val schema = stagedSchema.computeIfAbsent(chDir,
-        dd => s.read.parquet(dd).schema)
-      val stream = s.readStream.schema(schema)
+      val stream = s.readStream.schema(stagedSchema(s, chDir))
         .option("maxFilesPerTrigger", 1).parquet(chDir)
       val q = StreamingArchiver.cdcMergeStream(stream,
         snapRoot, s"$root/ckpt")

@@ -19,41 +19,21 @@ object Tables {
   // files and re-read footers (~50-100 ms each); the suite reads the same
   // ten tables hundreds of times. DataFrames are immutable plans — reuse is
   // safe.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    cache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      { case (s, p) => s.read.parquet(p) })
-
-  // value = (listing signature, count): a rewritten/compacted table gets a
-  // fresh footer read instead of a stale memo. Listing is driver-cheap;
-  // only the footer reads are worth memoizing.
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    Memo(spark, "tables.read", path)(spark.read.parquet(path))
+  }
 
   /** Exact table row count from the parquet FOOTERS, read driver-side —
     * the metadata probe a planner uses for path decisions (e.g.
     * pack_sequences' hybrid prefix sum). No Spark job: a `df.count()`
     * schedules a scan stage (~150 ms warm at sf0.1) where the footers
     * already carry the answer ([[graft.ParquetFooters]]); memoized per
-    * path keyed on the file listing (names + lengths + mtimes) so a
+    * (session, path) under the file listing ([[Memo.signed]]) so a
     * rewrite invalidates. */
-  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val path = s"$dir/$name.parquet"
-    val conf = spark.sessionState.newHadoopConf()
-    val files = graft.ParquetFooters.dataFiles(conf, path)
-    val sig = files.map(f =>
-        s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
-      .mkString("|")
-    val cached = rowCountCache.get(path)
-    if (cached != null && cached._1 == sig) cached._2
-    else {
-      val n = graft.ParquetFooters.rowCount(conf, files)
-      rowCountCache.put(path, (sig, n))
-      n
-    }
-  }
+  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long =
+    Memo.signed(spark, "tables.rowCount", s"$dir/$name.parquet")(files =>
+      graft.ParquetFooters.rowCount(spark.sessionState.newHadoopConf(), files))
 
   /** Total on-disk bytes of a table's data files, from the driver-side
     * listing alone (no footer reads, no Spark job) — the size probe for
@@ -128,13 +108,9 @@ object Tables {
     }
   }
 
-  private val rddPartsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int), Int]()
-
   private def rddPartitionsMemo(s: SparkSession, df: DataFrame): Int =
-    rddPartsCache.computeIfAbsent(
-      (s, df.queryExecution.analyzed.semanticHash()),
-      _ => df.rdd.getNumPartitions)
+    Memo(s, "tables.rddPartitions", df.queryExecution.analyzed.semanticHash())(
+      df.rdd.getNumPartitions)
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

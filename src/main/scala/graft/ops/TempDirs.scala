@@ -2,7 +2,7 @@ package graft.ops
 
 /** Process-lifetime temp directories with recursive removal at JVM exit —
   * shared by every query that stages data on disk (streaming landing
-  * dirs, archive targets, schema-evolution generations), so there is ONE
+  * dirs, archive targets, [[Memo.staged]] directories), so there is ONE
   * registry and ONE shutdown hook to maintain.
   */
 object TempDirs {
@@ -24,33 +24,4 @@ object TempDirs {
 
   /** Register an existing path for exit-time removal; returns it. */
   def register(path: String): String = { dirs.put(path, path); path }
-
-  private val staged = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]()
-
-  /** Memoized staged directory per logical key: `write` runs once per JVM —
-    * repeated bench/verify invocations reuse the staged data instead of
-    * accumulating copies in /tmp. The directory is created and REGISTERED
-    * for exit-time removal before `write` runs, so a failed write (full
-    * disk, interrupted bench) cannot leak it; and the (possibly long)
-    * Spark write executes outside the registry's map lock — concurrent
-    * callers of the same key block on the future, not on a map bin. A
-    * failed write is un-memoized so the next caller can retry. */
-  def memoStaged(key: String, prefix: String)(write: String => Unit): String = {
-    val fut = new java.util.concurrent.CompletableFuture[String]()
-    val prev = staged.putIfAbsent(key, fut)
-    if (prev != null) return prev.join()
-    try {
-      val dir = register(
-        java.nio.file.Files.createTempDirectory(prefix).toString)
-      write(dir)
-      fut.complete(dir): Unit
-      dir
-    } catch {
-      case t: Throwable =>
-        staged.remove(key, fut)
-        fut.completeExceptionally(t): Unit
-        throw t
-    }
-  }
 }

@@ -88,15 +88,6 @@ object TextOps {
   /** Number of BPE merges learned/applied by bpe_encode (markers 'A'..). */
   private[graft] val BpeNMerges = 8
 
-  /** Learned-merge-list memo, keyed (session, fixture) like AnnOps'
-    * centroid memo: the list is deterministic over immutable fixtures and
-    * a production tokenizer trains ONCE and encodes many — composed
-    * consumers (bpe_encode, pack_sequences_bpe) should pay encode cost,
-    * not a re-rank per query. Planning-sized: `BpeNMerges` 2-char strings
-    * on the driver. */
-  private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[String]]()
-
   /** The learned BPE merge list: top-`BpeNMerges` adjacent character
     * pairs of the lowercase word corpus, ranked (count DESC, pair ASC) —
     * the first-iteration merge table of byte-pair training (the exact
@@ -106,10 +97,14 @@ object TextOps {
     * ENCODE machinery while staying recomputable inside a single DuckDB
     * oracle (a sequential re-count per merge cannot nest in one SQL
     * statement). Merge quality shifts which pairs collapse, never the
-    * encode semantics. */
+    * encode semantics. Memoized per (session, fixture): a production
+    * tokenizer trains ONCE and encodes many — composed consumers
+    * (bpe_encode, pack_sequences_bpe) should pay encode cost, not a
+    * re-rank per query. Planning-sized: `BpeNMerges` 2-char strings on
+    * the driver. */
   private[graft] def bpeMergeList(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[String] =
-    bpeMergeCache.computeIfAbsent((s, d), { case (s, d) =>
+    Memo(s, "text.bpeMerges", d) {
       Tables.fan(s, Tables.documents(s, d))
         .select(explode(graft.functions.Tokenize.alpha_runs(lower(col("text")))).as("wd"))
         .where(length(col("wd")) >= 2)
@@ -118,7 +113,7 @@ object TextOps {
         .groupBy(col("pair")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("pair")).limit(BpeNMerges)
         .collect().map(_.getString(0)).toSeq
-    })
+    }
 
   /** SQL expression encoding a lowercase word by applying the merge list
     * in rank order: merge i rewrites every non-overlapping occurrence of

@@ -172,40 +172,20 @@ object SplitPlanner {
     *   form via `TableSource.timestampLiteral`. */
   def timeWindows(key: String, unit: String, minStr: String, maxStr: String,
       quote: String => String = s => s"'$s'"): Try[Seq[String]] =
-    for {
-      minT <- parseTimeDynamic(minStr)
-      maxT <- parseTimeDynamic(maxStr)
-      width <- unitWidth(unit).map(Success(_)).getOrElse(Failure(new IllegalArgumentException(
-        s"invalid TimeSplitUnit: $unit, it should be 'minute', 'quarter', 'hour', or 'day'")))
-    } yield {
-      if (minT.isAfter(maxT)) Seq.empty
-      else {
-        val out = Seq.newBuilder[String]
-        var t = minT
-        var done = false
-        while (!done) {
-          if (t.isAfter(maxT) || t.isEqual(maxT)) {
-            out += s"($key >= ${quote(t.format(TimeFormat))} and $key <= ${quote(maxT.format(TimeFormat))})"
-            done = true
-          } else {
-            val next = t.plus(width)
-            out += s"($key >= ${quote(t.format(TimeFormat))} and $key < ${quote(next.format(TimeFormat))})"
-            t = next
-          }
-        }
-        out.result()
-      }
-    }
+    timeWindowBounds(unit, minStr, maxStr).map(_.map { case (t, end, closed) =>
+      s"($key >= ${quote(t.format(TimeFormat))} and $key ${if (closed) "<=" else "<"} " +
+        s"${quote(end.format(TimeFormat))})"
+    })
 
   /** Structured window bounds for DataFrame-side consumption: (start, end,
-    * closed) triples with the same stepping as `timeWindows`. */
+    * closed) triples — the stepping `timeWindows` renders. */
   def timeWindowBounds(unit: String, minStr: String, maxStr: String)
       : Try[Seq[(LocalDateTime, LocalDateTime, Boolean)]] =
     for {
       minT <- parseTimeDynamic(minStr)
       maxT <- parseTimeDynamic(maxStr)
-      width <- unitWidth(unit).map(Success(_)).getOrElse(Failure(
-        new IllegalArgumentException(s"invalid TimeSplitUnit: $unit")))
+      width <- unitWidth(unit).map(Success(_)).getOrElse(Failure(new IllegalArgumentException(
+        s"invalid TimeSplitUnit: $unit, it should be 'minute', 'quarter', 'hour', or 'day'")))
     } yield {
       if (minT.isAfter(maxT)) Seq.empty
       else {

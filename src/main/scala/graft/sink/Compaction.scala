@@ -37,31 +37,48 @@ object Compaction {
     new Path(targetDir.stripSuffix("/") + ".old")
 
   /** Crash recovery for the compaction swap. Idempotent; cheap (two
-    * existence probes) when there is nothing to do.
+    * existence probes) when there is nothing to do. See [[recoverSwap]].
+    * @return true when it repaired something */
+  def recover(spark: SparkSession, targetDir: String): Boolean =
+    recoverSwap(new Path(targetDir).getFileSystem(spark.sessionState.newHadoopConf()),
+      targetDir, tmpPath(targetDir))
+
+  /** Crash recovery for a rename-aside swap of `dir` with its rewrite
+    * `tmp` ([[swapIn]]) — three states:
     *
-    *  - target missing + `.old` present → the crash hit between the two
-    *    renames: restore `.old` as the live target (the rewrite in
-    *    `.compact`, if complete, is simply redone by the next compact()).
-    *  - target present + `.old` present → crash after the swap, before
+    *  - `dir` missing + `.old` present → the crash hit between the two
+    *    renames: restore `.old` as the live data (the rewrite in `tmp`, if
+    *    complete, is simply redone by the caller).
+    *  - `dir` present + `.old` present → crash after the swap, before
     *    cleanup: the `.old` copy is obsolete, delete it.
-    *  - stale `.compact` → always safe to delete (never live).
+    *  - stale `tmp` → always safe to delete (never live).
     *
     * @return true when it repaired something */
-  def recover(spark: SparkSession, targetDir: String): Boolean = {
-    val target = new Path(targetDir)
-    val fs: FileSystem = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val old = oldPath(targetDir)
-    val tmp = tmpPath(targetDir)
+  def recoverSwap(fs: FileSystem, dir: String, tmp: Path): Boolean = {
+    val target = new Path(dir)
+    val old = oldPath(dir)
     var repaired = false
     if (fs.exists(old)) {
       if (!fs.exists(target)) {
         if (!fs.rename(old, target))
-          sys.error(s"compaction recovery failed: $old -> $target")
+          sys.error(s"rename-aside recovery failed: $old -> $target")
       } else fs.delete(old, true)
       repaired = true
     }
     if (fs.exists(tmp)) { fs.delete(tmp, true); repaired = true }
     repaired
+  }
+
+  /** Swap the finished rewrite `tmp` in for `dir` by rename-aside (`dir` →
+    * `.old`, `tmp` → `dir`, delete `.old`): the live data is ALWAYS under
+    * `dir` or `.old` — never deleted before its replacement is in place. */
+  def swapIn(fs: FileSystem, dir: String, tmp: Path): Unit = {
+    val old = oldPath(dir)
+    if (!fs.rename(new Path(dir), old))
+      sys.error(s"rename-aside swap (aside) failed for $dir")
+    if (!fs.rename(tmp, new Path(dir)))
+      sys.error(s"rename-aside swap (in) failed for $dir") // .old still holds the data
+    fs.delete(old, true): Unit
   }
 
   /** Run [[compact]] only when the small-file problem is real: at least
@@ -111,14 +128,7 @@ object Compaction {
     tombstones.foreach { t =>
       fs.create(new Path(tmp, t.getName), true).close()
     }
-    // rename-aside swap: the live data is ALWAYS under target or .old —
-    // never deleted before its replacement is in place
-    val old = oldPath(targetDir)
-    if (!fs.rename(target, old))
-      sys.error(s"compaction swap (aside) failed for $targetDir")
-    if (!fs.rename(tmp, target))
-      sys.error(s"compaction swap (in) failed for $targetDir")
-    fs.delete(old, true)
+    swapIn(fs, targetDir, tmp)
     val after = fs.listStatus(target)
       .count(_.getPath.getName.endsWith(".parquet"))
     Report(parts.length, after, rows)

@@ -235,23 +235,17 @@ final class FileTableSource(spark: SparkSession, rootDir: String,
           col("value")).as(CorruptCol)): _*)
   }
 
-  // quarantine counts memoized per (table, file signature): the landing
-  // file is immutable between producer drops, so the corrupt-line count
-  // is a pure function of (path, length, mtime). Without the memo a run
-  // re-parses the entire drop once for reconciliation's count() and AGAIN
-  // for the quarantine audit — one full extra scan per table per run.
-  // count() below fills the memo as a side effect of the pass it already
-  // makes, so the audit read is usually free.
-  private val quarantineMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  private def fileSig(t: String): String = {
-    val f = new java.io.File(pathOf(t))
-    def walk(x: java.io.File): Seq[java.io.File] =
-      if (x.isDirectory) x.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
-      else Seq(x)
-    walk(f).map(x => s"${x.getPath}:${x.length}:${x.lastModified}").mkString("|")
-  }
+  // quarantine counts memoized per (landing drop, contract) under its file
+  // signature ([[graft.ops.Memo.signed]]): the landing file is immutable
+  // between producer drops, so the corrupt-line count is a pure function
+  // of its files. Without the memo a run re-parses the entire drop once
+  // for reconciliation's count() and AGAIN for the quarantine audit — one
+  // full extra scan per table per run. count() below fills the memo from
+  // the pass it already makes, so the audit read is usually free.
+  private def quarantineMemo(t: String, sc: org.apache.spark.sql.types.StructType)(
+      corrupt: => Long): Long =
+    graft.ops.Memo.signed(spark, "source.quarantined", pathOf(t), (format, sc))(
+      _ => corrupt)
 
   /** Valid-row count under `where` and the corrupt-line count, from ONE
     * parse of the landing drop. */
@@ -270,7 +264,7 @@ final class FileTableSource(spark: SparkSession, rootDir: String,
     dataSchemas.get(t) match {
       case Some(sc) =>
         val (valid, corrupt) = countBoth(t, sc, where)
-        quarantineMemo.put(t, (fileSig(t), corrupt))
+        quarantineMemo(t, sc)(corrupt): Unit
         valid
       case None => super.count(db, t, where)
     }
@@ -280,15 +274,8 @@ final class FileTableSource(spark: SparkSession, rootDir: String,
     * report. Zero on the inference path (no contract to violate). */
   override def quarantined(db: String, t: String): Long = dataSchemas.get(t) match {
     case Some(sc) =>
-      val sig = fileSig(t)
-      val cached = quarantineMemo.get(t)
-      if (cached != null && cached._1 == sig) cached._2
-      else {
-        val n = parsedWithAudit(t, sc)
-          .where(col(CorruptCol).isNotNull).count()
-        quarantineMemo.put(t, (sig, n))
-        n
-      }
+      quarantineMemo(t, sc)(
+        parsedWithAudit(t, sc).where(col(CorruptCol).isNotNull).count())
     case None => 0L
   }
 

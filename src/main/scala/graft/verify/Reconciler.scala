@@ -1,24 +1,12 @@
 package graft.verify
 
-import org.apache.spark.sql.DataFrame
-
 /** Source/target reconciliation (worker/worker.go:230-242; cmd/main.go:
-  * 102-110): count equality under the same predicate decides success. The
-  * anti-join localization is our flagged upgrade (SURVEY.md §7.5) — when
-  * counts disagree it names the missing keys instead of just failing.
+  * 102-110): count equality under the same predicate decides success.
+  * The row-level check is ArchiveOps' `a7_reconcile_rowlevel`.
   */
 object Reconciler {
 
   final case class Result(sourceRows: Long, targetRows: Long) {
     def correct: Boolean = sourceRows == targetRows
   }
-
-  def reconcile(sourceCount: Long, targetCount: Long): Result =
-    Result(sourceCount, targetCount)
-
-  /** Row-level localization: keys present in source but absent in target
-    * (left_anti keeps the build side small when keys are selective). */
-  def missingKeys(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame =
-    source.select(keys.head, keys.tail: _*)
-      .join(target.select(keys.head, keys.tail: _*), keys, "left_anti")
 }
