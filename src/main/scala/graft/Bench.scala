@@ -63,9 +63,11 @@ object Bench {
 
   /** Seconds from building contract query `name` to the end of `action`
     * on it, or None (with the error on stderr) when either throws — the
-    * one timer Bench, BenchMedian and TimeQueries share. */
+    * one timer Bench, BenchMedian and TimeQueries share. The query runs
+    * in its own [[graft.ops.Materialize.scoped]] scope, released after
+    * the timer stops. */
   def timeQuery(spark: SparkSession, sfDir: String, name: String)(
-      action: DataFrame => Unit): Option[Double] = {
+      action: DataFrame => Unit): Option[Double] = graft.ops.Materialize.scoped {
     val t0 = System.nanoTime()
     try {
       action(SparkEntry.queries(name)(spark, sfDir))

@@ -2,11 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorOps.dot_d
+import graft.ops.Materialize
 
 /** Centroid-cell angular index with EXACT pruning bounds — the shared
-  * machinery behind `dedup_embedding_cosine` and `ann_range_exact`.
+  * machinery behind `dedup_embedding_cosine`, `dedup_semantic` and the
+  * `ann_range_*` queries.
   *
   * Every vector is assigned to its nearest centroid (map-side argmax over
   * the broadcast centroid set — the K candidate rows collapse in partial
@@ -32,10 +35,12 @@ object AngularCells {
 
   /** Nearest-centroid assignment: `e` = (vec_id, v, nrm), `cents` =
     * (cid, cv, cnrm) → (vec_id, cell, v, nrm, theta), eagerly
-    * checkpointed (the radii action and every candidate join scan it —
+    * materialized (the radii action and every candidate join scan it —
     * without the materialization the K-way argmax recomputes per
-    * consumer). */
-  def assign(e: DataFrame, cents: DataFrame): DataFrame =
+    * consumer). Argmax ties go to the lower centroid id. Serialized
+    * blocks (MEMORY_AND_DISK_SER) because the artifact carries the
+    * vectors. */
+  def assign(e: DataFrame, cents: DataFrame): DataFrame = Materialize(
     e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("v"), col("nrm"), col("cid"),
         (dot_d(col("v"), col("cv")) / (col("nrm") * col("cnrm"))).as("cos"))
@@ -45,8 +50,8 @@ object AngularCells {
       .select(col("vec_id"), col("best.cid").as("cell"),
               col("best.v").as("v"), col("best.nrm").as("nrm"),
         acos(least(lit(1.0), greatest(lit(-1.0), col("best.cos"))))
-          .as("theta"))
-      .localCheckpoint(true)
+          .as("theta")),
+    eager = true, StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Per-cell angular radius r(c) = max angle(v, c) — a K-row aggregate,
     * collected driver-side for the compatibility computation. */

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Connected components over a near-dup pair graph → (id, comp) with
   * comp = min doc id of the component (the canonical representative).
   *
@@ -19,8 +21,14 @@ import org.apache.spark.sql.functions._
   *   rounds — independent of component DIAMETER, unlike plain min-label
   *   propagation, which needs diameter-many rounds and dies on long
   *   chains (exactly the shape near-dup graphs take when doc A ~ B ~ C
-  *   without A ~ C). Each round localCheckpoints (lineage truncation) and
+  *   without A ~ C). Each round is materialized (lineage truncation) and
   *   converges on a deterministic (count, hash-sum) edge checksum.
+  *
+  * Memory: each materialized frame is released as soon as its consumer
+  * has materialized: the pairs once the edges are, the edges once the
+  * union-find collect or the first round has read them, and each round
+  * once the next round's checksum has filled it. At most two rounds are
+  * live; the result holds only the last.
   */
 object DedupClustering {
 
@@ -32,15 +40,16 @@ object DedupClustering {
     import spark.implicits._
     // materialize the (possibly expensive) pair computation ONCE before the
     // symmetrizing union references it twice
-    val p = pairs.select(col("d1").cast("long").as("d1"),
-      col("d2").cast("long").as("d2")).localCheckpoint(true)
+    val p = Materialize(pairs.select(col("d1").cast("long").as("d1"),
+      col("d2").cast("long").as("d2")), eager = true)
     // LAZY checkpoint: the edges.count() below materializes it in the same
     // job — an eager checkpoint would run one extra job for the same rows
-    val edges = p.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(p.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(false)
+    val edges = Materialize(p.select(col("d1").as("src"), col("d2").as("dst"))
+      .union(p.select(col("d2").as("src"), col("d1").as("dst"))), eager = false)
+    val nEdges = edges.count()
+    Materialize.release(p)
 
-    if (edges.count() <= smallGraphThreshold) {
+    if (nEdges <= smallGraphThreshold) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -49,8 +58,10 @@ object DedupClustering {
         while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
         r
       }
+      val es = edges.as[(Long, Long)].collect()
+      Materialize.release(edges)
       // union by min root: the root is always the component's min id
-      edges.as[(Long, Long)].collect().foreach { case (a, b) =>
+      es.foreach { case (a, b) =>
         parent.getOrElseUpdate(a, a)
         parent.getOrElseUpdate(b, b)
         val ra = find(a); val rb = find(b)
@@ -115,14 +126,17 @@ object DedupClustering {
       // (contract + checksum) instead of two — at fixture scale the
       // per-round job floor is most of this operator's wall, and at data
       // scale one materialization of the same rows replaces two
-      var cur = edges.where(col("src") =!= col("dst")).distinct()
-        .localCheckpoint(false)
+      var cur = Materialize(
+        edges.where(col("src") =!= col("dst")).distinct(), eager = false)
       var prev = (-1L, "", "")
       var sig = checksum(cur)
+      Materialize.release(edges)
       while (sig != prev) {
-        cur = smallStar(largeStar(cur)).localCheckpoint(false)
+        val next = Materialize(smallStar(largeStar(cur)), eager = false)
         prev = sig
-        sig = checksum(cur)
+        sig = checksum(next)
+        Materialize.release(cur)
+        cur = next
       }
       // fixpoint = forest of stars oriented (child > root): child labels
       // come straight off the edges, roots label themselves

@@ -46,6 +46,42 @@ object AnnOps {
     Tables.fan(s, embeddings(s, d)).select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> cast(x as double))").as("v"))
 
+  /** (vec_id, v: array<double>, nrm = ‖v‖): the input of the cosine
+    * queries over [[graft.operators.AngularCells]]. */
+  private[ops] def cosineVecs(s: SparkSession, d: String): DataFrame =
+    Tables.fan(s, embeddings(s, d)).select(col("vec_id"),
+        expr("transform(embedding, x -> cast(x as double))").as("v"))
+      .withColumn("nrm", sqrt(dot_d(col("v"), col("v"))))
+
+  /** Exact cosine range search, cos ≥ 0.35 for the probes vec_id < 4,
+    * over an AngularCells index on the centroids `cvecs` (cid, cv, ‖cv‖):
+    * probes × K driver-side bound check → the broadcast probe-cell list,
+    * then one equi-join of the assignment on the cell key. */
+  private def rangeViaCells(s: SparkSession, e: DataFrame,
+      cvecs: Seq[(Long, Array[Double], Double)]): DataFrame = {
+    import graft.operators.AngularCells
+    import s.implicits._
+    val asg = AngularCells.assign(e, cvecs
+      .map { case (cid, cv, n) => (cid, cv.toSeq, n) }.toDF("cid", "cv", "cnrm"))
+    val radii = AngularCells.radii(asg)
+    val probes = AngularCells.collectVecs(
+      e.where(col("vec_id") < 4).select(col("vec_id"), col("v"), col("nrm")))
+    val tau = math.acos(0.35)
+    val probeCells = for {
+      (qid, pv, pn) <- probes.toSeq
+      (cid, cv, cn) <- cvecs if radii.contains(cid)
+      if AngularCells.angle(pv, pn, cv, cn) <=
+        tau + radii(cid) + AngularCells.slack
+    } yield (qid, cid, pv, pn)
+    val pc = probeCells.toDF("query_id", "cell", "pv", "pnrm")
+    asg.join(broadcast(pc), Seq("cell"))
+      .where(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        (dot_d(col("pv"), col("v")) / (col("pnrm") * col("nrm"))).as("cos"))
+      .where(col("cos") >= 0.35)
+      .orderBy(col("query_id"), col("vec_id"))
+  }
+
   val all: Seq[Q] = Seq(
 
     Q("ann_bruteforce_topk",
@@ -139,34 +175,9 @@ object AnnOps {
         |WHERE list_reduce(list_transform(list_zip(p.pv, e.v), x -> x[1] * x[2]),
         |              (a, b) -> a + b) / (p.pnrm * e.nrm) >= 0.35
         |ORDER BY query_id, vec_id""".stripMargin) { (s, d) =>
-      import graft.operators.AngularCells
-      import s.implicits._
-      val e = Tables.fan(s, embeddings(s, d)).select(col("vec_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("v"))
-        .withColumn("nrm", sqrt(dot_d(col("v"), col("v"))))
-      val cents = e.where(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("v").as("cv"),
-                col("nrm").as("cnrm"))
-      val asg = AngularCells.assign(e, cents)
-      val radii = AngularCells.radii(asg)
-      val cvecs = AngularCells.collectVecs(cents)
-      val probes = AngularCells.collectVecs(
-        e.where(col("vec_id") < 4).select(col("vec_id"), col("v"), col("nrm")))
-      val tau = math.acos(0.35)
-      // probes × K driver-side bound check → the broadcast probe-cell list
-      val probeCells = for {
-        (qid, pv, pn) <- probes.toSeq
-        (cid, cv, cn) <- cvecs.toSeq if radii.contains(cid)
-        if AngularCells.angle(pv, pn, cv, cn) <=
-          tau + radii(cid) + AngularCells.slack
-      } yield (qid, cid, pv, pn)
-      val pc = probeCells.toDF("query_id", "cell", "pv", "pnrm")
-      asg.join(broadcast(pc), Seq("cell"))
-        .where(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (dot_d(col("pv"), col("v")) / (col("pnrm") * col("nrm"))).as("cos"))
-        .where(col("cos") >= 0.35)
-        .orderBy(col("query_id"), col("vec_id"))
+      val e = cosineVecs(s, d)
+      rangeViaCells(s, e, graft.operators.AngularCells.collectVecs(
+        e.where(col("vec_id") < 8)).toSeq)
     },
 
     // The TRAINED-CENTROID composition: the same exact range search, but
@@ -194,35 +205,9 @@ object AnnOps {
         |WHERE list_reduce(list_transform(list_zip(p.pv, e.v), x -> x[1] * x[2]),
         |              (a, b) -> a + b) / (p.pnrm * e.nrm) >= 0.35
         |ORDER BY query_id, vec_id""".stripMargin) { (s, d) =>
-      import graft.operators.AngularCells
-      import s.implicits._
-      val e = Tables.fan(s, embeddings(s, d)).select(col("vec_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("v"))
-        .withColumn("nrm", sqrt(dot_d(col("v"), col("v"))))
-      val trained = trainedCentroids(s, d)
-      val cvecs = trained.map { case (cid, cv) =>
-        (cid, cv, math.sqrt(cv.map(x => x * x).sum))
-      }
-      val cents = cvecs.map { case (cid, cv, n) => (cid, cv.toSeq, n) }
-        .toDF("cid", "cv", "cnrm")
-      val asg = AngularCells.assign(e, cents)
-      val radii = AngularCells.radii(asg)
-      val probes = AngularCells.collectVecs(
-        e.where(col("vec_id") < 4).select(col("vec_id"), col("v"), col("nrm")))
-      val tau = math.acos(0.35)
-      val probeCells = for {
-        (qid, pv, pn) <- probes.toSeq
-        (cid, cv, cn) <- cvecs if radii.contains(cid)
-        if AngularCells.angle(pv, pn, cv, cn) <=
-          tau + radii(cid) + AngularCells.slack
-      } yield (qid, cid, pv, pn)
-      val pc = probeCells.toDF("query_id", "cell", "pv", "pnrm")
-      asg.join(broadcast(pc), Seq("cell"))
-        .where(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (dot_d(col("pv"), col("v")) / (col("pnrm") * col("nrm"))).as("cos"))
-        .where(col("cos") >= 0.35)
-        .orderBy(col("query_id"), col("vec_id"))
+      rangeViaCells(s, cosineVecs(s, d), trainedCentroids(s, d).map {
+        case (cid, cv) => (cid, cv, math.sqrt(cv.map(x => x * x).sum))
+      })
     },
 
     // LSH path: signature = 16 sign-bits of hyperplane projections; bucket
@@ -443,14 +428,15 @@ object AnnOps {
       // memoized per (session, fixture, query): every pipeline is
       // deterministic, and each also runs as its own contract query in the
       // same session — an eval job reads the already-materialized top-k
-      // outputs, it does not recompute five index builds
+      // outputs, it does not recompute five index builds. Only the
+      // collected sets are kept: the query's own frames go with its scope
       def topSets(name: String): Map[Long, Set[Long]] =
-        Memo(s, "ann.topk", (d, name)) {
+        Memo(s, "ann.topk", (d, name))(Materialize.scoped {
           graft.SparkEntry.queries(name)(s, d)
             .select(col("query_id"), col("neighbor_id")).collect()
             .groupBy(_.getLong(0))
             .view.mapValues(_.map(_.getLong(1)).toSet).toMap
-        }
+        })
       val exact = topSets("ann_bruteforce_topk")
       def meanRecall(m: Map[Long, Set[Long]]): Double =
         exact.map { case (q, ex) =>
@@ -639,7 +625,7 @@ object AnnOps {
         // relation is 2 narrow rows/vector, so checkpoint it once (the
         // multi-consumer rule); fixture-gated branch, so no scale-tier
         // memory profile changes
-        val ranked = e.select(col("vec_id"), col("v"))
+        val ranked = Materialize(e.select(col("vec_id"), col("v"))
           .crossJoin(broadcast(cents))
           .select(col("vec_id"), col("cid"),
             cosine(col("v"), col("cv")).as("cs"))
@@ -647,8 +633,7 @@ object AnnOps {
             org.apache.spark.sql.expressions.Window.partitionBy(col("vec_id"))
               .orderBy(col("cs").desc, col("cid").desc)))
           .where(col("rn") <= math.max(nprobe, 1))
-          .select(col("vec_id"), col("cid"), col("rn"))
-          .localCheckpoint(true)
+          .select(col("vec_id"), col("cid"), col("rn")), eager = true)
         val assigned = ranked.where(col("rn") === 1)
           .select(col("vec_id"), col("cid").as("cell"))
           .join(e, Seq("vec_id"))
@@ -959,17 +944,17 @@ object AnnOps {
     * update either way; an emptied cell keeps its previous centroid. */
   private[graft] def trainKmeansOn(s: SparkSession, e: DataFrame,
       nRows: Long, kCells: Int, iters: Int,
-      l2Metric: Boolean): Array[(Long, Array[Double])] = {
+      l2Metric: Boolean): Array[(Long, Array[Double])] = Materialize.scoped {
       val m = math.max(1L, nRows / (50L * kCells))
       // corpus-narrow (≤ ~50·K rows) and consumed 1 + iters times — the
       // packedBins rule says materialize once, not rescan per iteration.
       // LAZY: the seed collect() right below is the materializing action
       // (TakeOrdered runs every partition), so the eager flavor's extra
-      // job bought nothing
-      val sample = e
+      // job bought nothing. Released when training returns: only the
+      // collected centroids leave this scope
+      val sample = Materialize(e
         .where(pmod(xxhash64(col("vec_id")), lit(m)) === lit(0L))
-        .select(col("vec_id"), col("v"))
-        .localCheckpoint(false)
+        .select(col("vec_id"), col("v")), eager = false)
       // seeds: the K hash-smallest sample vectors — pseudorandom spread
       // over the corpus, deterministic, no data-order dependence
       var cents: Array[(Long, Array[Double])] = sample
@@ -1308,14 +1293,13 @@ object AnnOps {
     // down — a plain action, still strictly before the pair stage, so a
     // bad corpus fails in the probe, and the eager flavor's dedicated
     // materialization job is gone.
-    val cellsNarrow = assigned
+    val cellsNarrow = Materialize(assigned
       .withColumn("vec_id",
         when(assert_true(
             col("vec_id") >= 0L && col("vec_id") < lit(1L << idBits),
             concat(lit(s"vec_id outside the $idBits-bit knn id pack: "),
               col("vec_id").cast("string"))).isNull,
-          col("vec_id")))
-      .localCheckpoint(false)
+          col("vec_id"))), eager = false)
     // Two-stage defense against hot cells, decided by one planning
     // probe (per-cell counts + a max over the narrow checkpoint —
     // never a recompute of the assignment); under the thresholds
@@ -1358,12 +1342,11 @@ object AnnOps {
         val mods = broadcast(counts0.where(col("cw") > sampleEngage)
           .select(col("cell"),
             ivfSampleModulusCol("cw", sampleTarget).as("m")))
-        val thinned = cellsNarrow.join(mods, Seq("cell"), "left_outer")
+        // narrow (16 B/row): feeds recount + join; LAZY — the recount's
+        // head() below materializes it in the same job
+        val thinned = Materialize(cellsNarrow.join(mods, Seq("cell"), "left_outer")
           .where(col("m").isNull || ivfSampleKeep(col("vec_id"), col("m")))
-          .drop("m")
-          // narrow (16 B/row): feeds recount + join; LAZY — the recount's
-          // head() below materializes it in the same job
-          .localCheckpoint(false)
+          .drop("m"), eager = false)
         val c2 = thinned.groupBy(col("cell")).agg(count(lit(1)).as("cw"))
         (thinned, c2, c2.agg(max(col("cw"))).head.getLong(0))
       }

@@ -135,7 +135,7 @@ object CurationOps {
     val flagCols =
       Seq(col("doc_id"), col("source"), col("keep_q"), col("keep_d")) ++
         (if (carryChars) Seq(col("nc")) else Nil)
-    val flags = scored
+    val flags = Materialize(scored
       .select(Seq(col("doc_id"), col("source"),
         (col("z") >= 0.5).as("keep_q")) ++
         (if (carryChars) Seq(length(col("text")).cast("long").as("nc"))
@@ -145,8 +145,7 @@ object CurationOps {
             Seq("doc_id"), "left")
       .withColumn("keep_d", col("keep_q") &&
         (col("canonical").isNull || col("canonical") === col("doc_id")))
-      .select(flagCols: _*)
-      .localCheckpoint(true)
+      .select(flagCols: _*), eager = true)
 
     // ---- stage C: temperature mix (τ=0.5) over dedup survivors ----
     // rate_s = sqrt(n_min / n_s); domain-grained counts → broadcast.
@@ -213,7 +212,7 @@ object CurationOps {
       // anyway) and every downstream pass reads the artifact.
       //
       // Storage level matters because this artifact carries TEXT: the
-      // default localCheckpoint level holds deserialized row objects,
+      // default checkpoint level holds deserialized row objects,
       // and at the 13M-doc tier 32 concurrently-unrolling tasks
       // exhausted a 16g heap before any partition could spill (measured
       // OOM in MemoryStore.putIteratorAsValues). Serialized blocks are
@@ -228,9 +227,9 @@ object CurationOps {
       // artifact. Boundary, storage level, and the 13M-tier
       // SER-unrolling rationale are unchanged.
       runPipeline(
-        DedupOps.paragraphRewrittenDocs(Tables.fan(s, documents(s, d)))
-          .localCheckpoint(false,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
+        Materialize(
+          DedupOps.paragraphRewrittenDocs(Tables.fan(s, documents(s, d))),
+          eager = false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
         carryChars = true)
     },
   )

@@ -350,9 +350,9 @@ object DedupOps {
     * never enter an exchange. Without the prune, both join-backs shuffled
     * every document's shingles (measured ~120 s of dedup_minhash_lsh's
     * 455 s at the 1.3M-doc tier). The candidate subtree is referenced
-    * three times (two id lanes + the pair join) — materialized once via
-    * localCheckpoint below, which also prices the id set so the prune
-    * semi-join can broadcast at plan time (see the in-body note). */
+    * three times (two id lanes + the pair join) — materialized once
+    * below, which also prices the id set so the prune semi-join can
+    * broadcast at plan time (see the in-body note). */
   /** Pair count up to which the candidate id set broadcasts to the
     * shingle semi-join (ids ≤ 2×pairs; 2²³ pairs ⇒ ≤16M ids ≈ a ~256 MB
     * hashed relation — comfortable for the 48g driver and any executor
@@ -365,8 +365,8 @@ object DedupOps {
       broadcastMaxPairs: Long = VerifyBroadcastMaxPairs): DataFrame = {
     // The pair relation is vanishing-fraction-sized but its lineage is
     // the entire candidate index build, and it is consumed three times
-    // below (two id lanes + the pair join): localCheckpoint materializes
-    // it once (the r11 multi-consumer rule) and releases the upstream
+    // below (two id lanes + the pair join): it is materialized once
+    // (the r11 multi-consumer rule) and releases the upstream
     // index exchange for cleanup mid-query. Decisive at the 100M tier:
     // the id-set semi-join must broadcast AT PLAN TIME — AQE's runtime
     // demotion decides only after materializing both sides, so the
@@ -379,7 +379,7 @@ object DedupOps {
     // action (one job computes + caches + counts, where eager paid a
     // materialization job AND a count job over the same rows); the
     // count is a plain action, so no broadcast-timeout exposure
-    val c = cands.select(col("d1"), col("d2")).localCheckpoint(false)
+    val c = Materialize(cands.select(col("d1"), col("d2")), eager = false)
     val nPairs = c.count()
     val ids0 = c.select(col("d1").as("doc_id"))
       .union(c.select(col("d2").as("doc_id"))).distinct()
@@ -793,7 +793,7 @@ object DedupOps {
     // scoring runs through the native dot_d expression, norms are
     // precomputed once per vector.
     Q("dedup_embedding_cosine", cosinePairsSql) { (s, d) =>
-      val e = cosineVecs(s, d)
+      val e = AnnOps.cosineVecs(s, d)
       // stand-in centroids (vec_id < 8), same convention as dedup_semantic;
       // at scale these come from kmeans_train and are literal arrays
       val cents = e.where(col("vec_id") < 8)
@@ -817,7 +817,7 @@ object DedupOps {
         .map { case (cid, cv) =>
           (cid, cv.toSeq, math.sqrt(cv.map(x => x * x).sum)) }
         .toDF("cid", "cv", "cnrm")
-      cosinePairsViaCells(s, cosineVecs(s, d), cents)
+      cosinePairsViaCells(s, AnnOps.cosineVecs(s, d), cents)
     },
 
     // Semantic dedup (SemDeDup-style): assign every embedding to its
@@ -857,31 +857,16 @@ object DedupOps {
         |FROM asg LEFT JOIN pr ON asg.vec_id = pr.vec_id
         |GROUP BY asg.cid ORDER BY cluster_id""".stripMargin) { (s, d) =>
       import graft.functions.VectorOps.dot_d
-      val e = Tables.fan(s, embeddings(s, d)).select(col("vec_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("v"))
-        .withColumn("nrm", sqrt(dot_d(col("v"), col("v"))))
+      val e = AnnOps.cosineVecs(s, d)
       val cents = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-      // nearest centroid: map-side argmax over the broadcast centroid set —
-      // the K candidate rows per vector collapse in partial aggregation, so
-      // the shuffle carries one row per vector, not K
       // THREE consumers read the assignment (both pair-join sides and the
       // final rollup lane) — and the rollup joins on vec_id while the pair
       // join shuffles by cell, so exchange reuse cannot cover it and the
-      // assignment AGGREGATE re-ran for the rollup (the r11 rule:
-      // exchange reuse does not extend to aggregates). Checkpoint once;
-      // SER level because the artifact carries the vectors (the subdoc
-      // flagship's discipline for heavy-payload checkpoints).
-      val asg = e.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("v"), col("nrm"), col("cid"),
-          (dot_d(col("v"), col("cv")) / (col("nrm") * col("cnrm"))).as("cos"))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("cid"), col("v"), col("nrm")),
-                    struct(col("cos"), (-col("cid")).as("neg"))).as("best"))
-        .select(col("vec_id"), col("best.cid").as("cell"),
-                col("best.v").as("v"), col("best.nrm").as("nrm"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      // assignment AGGREGATE would re-run for the rollup (the r11 rule:
+      // exchange reuse does not extend to aggregates); assign
+      // materializes it once
+      val asg = graft.operators.AngularCells.assign(e, cents)
       val a = asg.as("a"); val b = asg.as("b")
       val dups = a.join(b,
           col("a.cell") === col("b.cell") && col("b.vec_id") < col("a.vec_id"))
@@ -1250,7 +1235,7 @@ object DedupOps {
       // corpus-gram aggregate itself runs (and spills) twice, which at
       // the 26M tier is the difference between one ~45 GB sort spill
       // and two concurrent ones on a single local disk.
-      val gp = gramPairs(s, d).localCheckpoint(true)
+      val gp = Materialize(gramPairs(s, d), eager = true)
       val jp = gp
         .withColumn("jac",
           col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter")))
@@ -1542,13 +1527,6 @@ object DedupOps {
       |WHERE list_reduce(list_transform(list_zip(a.v, b.v), x -> x[1] * x[2]),
       |              (p, q) -> p + q) / (a.nrm * b.nrm) >= 0.4
       |ORDER BY v1, v2""".stripMargin
-
-  private def cosineVecs(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.VectorOps.dot_d
-    Tables.fan(s, embeddings(s, d)).select(col("vec_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("v"))
-      .withColumn("nrm", sqrt(dot_d(col("v"), col("v"))))
-  }
 
   /** Cell-pruned exact cosine pairs at t=0.4 over a caller-supplied
     * centroid frame (cid, cv, cnrm): assignment, per-cell radii, the

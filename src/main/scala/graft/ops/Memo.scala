@@ -26,6 +26,10 @@ import org.apache.spark.sql.SparkSession
   * compute is running wait for that one compute; a compute that asks for
   * its own key throws instead of waiting on itself; a compute that throws
   * is not remembered, so the next call runs it again.
+  *
+  * A compute runs under [[Materialize]]'s owning scope: frames it
+  * materializes keep their blocks for the entry's life, never released
+  * by the scope of the query that happened to compute them.
   */
 object Memo {
   private final case class Key(session: SparkSession, name: String, key: Any)
@@ -87,7 +91,7 @@ object Memo {
   private def run[V](k: Key, e: Entry, compute: => V): V = {
     watch(k.session.sparkContext)
     try {
-      val v = compute
+      val v = Materialize.pinned(compute)
       e.complete(v): Unit
       v
     } catch {

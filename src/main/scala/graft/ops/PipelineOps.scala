@@ -129,12 +129,13 @@ object PipelineOps {
     val nShards = bloomShardCount(estEvalGrams, shardCap)
     if (nShards > maxShards) {
       // envelope guard: past the shard ceiling the plan-literal cost has
-      // no lid — take the narrow-lane exact degrade described above
-      val matched = corpus.select(xxhash64(col("gram")).as("__bloom_h"))
+      // no lid — take the narrow-lane exact degrade described above.
+      // LAZY: the count() right below reads every partition, so it fills
+      // the blocks in the same job that counts them
+      val matched = Materialize(corpus.select(xxhash64(col("gram")).as("__bloom_h"))
         .distinct()
         .join(evalGrams.select(xxhash64(col("gram")).as("__bloom_h"))
-          .distinct(), Seq("__bloom_h"), "left_semi")
-        .localCheckpoint(true)
+          .distinct(), Seq("__bloom_h"), "left_semi"), eager = false)
       val nMatched = matched.count()
       println(s"bloomPrefiltered: est $estEvalGrams grams need $nShards " +
         s"shards > $maxShards cap — exact hash degrade, $nMatched matched " +
@@ -144,7 +145,10 @@ object PipelineOps {
         corpus.withColumn("__bloom_h", xxhash64(col("gram")))
           .join(broadcast(matched), Seq("__bloom_h"), "left_semi")
           .drop("__bloom_h")
-      } else corpus
+      } else {
+        Materialize.release(matched)
+        corpus
+      }
     }
     val gramHash = xxhash64(col("gram"))
     val perShard = math.min(shardCap,
@@ -205,15 +209,14 @@ object PipelineOps {
         documents(s, d).select(col("doc_id"), col("source"), toksCol)
           .withColumn("cum", sum(col("toks")).over(w))
       } else {
-        // materialize the narrow (id, source, toks) projection ONCE (eager
-        // localCheckpoint): phase 1's subtotals, the chunk-width probe, and
+        // materialize the narrow (id, source, toks) projection ONCE
+        // (eagerly): phase 1's subtotals, the chunk-width probe, and
         // phase 2's running sum all scan it, and re-deriving it would
         // tokenize the corpus once per consumer. A few bytes per doc —
         // the standard cluster-cacheable materialization of a distributed
         // prefix-sum input.
-        val t = documents(s, d)
-          .select(col("doc_id"), col("source"), toksCol)
-          .localCheckpoint(true)
+        val t = Materialize(documents(s, d)
+          .select(col("doc_id"), col("source"), toksCol), eager = true)
         // planning-sized action (one max over the cached narrow frame):
         // chunk width giving ≤256 order-contiguous chunks across the id
         // domain
@@ -895,10 +898,9 @@ object PipelineOps {
       // per-(doc,word) tf aggregate — but exchange reuse does not
       // extend to aggregates (the r11 agreement-matrix lesson), so the
       // corpus-wide tf aggregation re-ran per consumer: three times.
-      val vocab = toks.groupBy(col("w"))
+      val vocab = Materialize(toks.groupBy(col("w"))
         .agg(count(lit(1)).as("cr"),
-          count(when(col("source") === "src0", 1)).as("ct"))
-        .localCheckpoint(true)
+          count(when(col("source") === "src0", 1)).as("ct")), eager = true)
       // model totals ride the plan as broadcast 1-row frames (no separate
       // count actions — one job end-to-end, the tfidf nDocs pattern)
       val tot = vocab.agg(sum(col("cr")).cast("double").as("nr"),

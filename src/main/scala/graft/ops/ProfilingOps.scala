@@ -444,8 +444,8 @@ object ProfilingOps {
       // checkpointed: one row per corpus token is a corpus-sized artifact
       // (the sketch pass and the count pass are distinct aggregations and
       // genuinely need two passes)
-      val wc = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
-        .localCheckpoint(false)
+      val wc = Materialize(
+        words.groupBy(col("word")).agg(count(lit(1)).as("n")), eager = false)
       // probe jobs: the sketch aggregate + the exact top-10 are
       // planning-sized collects; the CONTRACT frame below recomputes the
       // top-10 distributedly so the gate checks the distributed aggregate

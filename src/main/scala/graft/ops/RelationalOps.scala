@@ -752,27 +752,29 @@ object RelationalOps {
         |  WHERE e.dst IS NOT NULL AND w.depth < 8)
         |SELECT depth, count(*) AS n, CAST(sum(okey) AS BIGINT) AS key_sum
         |FROM walk GROUP BY depth ORDER BY depth""".stripMargin) { (s, d) =>
-      // The edge list (a window pass over orders) is CACHED before the
-      // recursion: UnionLoop re-evaluates every plan it references per
-      // iteration, so an uncached edges CTE would redo the scan+window
-      // EIGHT times — caching turns each iteration into a join against an
-      // InMemoryRelation. The same applies on a cluster: materialize the
-      // frontier's static side once, iterate against it. Memoized per
-      // (session, fixture) — re-invoking the query (bench loops) must
-      // reuse the cached relations, not stack fresh copies in the
-      // CacheManager. The views are (re-)registered from the memo on every
-      // invocation, so a session that alternates fixtures never reads
-      // another fixture's cache.
+      // The edge list (a window pass over orders) is MATERIALIZED before
+      // the recursion: UnionLoop re-evaluates every plan it references per
+      // iteration, so an unmaterialized edges CTE would redo the
+      // scan+window EIGHT times — materializing turns each iteration into
+      // a join against the stored rows. The same applies on a cluster:
+      // materialize the frontier's static side once, iterate against it.
+      // Memoized per (session, fixture) — re-invoking the query (bench
+      // loops) must reuse the stored relations, not stack fresh copies;
+      // the memo's scope keeps their blocks for the entry's life. LAZY:
+      // the first run of the recursion fills them. The views are
+      // (re-)registered from the memo on every invocation, so a session
+      // that alternates fixtures never reads another fixture's frames.
       import org.apache.spark.sql.expressions.Window
       val (firsts, edges) = Memo(s, "relational.q33", d) {
         val base = orders(s, d).where(col("o_custkey") % 10 === 0)
           .select(col("o_custkey"), col("o_orderkey"))
-        val f = base.groupBy(col("o_custkey").as("k"))
-          .agg(min(col("o_orderkey")).as("okey")).cache()
-        val e = base.select(col("o_custkey").as("k"), col("o_orderkey").as("src"),
+        val f = Materialize(base.groupBy(col("o_custkey").as("k"))
+          .agg(min(col("o_orderkey")).as("okey")), eager = false)
+        val e = Materialize(base.select(col("o_custkey").as("k"),
+            col("o_orderkey").as("src"),
             lead(col("o_orderkey"), 1).over(
               Window.partitionBy(col("o_custkey")).orderBy(col("o_orderkey")))
-              .as("dst")).cache()
+              .as("dst")), eager = false)
         (f, e)
       }
       firsts.createOrReplaceTempView("graft_q33_firsts_v")

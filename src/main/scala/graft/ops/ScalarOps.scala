@@ -45,9 +45,8 @@ object ScalarOps {
     // spark.sql.broadcastTimeout at data scale (the r12 shape had exactly
     // that exposure via broadcast(n) over an unmaterialized vc; the eager
     // job removes it — the broadcasts now collect from cached blocks).
-    val vc = df.select(col(valueCol).as("v")).where(col("v").isNotNull)
-      .groupBy(col("v")).agg(count(lit(1)).as("freq"))
-      .localCheckpoint(true)
+    val vc = Materialize(df.select(col(valueCol).as("v")).where(col("v").isNotNull)
+      .groupBy(col("v")).agg(count(lit(1)).as("freq")), eager = true)
     // Monotone range bucket from (vmin, vmax): for v1 ≤ v2,
     // bucket(v1) ≤ bucket(v2) — each step of the otherwise-branch chain
     // (subtract a constant, divide by a positive constant, multiply by a

@@ -709,12 +709,12 @@ object TextOps {
         .select(col("source"),
           (col("q1") - (col("q3") - col("q1")) * 1.5).as("lo"),
           (col("q3") + (col("q3") - col("q1")) * 1.5).as("hi"))
-      // materialize the corpus-narrow xent relation ONCE (eager
-      // localCheckpoint, the packedBins pattern): the rank trainer, the
-      // per-lang counts and the scoring join all consume it, and without
+      // materialize the corpus-narrow xent relation ONCE (eagerly, the
+      // packedBins pattern): the rank trainer, the per-lang counts and
+      // the scoring join all consume it, and without
       // the checkpoint each consumer would re-run the whole bigram-LM
       // kernel (measured 803 s → ~440 s at the 1.3M-doc smoke tier)
-      val px = perplexityXent(s, d).localCheckpoint(true)
+      val px = Materialize(perplexityXent(s, d), eager = true)
       val thr = px
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("lang")).orderBy(col("xent"), col("doc_id"))))

@@ -181,16 +181,17 @@ object StreamingArchiver {
     val last = batch.withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .select(col("key").as("c_key"), col("op"), col("price").as("c_price"))
-    val merged = base.join(last, col("key") === col("c_key"), "full_outer")
-      .where(col("op").isNull || col("op") =!= "D")
-      .select(coalesce(col("c_key"), col("key")).as("key"),
-        when(col("c_key").isNull, col("price")).otherwise(col("c_price"))
-          .as("price"))
-      // the write below replaces gen-<id> while `base` may be lazily
-      // reading the SAME dir on a replay (id committed, then replayed):
-      // materialize the merge result before touching the target
-      .localCheckpoint(true)
-    merged.write.mode("overwrite").parquet(s"$snapshotRoot/gen-$id")
+    // the write below replaces gen-<id> while `base` may be lazily
+    // reading the SAME dir on a replay (id committed, then replayed):
+    // materialize the merge result before touching the target
+    val merged = graft.ops.Materialize(
+      base.join(last, col("key") === col("c_key"), "full_outer")
+        .where(col("op").isNull || col("op") =!= "D")
+        .select(coalesce(col("c_key"), col("key")).as("key"),
+          when(col("c_key").isNull, col("price")).otherwise(col("c_price"))
+            .as("price")), eager = true)
+    try merged.write.mode("overwrite").parquet(s"$snapshotRoot/gen-$id")
+    finally graft.ops.Materialize.release(merged)
     publishSnapshot(s, snapshotRoot, s"gen-$id")
     retireGenerations(s, snapshotRoot)
   }

@@ -3,7 +3,10 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.Materialize
 
 /** Scale smoke: run the heavy document/vector families against a corpus
   * two-plus orders of magnitude beyond the largest fixture, and assert
@@ -287,9 +290,7 @@ object ScaleSmoke {
       // (fraction, recall) points.
       "x_knn_flip_continuity" -> { () =>
         val ann = graft.ops.AnnOps
-        val e0 = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> cast(x as double))").as("v"))
+        val e0 = vecsAt(spark, s"$dir/embeddings.parquet")
         val en = ann.normalizedVecs(e0)
         val flat = graft.SparkEntry.queries("knn_graph_ivf")(spark, dir)
           .select(col("query_id"), col("neighbor_id"))
@@ -395,9 +396,7 @@ object ScaleSmoke {
         // comparable across centroid sets because uneven cells change
         // the candidate budget: record candidates per query (cost) and
         // the max cell population (the hot-key/skew axis) for both
-        val e0 = spark.read.parquet(s"$cDir/embeddings.parquet")
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> cast(x as double))").as("v"))
+        val e0 = vecsAt(spark, s"$cDir/embeddings.parquet")
         val en = graft.ops.AnnOps.normalizedVecs(e0)
         val seeded = graft.ops.AnnOps.normalizedCents(
           e0.where(col("vec_id") >= 5 && col("vec_id") < lit(5L + 317))
@@ -453,9 +452,7 @@ object ScaleSmoke {
                            / 1000000.0 - 1.0) AS FLOAT))""").as("embedding"),
             expr("cast(pmod(xxhash64(id, 99), 16) AS INT)").as("label"))
           .write.mode("overwrite").parquet(s"$tDir/embeddings.parquet")
-        val e0 = spark.read.parquet(s"$tDir/embeddings.parquet")
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> cast(x as double))").as("v"))
+        val e0 = vecsAt(spark, s"$tDir/embeddings.parquet")
         val en = graft.ops.AnnOps.normalizedVecs(e0)
         val (assigned, probes) = graft.ops.AnnOps.twoLevelAssignProbes(
           spark, en, n2, 32, 32, 2, 4)
@@ -537,10 +534,7 @@ object ScaleSmoke {
             col("blob").as("label"))
           .write.mode("overwrite").parquet(s"$cDir/embeddings.parquet")
         val ann = graft.ops.AnnOps
-        val en = ann.normalizedVecs(
-          spark.read.parquet(s"$cDir/embeddings.parquet")
-            .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x as double))").as("v")))
+        val en = ann.normalizedVecs(vecsAt(spark, s"$cDir/embeddings.parquet"))
         val qMod = 2000
         val nQ = (0L until n2).count(_ % qMod == 0).toDouble
         def run(rect: Boolean, tag: String): Double = {
@@ -548,8 +542,8 @@ object ScaleSmoke {
             spark, en, n2, 32, 32, 3, 3,
             probeFilter = Some(pmod(col("vec_id"), lit(qMod)) === 0),
             rectangleProbes = rect)
-          val widths = assigned.groupBy(col("cell"))
-            .agg(count(lit(1)).as("na")).localCheckpoint(true)
+          val widths = Materialize(assigned.groupBy(col("cell"))
+            .agg(count(lit(1)).as("na")), eager = true)
           val nCand = widths
             .join(probes.groupBy(col("cell")).agg(count(lit(1)).as("np")),
               Seq("cell"))
@@ -616,14 +610,11 @@ object ScaleSmoke {
             col("blob").cast("int").as("label"))
           .write.mode("overwrite").parquet(s"$bDir/embeddings.parquet")
         val ann = graft.ops.AnnOps
-        val en = ann.normalizedVecs(
-          spark.read.parquet(s"$bDir/embeddings.parquet")
-            .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x as double))").as("v")))
+        val en = ann.normalizedVecs(vecsAt(spark, s"$bDir/embeddings.parquet"))
         val (assigned, probes) = ann.twoLevelAssignProbes(
           spark, en, n2, 32, 32, 3, 3)
-        val widths = assigned.groupBy(col("cell")).agg(count(lit(1)).as("na"))
-          .localCheckpoint(true)
+        val widths = Materialize(
+          assigned.groupBy(col("cell")).agg(count(lit(1)).as("na")), eager = true)
         val mx = widths.agg(max(col("na"))).head.getLong(0)
         val cells = widths.count()
         val nCand = widths
@@ -656,8 +647,8 @@ object ScaleSmoke {
         // path end-to-end (assignment reruns inside: the telemetry
         // probe above deliberately stays a separate measurement).
         val t0 = System.nanoTime()
-        val g = ann.knnGraphTwoLevel(spark, en, n2, 32, 32, 3, 3, 3)
-          .localCheckpoint(true)
+        val g = Materialize(
+          ann.knnGraphTwoLevel(spark, en, n2, 32, 32, 3, 3, 3), eager = true)
         metrics += ("blob1m_graph_s" -> (System.nanoTime() - t0) / 1e9)
         val per = g.groupBy(col("query_id")).agg(count(lit(1)).as("n"))
         require(per.where(col("n") =!= 3).count() == 0L,
@@ -701,10 +692,7 @@ object ScaleSmoke {
             expr("cast(pmod(xxhash64(id, 99), 16) AS INT)").as("label"))
           .write.mode("overwrite").parquet(s"$uDir/embeddings.parquet")
         val ann = graft.ops.AnnOps
-        val en = ann.normalizedVecs(
-          spark.read.parquet(s"$uDir/embeddings.parquet")
-            .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x as double))").as("v")))
+        val en = ann.normalizedVecs(vecsAt(spark, s"$uDir/embeddings.parquet"))
         val qMod = 2000
         def run(rect: Boolean, tag: String): Double = {
           val (assigned, probes) = ann.twoLevelAssignProbes(
@@ -747,16 +735,13 @@ object ScaleSmoke {
             expr("cast(pmod(xxhash64(id, 99), 16) AS INT)").as("label"))
           .write.mode("overwrite").parquet(s"$pDir/embeddings.parquet")
         val ann = graft.ops.AnnOps
-        val en = ann.normalizedVecs(
-          spark.read.parquet(s"$pDir/embeddings.parquet")
-            .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x as double))").as("v")))
+        val en = ann.normalizedVecs(vecsAt(spark, s"$pDir/embeddings.parquet"))
         val qMod = 2000
         val (assigned, probes) = ann.twoLevelAssignProbes(
           spark, en, n2, 64, 64, 12, 12,
           probeFilter = Some(pmod(col("vec_id"), lit(qMod)) === 0))
-        val perQ = probes.groupBy(col("query_id"))
-          .agg(countDistinct(col("cell")).as("nc")).localCheckpoint(true)
+        val perQ = Materialize(probes.groupBy(col("query_id"))
+          .agg(countDistinct(col("cell")).as("nc")), eager = true)
         val nQ = perQ.count()
         require(nQ == n2 / qMod, s"expected ${n2 / qMod} probe queries, got $nQ")
         require(perQ.where(col("nc") =!= 144).count() == 0L,
@@ -804,8 +789,8 @@ object ScaleSmoke {
           .write.mode("overwrite").parquet(s"$gDir/embeddings.parquet")
         require(graft.ops.AnnOps.ivfCellSalts(vecRows / 5) > 1L,
           "the near-identical slice must be wide enough to engage the salt")
-        val g = graft.SparkEntry.queries("knn_graph_ivf")(spark, gDir)
-          .localCheckpoint(true)
+        val g = Materialize(
+          graft.SparkEntry.queries("knn_graph_ivf")(spark, gDir), eager = true)
         val dup = g.where(col("query_id") % 10 < 3)
         require(dup.where(col("cos") < 0.999999).count() == 0L,
           "every exact-duplicate member's edges must be cos-1 twins")
@@ -923,9 +908,8 @@ object ScaleSmoke {
       // keep-everything literal.
       "x_bloom_shard_cost" -> { () =>
         val ops = graft.ops.PipelineOps
-        val evalGrams = spark.range(1000000L)
-          .select(concat(lit("eg"), col("id").cast("string")).as("gram"))
-          .localCheckpoint(true)
+        val evalGrams = Materialize(spark.range(1000000L)
+          .select(concat(lit("eg"), col("id").cast("string")).as("gram")), eager = true)
         val corpus = spark.range(50000000L)
           .select(concat(lit("cg"), col("id").cast("string")).as("gram"))
         for (n <- Seq(1L, 8L, 32L)) {
@@ -1086,9 +1070,11 @@ object ScaleSmoke {
             only.isEmpty)
     val timings = only.fold(tasks)(ns => tasks.filter(t => ns(t._1))).map {
       case (name, body) =>
-        val t0 = System.nanoTime()
-        body()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val sec = Materialize.scoped {
+          val t0 = System.nanoTime()
+          body()
+          (System.nanoTime() - t0) / 1e9
+        }
         println(f"SCALE $name%-28s $sec%8.2f s")
         // Release the finished query's shuffle files before the next one
         // starts: shuffle files live until the ContextCleaner GCs the
@@ -1114,6 +1100,11 @@ object ScaleSmoke {
     spark.stop()
   }
 
+  /** An embeddings parquet as (vec_id, v: array<double>). */
+  private def vecsAt(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).select(col("vec_id"),
+      expr("transform(embedding, x -> cast(x as double))").as("v"))
+
   /** recall@3 of a knn-graph result vs brute-force truth over 500
     * hash-sampled queries (unit-normalized, native dot — 50M pairs in
     * ~13 s at the 100k tier). Truth ties break toward the SMALLER
@@ -1123,9 +1114,7 @@ object ScaleSmoke {
       embPath: String, g: org.apache.spark.sql.DataFrame,
       queryMod: Int = 200): Double = {
     import graft.functions.VectorOps.dot_d
-    val en = spark.read.parquet(embPath)
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("v"))
+    val en = vecsAt(spark, embPath)
       .withColumn("nrm", sqrt(dot_d(col("v"), col("v"))))
       .select(col("vec_id"),
         expr("transform(v, x -> x / greatest(nrm, 1e-30d))").as("v"))
@@ -1133,14 +1122,13 @@ object ScaleSmoke {
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    val truth = queries.crossJoin(en)
+    val truth = Materialize(queries.crossJoin(en)
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         dot_d(col("qv"), col("v")).as("cos"))
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= 3)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      .localCheckpoint(true)
+      .select(col("query_id"), col("vec_id").as("neighbor_id")), eager = true)
     val hit = truth.join(g.select(col("query_id"), col("neighbor_id")),
       Seq("query_id", "neighbor_id")).count()
     val total = truth.count()

@@ -29,12 +29,17 @@ class DedupClusteringSpec extends SparkSpec {
     import spark.implicits._
     // a 200-edge chain is the worst case for min-label propagation
     // (rounds = diameter = 200); star contraction must converge fast AND
-    // produce exactly the union-find answer
+    // produce exactly the union-find answer — and release each round
+    // once the next is materialized, so the result pins only the last
     val n = 200
     val pairs = (0 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
-    val local = DedupClustering.connectedComponents(pairs, Long.MaxValue)
-      .as[(Long, Long)].collect().toMap
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
     val dist = DedupClustering.connectedComponents(pairs, 0)
+      .as[(Long, Long)].collect().toMap
+    val left = persisted -- before
+    assert(left.size <= 1, s"star contraction left persisted RDDs $left")
+    val local = DedupClustering.connectedComponents(pairs, Long.MaxValue)
       .as[(Long, Long)].collect().toMap
     val expect = (0L to n.toLong).map(i => i -> 0L).toMap
     assert(local == expect)

@@ -10,7 +10,8 @@ import scala.concurrent.duration._
 import graft.SparkSpec
 
 /** [[Memo]]'s lock discipline and lifetime contract, the bloom-join clone
-  * it now holds, and the rule that it is the only cross-query memo. */
+  * it now holds, and the rules that it is the only cross-query memo and
+  * [[Materialize]] the only in-query materialization. */
 class MemoSpec extends SparkSpec {
 
   private def key(): String = java.util.UUID.randomUUID().toString
@@ -89,22 +90,37 @@ class MemoSpec extends SparkSpec {
     assert(Memo.size == n, "each call must reuse the one configured clone")
   }
 
-  test("no file under src/main/scala but Memo and TempDirs declares a ConcurrentHashMap") {
+  /** Files under src/main/scala, other than `allowed`, whose text matches
+    * `pattern` (comments included, as grep reads them). */
+  private def offenders(pattern: String, allowed: Set[String]): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val allowed = Set("graft/ops/Memo.scala", "graft/ops/TempDirs.scala")
-    val offenders = walk(root).filter { f =>
-      val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
-      !allowed(rel) && {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.mkString.contains("ConcurrentHashMap") finally src.close()
+    val re = pattern.r
+    walk(root).map(f => root.toPath.relativize(f.toPath).toString.replace('\\', '/'))
+      .filter { rel =>
+        !allowed(rel) && {
+          val src = scala.io.Source.fromFile(new java.io.File(root, rel), "UTF-8")
+          try re.findFirstIn(src.mkString).isDefined finally src.close()
+        }
       }
-    }
-    assert(offenders.isEmpty,
+  }
+
+  test("no file under src/main/scala but Memo and TempDirs declares a ConcurrentHashMap") {
+    val bad = offenders("ConcurrentHashMap",
+      Set("graft/ops/Memo.scala", "graft/ops/TempDirs.scala"))
+    assert(bad.isEmpty,
       "cross-query reuse goes through graft.ops.Memo; ad-hoc maps in: " +
-        offenders.mkString(", "))
+        bad.mkString(", "))
+  }
+
+  test("no file under src/main/scala but Materialize checkpoints, caches or persists") {
+    val bad = offenders("""localCheckpoint|\.cache\(\)|\.persist\(""",
+      Set("graft/ops/Materialize.scala"))
+    assert(bad.isEmpty,
+      "in-query materialization goes through graft.ops.Materialize; found in: " +
+        bad.mkString(", "))
   }
 }

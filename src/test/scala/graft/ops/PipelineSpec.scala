@@ -165,8 +165,30 @@ class PipelineSpec extends SparkSpec {
     // the probe cap, so the broadcast probe keeps exactly the eval
     // grams (hash equality ⊇ string equality; no 64-bit collisions in
     // a 2200-string universe) and no identity short-circuit fires
-    val degraded = PipelineOps.bloomPrefiltered(probe, evalGrams, 200L,
-      shardCap = 32L, maxShards = 4L)
+    // the degrade counts its matched hashes in the job that materializes
+    // them: exactly the jobs of counting the same intersection directly
+    def jobsOf(body: => Any): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet(): Unit
+      }
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try { body; org.apache.spark.SpecBus.drain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(l)
+      n.get
+    }
+    val hashes = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(org.apache.spark.sql.functions.xxhash64(col("gram")).as("h")).distinct()
+    val direct = jobsOf(hashes(probe).join(hashes(evalGrams), Seq("h"), "left_semi").count())
+    var degraded: org.apache.spark.sql.DataFrame = null
+    val degradeJobs = jobsOf {
+      degraded = PipelineOps.bloomPrefiltered(probe, evalGrams, 200L,
+        shardCap = 32L, maxShards = 4L)
+    }
+    assert(degradeJobs == direct,
+      s"the degrade ran $degradeJobs jobs; counting its intersection takes $direct")
     assert(!(degraded eq probe), "under the probe cap the degrade must prefilter")
     assert(degraded.columns.toSeq == Seq("gram"),
       "the degrade's temp hash column must not leak into the output")
