@@ -243,8 +243,7 @@ object TextStats {
     var n = 0L
     while (i < str.length) {
       val cp = str.codePointAt(i)
-      val prev = counts.get(cp)
-      counts.put(cp, if (prev == null) 1L else prev + 1L)
+      counts.put(cp, counts.getOrDefault(cp, 0L) + 1L)
       n += 1
       i += Character.charCount(cp)
     }

@@ -609,7 +609,7 @@ object AnnOps {
       // uniform-random tier; nprobe=K/32 restores a ~3% probe ratio at
       // ~4× candidate cost, still ~√N-bounded). Candidates per query
       // stay nprobe·N/K ≈ √N/32·√N — linear in N corpus-wide per probe.
-      // The smoke's x_knn_graph_recall records the (recall, cost) pair;
+      // The measured (recall, cost) pair is in scale_smoke_r11_knn2.json;
       // real embeddings cluster, so the uniform tier is the floor.
       val nprobe = ivfNprobe(kCells)
       val w = org.apache.spark.sql.expressions.Window
@@ -654,7 +654,7 @@ object AnnOps {
         // tier trained ≈ seeded, 0.304 vs 0.299 recall@3 at 500 queries,
         // because there is no structure to learn; on clustered corpora,
         // the regime IVF exists for, training aligns cells with the
-        // density — x_knn_graph_skewed measures that) and UNIT-NORMALIZED
+        // density, scale_smoke_r10_knn2.json) and UNIT-NORMALIZED
         // vectors: the candidate stage evaluates nprobe·N²/K pairs, and
         // the unnormalized form pays three 64-dim dot products per pair
         // (dot + both norms, norms recomputed per PAIR); normalizing once
@@ -666,8 +666,8 @@ object AnnOps {
         // (product of two independent subspace quantizers — the IMI
         // structure, [[twoLevelAssignProbes]])
         // so effective cells keep tracking √N instead of freezing at the
-        // cap — the x_knn_graph_twolevel smoke pins the shape and the
-        // candidates-per-query bound at a forced 1M-vector tier.
+        // cap — GateSpec pins the flip and the candidate-fraction
+        // continuity, PlanSpec the plan shape.
         // exact-duplicate collapse wraps EITHER index shape when the
         // dup-mass probe says the largest identical-vector group is a
         // corpus-scale share ([[dupCollapseGate]] — without it a
@@ -1149,8 +1149,7 @@ object AnnOps {
       .select(col("cid"),
         expr("transform(cv, x -> x / greatest(cn, 1e-30d))").as("cv"))
 
-  /** ann_ivf_topk's footer-gated scale branch, split out so the forced
-    * smoke tiers can drive BOTH index shapes directly. Flat ⌈√N⌉-cell
+  /** ann_ivf_topk's footer-gated scale branch. Flat ⌈√N⌉-cell
     * IVF below the cap; the two-level IMI past it (⌈√N⌉ > 4096), with
     * the probe side restricted to the 5 query vectors — the corpus
     * assignment is shared with knn_graph_ivf's gate, so past the cap
@@ -1227,9 +1226,10 @@ object AnnOps {
     * Ties: descending on the packed (cos, neighbor) key / (cs, cid)
     * struct, so a cos tie picks the LARGER neighbor id (the fixture
     * branch's window picks the smaller; this branch has no oracle and
-    * stays deterministic either way). Parameterized over the centroid
-    * relation so ScaleSmoke can A/B trained vs seeded centroids on one
-    * corpus. */
+    * stays deterministic either way). The centroid relation is a
+    * parameter: knn_graph_ivf passes its trained scale centroids, and a
+    * caller with its own cells (AnnSpec's deduped-graph check) passes
+    * those. */
   private[graft] def knnGraphScale(en: DataFrame, cents: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
     import graft.functions.TopK.collect_top_k
@@ -1443,8 +1443,7 @@ object AnnOps {
     * broke. Trainer collects stay planning-sized (K×dims ≤ 2 MB). */
   private[graft] def twoLevelAssignProbes(s: SparkSession, en: DataFrame,
       nVec: Long, k1: Int, k2: Int, p1: Int, p2: Int,
-      probeFilter: Option[Column] = None,
-      rectangleProbes: Boolean = false): (DataFrame, DataFrame) = {
+      probeFilter: Option[Column] = None): (DataFrame, DataFrame) = {
     import graft.functions.TopK.collect_top_k
     val half = dims / 2
     val eh = en.select(col("vec_id"), col("v"),
@@ -1498,24 +1497,10 @@ object AnnOps {
     // which the cell join genuinely needs as rows. `probeFilter`
     // restricts the probe side (e.g. the 5 broadcast queries of
     // ann_ivf_topk) without touching the corpus assignment.
-    // `rectangleProbes` keeps the rigid top-p1 × top-p2 rectangle at
-    // the same p1·p2 budget — the A/B baseline the clustered smoke
-    // measures multi-sequence selection against (never the production
-    // path).
     import graft.functions.MultiSeqCells.multi_seq_cells
-    val probeBase = probeFilter.fold(both)(both.where)
-    val probes = (if (rectangleProbes)
-        probeBase
-          .select(col("vec_id"), explode(slice(col("cells1"), 1, p1)).as("c1"),
-            col("cells2"))
-          .select(col("vec_id"), col("c1"),
-            explode(slice(col("cells2"), 1, p2)).as("c2"))
-          .select(col("vec_id").as("query_id"),
-            (col("c1.cid") * k2 + col("c2.cid")).as("cell"))
-      else
-        probeBase
-          .select(col("vec_id").as("query_id"),
-            explode(multi_seq_cells(col("cells1"), col("cells2"), k2, m)).as("cell")))
+    val probes = probeFilter.fold(both)(both.where)
+      .select(col("vec_id").as("query_id"),
+        explode(multi_seq_cells(col("cells1"), col("cells2"), k2, m)).as("cell"))
       .join(en.select(col("vec_id").as("query_id"), col("v").as("qv")),
         Seq("query_id"))
     (assigned, probes)
@@ -1524,11 +1509,8 @@ object AnnOps {
   /** Full-corpus knn graph through the two-level index — same contract
     * as [[knnGraphScale]], for corpora past the flat cap. */
   private[graft] def knnGraphTwoLevel(s: SparkSession, en: DataFrame,
-      nVec: Long, k1: Int, k2: Int, p1: Int, p2: Int, k: Int,
-      rectangleProbes: Boolean = false,
-      probeFilter: Option[Column] = None): DataFrame = {
-    val (assigned, probes) = twoLevelAssignProbes(s, en, nVec, k1, k2, p1, p2,
-      probeFilter = probeFilter, rectangleProbes = rectangleProbes)
+      nVec: Long, k1: Int, k2: Int, p1: Int, p2: Int, k: Int): DataFrame = {
+    val (assigned, probes) = twoLevelAssignProbes(s, en, nVec, k1, k2, p1, p2)
     topKEdges(assigned, probes, en, k)
   }
 

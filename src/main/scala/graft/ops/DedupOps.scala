@@ -1083,8 +1083,8 @@ object DedupOps {
     // bounded planning probe — [[paragraphSkewGate]] projects the
     // hottest digest's corpus-wide row count from a 20k-doc sample and
     // flips past [[ParagraphWindowMaxHotRows]]. Both branches are the
-    // already-hash-verified flavors; ScaleSmoke asserts the projection
-    // on a deliberately skewed corpus and the decision flip at 100×.
+    // already-hash-verified flavors; DedupSpec pins the projection on a
+    // deliberately skewed corpus, GateSpec the decision flip.
     Q("dedup_paragraph_gated", paragraphGlobalSql) { (s, d) =>
       val blocks = paragraphBlocks(s, d)
       if (paragraphSkewGate(s, d)) {
@@ -1436,9 +1436,8 @@ object DedupOps {
     * size while the sample covers every corpus region. The exact sampled
     * doc count rides on the same job via an `Observation` (no second
     * scan), and `topCount · footerDocs / sampleDocs` projects the hot
-    * digest to the corpus. Footers alone cannot see content skew.
-    * Public so ScaleSmoke can assert the projection. */
-  def paragraphHotRowEstimate(s: SparkSession, d: String): Double = {
+    * digest to the corpus. Footers alone cannot see content skew. */
+  private[graft] def paragraphHotRowEstimate(s: SparkSession, d: String): Double = {
     val footerDocs = Tables.parquetRowCount(s, d, "documents")
     if (footerDocs == 0L) return 0.0
     val files = Tables.dataFiles(s, d, "documents")
@@ -1467,10 +1466,11 @@ object DedupOps {
     else r.getLong(0).toDouble * footerDocs.toDouble / sampleDocs.toDouble
   }
 
-  /** The planning decision for the gated sub-document flavor, split from
-    * the estimate so ScaleSmoke can assert the FLIP as a pure function
-    * of corpus scale (the live tiers below the threshold correctly keep
-    * the faster window plan; the projection at 100× crosses it). */
+  /** The planning decision for the gated sub-document flavor: true (the
+    * aggregate+join plan) once the estimated hot-digest row count
+    * outgrows a task's window buffer. A pure function of the estimate,
+    * so the flip is checkable without a corpus (live tiers below the
+    * threshold correctly keep the faster window plan). */
   def paragraphSkewDecision(estimatedHotRows: Double): Boolean =
     estimatedHotRows > ParagraphWindowMaxHotRows.toDouble
 

@@ -17,9 +17,9 @@ import org.apache.spark.storage.StorageLevel
   * Scope rule:
   *  - [[scoped]] unpersists (non-blocking) everything registered inside
   *    it when its body returns or throws. Runners open one per query:
-  *    `Bench.timeQuery` (so Bench, BenchMedian and TimeQueries), Verify's
-  *    per-query write and ScaleSmoke's per-task loop, each releasing
-  *    after its timer stops. Code that materializes only to collect
+  *    `Bench.timeQuery` (so Bench, BenchMedian, TimeQueries and
+  *    ScaleSmoke) and Verify's per-query write, each releasing after
+  *    its timer stops. Code that materializes only to collect
   *    opens its own, so its blocks go when the collect is done.
   *  - [[Memo]] runs every compute under an owning scope that is never
   *    released: a memoized frame keeps its blocks until the SparkContext

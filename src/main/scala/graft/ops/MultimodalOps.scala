@@ -538,14 +538,13 @@ object MultimodalOps {
     * every decoded pixel arithmetically), and the per-frame signals are
     * `f = px_sum % 256` (shot-break delta input) and
     * `sharp = (px_sum·7 + max_channel) % 1000` (keyframe argmax input).
-    * Shared by the mm_*_decoded oracle queries and the 100k smoke. */
+    * Shared by the mm_*_decoded oracle queries. */
   private[graft] def decodedFrameFeatures(s: SparkSession,
-      frames: DataFrame, dimBase: Int = 8): DataFrame = {
+      frames: DataFrame): DataFrame = {
     import s.implicits._
     val withCid = frames.select(col("doc_id"), col("frame_idx"),
       (col("doc_id") * 100000L + col("frame_idx")).as("cid"))
-    val feats = imageFeaturesKernel(s,
-        withCid.select(col("cid")).as[Long], dimBase)
+    val feats = imageFeaturesKernel(s, withCid.select(col("cid")).as[Long])
       .select(col("doc_id").as("cid"), col("px_sum"), col("max_channel"))
     withCid.join(feats, Seq("cid"))
       .select(col("doc_id"), col("frame_idx"),
@@ -566,18 +565,18 @@ object MultimodalOps {
         byFrame.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
-  /** The PNG encode→decode→feature kernel behind mm_image_features,
-    * parametric over the id set and image size so ScaleSmoke can drive it
-    * at 100k+ images (`dimBase` 32 → ~32-38 px sides) while the oracle
-    * query keeps the fixture-exact 8-px formulas. Two mapPartitions
-    * stages on executors — the one place mapPartitions is justified (no
-    * Catalyst expression decodes PNG); nothing returns to the driver. */
+  /** The PNG encode→decode→feature kernel behind mm_image_features and
+    * the decoded-frame queries: id `i` renders a (8 + i%5)×(8 + i%7) RGB
+    * image whose pixels are closed-form in (x, y, i), so the oracle
+    * derives every decoded value arithmetically. Returns (doc_id, width,
+    * height, px_sum, max_channel) per id. Two mapPartitions stages on
+    * executors — the one place mapPartitions is justified (no Catalyst
+    * expression decodes PNG); nothing returns to the driver. */
   private[graft] def imageFeaturesKernel(s: SparkSession,
-      ids: org.apache.spark.sql.Dataset[Long],
-      dimBase: Int = 8): DataFrame = {
+      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
     import s.implicits._
     val encoded = ids.mapPartitions(_.map { id =>
-      val w = (dimBase + id % 5).toInt; val h = (dimBase + id % 7).toInt
+      val w = (8 + id % 5).toInt; val h = (8 + id % 7).toInt
       val img = new java.awt.image.BufferedImage(
         w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
       var y = 0
@@ -619,10 +618,11 @@ object MultimodalOps {
     }).toDF("doc_id", "width", "height", "px_sum", "max_channel")
   }
 
-  /** The WAV encode→decode→feature kernel behind mm_audio_decode,
-    * parametric over the id set and clip length so ScaleSmoke can drive
-    * it at 100k clips while the oracle query keeps the fixture-exact
-    * formulas. Same two-mapPartitions shape as [[imageFeaturesKernel]]:
+  /** The WAV encode→decode→feature kernel behind mm_audio_decode and
+    * mm_av_align_decoded: id `i` synthesizes a 1000 + (i%17)·100-sample
+    * clip whose samples are closed-form in (sample, i), so the oracle
+    * derives every feature arithmetically. Same two-mapPartitions shape
+    * as [[imageFeaturesKernel]]:
     * stage 1 synthesizes deterministic 16-bit mono PCM and WAV-encodes it
     * (the binary column a crawl would hand us), stage 2 is the decode
     * under test — `AudioSystem.getAudioInputStream` parses the RIFF
@@ -630,11 +630,10 @@ object MultimodalOps {
     * feature loop (sum, peak, zero crossings) runs over the decoded
     * little-endian frames. Nothing returns to the driver. */
   private[graft] def audioFeaturesKernel(s: SparkSession,
-      ids: org.apache.spark.sql.Dataset[Long],
-      nBase: Int = 1000): DataFrame = {
+      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
     import s.implicits._
     val encoded = ids.mapPartitions(_.map { id =>
-      val n = nBase + (id % 17).toInt * 100
+      val n = 1000 + (id % 17).toInt * 100
       val pcm = new Array[Byte](n * 2)
       var i = 0
       while (i < n) {

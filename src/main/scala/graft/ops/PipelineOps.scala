@@ -56,7 +56,7 @@ object PipelineOps {
     * cap — past it fpp→1 and the decontam prefilter silently degrades
     * to the exact plan. Shards under the cap restore selectivity at
     * any eval-set size; exposed so the spec can force the sharded path
-    * with a tiny cap and the smoke can record the sharded 13M point. */
+    * with a tiny cap. */
   private[graft] val BloomShardItemCap = 4000000L
 
   /** Ceiling on the sharded dispatch: each shard is ~8 MiB of PLAN
@@ -98,7 +98,7 @@ object PipelineOps {
     * branch's might_contain read the attribute, so probe cost is one
     * hash per row at ANY shard count (the first-cut CASE recomputed
     * pmod(xxhash64(gram), n) per condition: measured ~12× slower at
-    * n = 8 over a 50M-row probe, `x_bloom_shard_cost`). A shard with
+    * n = 8 over a 50M-row probe, scale_smoke_r12_probes.json). A shard with
     * no eval grams builds no filter, and no gram routed there can
     * match, so the dispatch falls through to false. Past `maxShards`
     * the prefilter degrades to the NARROW-LANE exact path: intersect
@@ -762,10 +762,6 @@ object PipelineOps {
         |FROM train t LEFT JOIN contam c
         |  ON t.doc_id = c.doc_id AND t.source = c.source
         |GROUP BY t.source ORDER BY t.source""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.graftshim.ColumnShim
-      import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-      import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-      import org.apache.spark.sql.types.BinaryType
       val grams = Tables.fan(s, documents(s, d))
         .select(col("doc_id"), col("source"),
           explode(word_ngrams(graft.functions.Tokenize.ws_tokens(col("text")), 8)).as("gram"))

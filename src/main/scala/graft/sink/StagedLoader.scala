@@ -336,7 +336,7 @@ object Retry {
       attempt += 1
       try return body
       catch {
-        case e: RetryableIngestError if attempt < maxAttempts =>
+        case _: RetryableIngestError if attempt < maxAttempts =>
           sleep(delay)
           delay = math.min(delay * 2, maxDelayMs)
         case e: RetryableIngestError => throw e

@@ -28,6 +28,21 @@ class EntrySmokeSpec extends SparkSpec {
     }
   }
 
+  test("ScaleSmoke lanes are contract queries; an unknown lane is rejected") {
+    import graft.tools.ScaleSmoke
+    val missing = ScaleSmoke.lanes.filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty, s"lanes without a query: $missing")
+    assert(ScaleSmoke.lanes.distinct == ScaleSmoke.lanes)
+    assert(ScaleSmoke.selectLanes(None) == ScaleSmoke.lanes)
+    // a subset keeps sweep order, whatever order it is named in
+    assert(ScaleSmoke.selectLanes(Some("tfidf_topterms,dedup_exact")) ==
+      Seq("dedup_exact", "tfidf_topterms"))
+    val ex = intercept[IllegalArgumentException] {
+      ScaleSmoke.selectLanes(Some("dedup_exact,dedup_exactt"))
+    }
+    assert(ex.getMessage.contains("dedup_exactt"))
+  }
+
   test("oracleSql keys are a subset of queries keys") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracleSql without a query: $extra")

@@ -139,7 +139,6 @@ class AnnSpec extends SparkSpec {
   }
 
   test("kmeans_train: cells partition the corpus; training is deterministic") {
-    import org.apache.spark.sql.functions._
     val out = SparkEntry.queries("kmeans_train")(spark, sf).collect()
     val total = out.map(_.getAs[Long]("n_members")).sum
     assert(total == graft.ops.Tables.embeddings(spark, sf).count(),

@@ -35,6 +35,39 @@ class DedupSpec extends SparkSpec {
       s"flavors diverged: window=${a.length} rows, skewsafe=${b.length} rows")
   }
 
+  test("paragraph skew probe: projects a planted boilerplate block, organic fixtures stay on the window plan") {
+    import org.apache.spark.sql.functions._
+    // every third document opens with the SAME 10-word block (the "all
+    // rights reserved" shape) ahead of 20-39 hashed words, so one block
+    // digest has exactly n/3 rows
+    val n = 6000L
+    val dir = java.nio.file.Files.createTempDirectory("graft-para-skew").toString
+    spark.range(n)
+      .select(
+        col("id").as("doc_id"),
+        expr("""concat(
+            CASE WHEN id % 3 = 0
+              THEN 'all rights reserved by the original publisher of this work '
+              ELSE '' END,
+            concat_ws(' ', transform(
+              sequence(0, 19 + cast(pmod(xxhash64(id, 2), 20) AS INT)),
+              i -> concat('w', pmod(xxhash64(id, i + 10), 30000)))))""")
+          .as("text"),
+        lit("en").as("lang"), lit("web").as("source"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val hot = DedupOps.paragraphHotRowEstimate(spark, dir)
+    assert(hot > n / 10.0 && hot < n,
+      s"probe must project the planted boilerplate (got $hot of $n docs)")
+    // n/3 hot rows fit one task: the window plan is kept at this size
+    assert(!DedupOps.paragraphSkewDecision(hot))
+    // the sf0.01 fixture sits beside this suite's sf0.001
+    Seq(sf, sf.replace("sf0.001", "sf0.01")).foreach { d =>
+      assert(!DedupOps.paragraphSkewGate(spark, d),
+        s"paragraph gate must stay on the window plan at $d")
+    }
+  }
+
   test("gram posting-width guard: a degenerate gram fails bounded, named") {
     import org.apache.spark.sql.functions._
     // 8 docs sharing one boilerplate head → one gram bucket of width 8;

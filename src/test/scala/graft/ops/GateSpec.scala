@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** ScalaCheck laws for the PLANNING GATES — the pure driver-side
   * functions whose thresholds were measured in the scale smokes
   * (paragraph skew escalation, IVF cell/probe formulas, the two-level
-  * flip). The smokes pin the measured points; these pin the INVARIANTS
+  * flip). The scale_smoke_r*.json records hold the measured points
+  * (SCALE.md, "Retired probes"); these pin the INVARIANTS
   * over the whole input space, the way PlannerPropertySpec pins the
   * split generators. Raw ScalaCheck (no scalatest bridge offline),
   * `Prop.forAllNoShrink` throughout — shrinking mutates generator
@@ -236,7 +237,7 @@ class GateSpec extends AnyFunSuite {
       3 -> Gen.chooseNum(0L, 1000000000L),
       1 -> Gen.const(AnnOps.IvfCellWidthCap),
       1 -> Gen.const(AnnOps.IvfCellWidthCap + 1L))
-    // the law the degenerate smoke rests on: spreading `width` postings
+    // the law the degenerate-corpus graph rests on: spreading `width` postings
     // over the salt count leaves every (cell, salt) key ≤ cap — even
     // with the worst-case uneven hash spread of +1
     runProp("width cap holds", Prop.forAllNoShrink(genW) { w =>

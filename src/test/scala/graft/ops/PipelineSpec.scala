@@ -139,7 +139,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sharded bloom prefilter: no false negatives, shards under a forced cap") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     // 200 eval grams; cap 32 forces ceil(200/32) = 7 hash-routed shards —
     // the production path past Spark's 4M-item BloomFilterAggregate cap
