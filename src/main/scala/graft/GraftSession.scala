@@ -15,6 +15,14 @@ import org.apache.spark.sql.SparkSession
   *   coalescing, which is enabled.
   * - `GraftExtensions` registered, so simhash64/dot_d/minhash_sig/
   *   minhash_shingled/word_ngrams work from SQL.
+  * - `spark.hadoop.fs.file.impl` = [[graft.fs.PosixLocalFileSystem]] and
+  *   `spark.hadoop.fs.AbstractFileSystem.file.impl` = [[graft.fs.PosixLocalFs]]:
+  *   Hadoop's local file system (FileSystem and FileContext APIs) with file
+  *   permissions set in-process. Stock Hadoop without libhadoop forks a
+  *   `chmod` process for every local file and directory it writes — 44 per
+  *   archive run. Hadoop caches one FileSystem per scheme and user, and the
+  *   first `file://` instance created decides the class, so this recipe has
+  *   to run before anything opens a local path.
   * - `SPARK_GRAFT_EVENTLOG=<dir>`, when set, writes the standard Spark
   *   event log there (`tools/stage_profile.py` renders its per-stage
   *   wall/shuffle/spill table); unset, the session has no event log.
@@ -40,6 +48,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.PosixLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.fs.PosixLocalFs].getName)
       .withExtensions(new graft.functions.GraftExtensions)
     sys.env.get("SPARK_GRAFT_EVENTLOG").foreach { dir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))

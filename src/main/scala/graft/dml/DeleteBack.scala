@@ -5,6 +5,7 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
 
 import graft.ParquetFooters
+import graft.source.DriverJdbc
 import graft.sink.Compaction
 
 /** Delete-after-sync (SURVEY.md §2 K5-K7). On MySQL the reference deletes
@@ -49,14 +50,10 @@ object DeleteBack {
     * batches through here one statement at a time with the pacing sleep
     * between them. Runs on the DRIVER by design — delete-back is a
     * planning-sized control action (one statement per table), never a
-    * per-row distributed job. */
-  def executeJdbc(url: String, props: java.util.Properties, sql: String): Long = {
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      val st = conn.createStatement()
-      try st.executeUpdate(sql).toLong finally st.close()
-    } finally conn.close()
-  }
+    * per-row distributed job — on the connection every control statement
+    * opens ([[graft.source.DriverJdbc]]). */
+  def executeJdbc(url: String, props: java.util.Properties, sql: String): Long =
+    DriverJdbc.update(url, props, sql)
 
   /** Crash recovery for [[deleteFromParquet]]'s rename-aside swap, through
     * the active session's file system: the three states

@@ -3,7 +3,8 @@ package graft.source
 /** Per-DBMS dialect profiles (SURVEY.md §2 S1-S8): how to build the JDBC
   * url, quote identifiers, discover catalogs, and push the planning
   * aggregates. Pure data + string builders — the network side is owned by
-  * `spark.read.jdbc`, so each profile is testable without a live server.
+  * `spark.read.jdbc` (the data scan) and [[DriverJdbc]] (control
+  * statements), so each profile is testable without a live server.
   *
   * Reference behavior being reproduced (citations into /root/reference):
   *  - factory dispatch, default mysql  — source/source.go:31-46
@@ -131,12 +132,6 @@ case object DerbyDialect extends JdbcDialect {
     s"""SELECT t.tablename FROM sys.systables t
        |JOIN sys.sysschemas s ON t.schemaid = s.schemaid
        |WHERE s.schemaname = '$db' AND t.tabletype = 'T'""".stripMargin
-  // Derby derived tables need NAMED columns, and its COUNT(*) is INTEGER
-  // (the source layer reads a long) — alias and widen in the pushed SQL
-  override def countSql(db: String, table: String, where: String) =
-    s"SELECT CAST(count(*) AS BIGINT) AS n FROM ${qualify(db, table)} WHERE $where"
-  override def minMaxSql(key: String, db: String, table: String, where: String) =
-    s"SELECT MIN($key) AS mn, MAX($key) AS mx FROM ${qualify(db, table)} WHERE $where"
   /** Second-precision strings in the planner's lenient layouts — Derby's
     * TIMESTAMP renders "yyyy-MM-dd HH:mm:ss.f" (space + fraction), which
     * none of the reference's four layouts parse. Second truncation matches
@@ -149,8 +144,8 @@ case object DerbyDialect extends JdbcDialect {
     * when the max was already whole — harmless, nothing exists past the
     * true max). TIMESTAMPADD is JDBC-escape-only in Derby, hence {fn}. */
   override def minMaxTimeSql(key: String, db: String, table: String, where: String) =
-    s"""SELECT SUBSTR(CAST(MIN($key) AS VARCHAR(29)), 1, 19) AS mn,
-       |  SUBSTR(CAST({fn TIMESTAMPADD(SQL_TSI_SECOND, 1, MAX($key))} AS VARCHAR(29)), 1, 19) AS mx
+    s"""SELECT SUBSTR(CAST(MIN($key) AS VARCHAR(29)), 1, 19),
+       |  SUBSTR(CAST({fn TIMESTAMPADD(SQL_TSI_SECOND, 1, MAX($key))} AS VARCHAR(29)), 1, 19)
        |FROM ${qualify(db, table)} WHERE $where""".stripMargin
   /** Derby rejects the ANSI `TIMESTAMP '...'` literal; it has a TIMESTAMP()
     * conversion function instead. */

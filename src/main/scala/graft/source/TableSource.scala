@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   *  - [[JdbcTableSource]] — the production path: `spark.read.jdbc(url,
   *    table, predicates, props)` turns each planner predicate into one Spark
   *    input partition (1000 executors ⇒ 1000 concurrent remote cursors,
-  *    bounded by the predicate count). Planning aggregates push down as
-  *    remote scalar queries.
+  *    bounded by the predicate count). Catalog queries, planning aggregates
+  *    and the reconciliation count run as driver-side statements on one
+  *    JDBC connection each ([[DriverJdbc]]), not as Spark jobs.
   *  - [[ParquetTableSource]] — the fixture path (no live RDBMS in the
   *    sandbox): a directory of parquet files is a database; predicates
   *    become partition filters on the same relation. Lets every layer above
@@ -305,9 +306,11 @@ object FileTableSource {
   val CorruptCol = "_corrupt_record"
 }
 
-/** JDBC-backed source for a real deployment: catalog queries and planning
-  * aggregates go through single-row JDBC reads; the data scan hands the
-  * planner's predicate array to spark.read.jdbc — one predicate per Spark
+/** JDBC-backed source for a real deployment. Catalog queries, planning
+  * aggregates and the reconciliation count are control statements: each
+  * runs on the driver as one statement on one connection
+  * ([[DriverJdbc]]), with no Spark job. The data scan hands the planner's
+  * predicate array to `spark.read.jdbc` — one predicate per Spark
   * partition. */
 final class JdbcTableSource(spark: SparkSession, dialect: JdbcDialect,
     host: String, port: Int, user: String, pass: String, defaultDb: String)
@@ -321,14 +324,21 @@ final class JdbcTableSource(spark: SparkSession, dialect: JdbcDialect,
   }
   private def url: String = dialect.driverUrl(host, port, user, pass, defaultDb)
 
-  private def sqlQuery(q: String): DataFrame =
-    spark.read.jdbc(url, s"($q) graft_sub", props)
+  private def column(sql: String): Seq[String] =
+    DriverJdbc.query(url, props, sql) { rs =>
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toVector
+    }
 
-  override def listDatabases(): Seq[String] =
-    sqlQuery(dialect.listDatabasesSql).collect().map(_.getString(0)).toSeq
+  /** The one row an aggregate statement returns. */
+  private def row[A](sql: String)(read: java.sql.ResultSet => A): A =
+    DriverJdbc.query(url, props, sql) { rs =>
+      if (!rs.next()) throw new IllegalStateException(s"no row from: $sql")
+      read(rs)
+    }
 
-  override def listTables(db: String): Seq[String] =
-    sqlQuery(dialect.listTablesSql(db)).collect().map(_.getString(0)).toSeq
+  override def listDatabases(): Seq[String] = column(dialect.listDatabasesSql)
+
+  override def listTables(db: String): Seq[String] = column(dialect.listTablesSql(db))
 
   override def scan(db: String, table: String, predicates: Seq[String],
       userPred: String): DataFrame = {
@@ -342,19 +352,29 @@ final class JdbcTableSource(spark: SparkSession, dialect: JdbcDialect,
   }
 
   override def count(db: String, table: String, where: String): Long =
-    sqlQuery(dialect.countSql(db, table, where)).head().getLong(0)
+    row(dialect.countSql(db, table, where))(_.getLong(1))
 
-  override def minMaxKey(db: String, table: String, key: String, where: String): (BigInt, BigInt) = {
-    val r = sqlQuery(dialect.minMaxSql(key, db, table, where)).head()
-    if (r.isNullAt(0)) (BigInt(0), BigInt(0))
-    else (BigInt(r.get(0).toString), BigInt(r.get(1).toString))
-  }
+  /** Key bounds, decoded exactly whatever the key column's scale (Spark
+    * reads Oracle `NUMBER` as `decimal(38,10)`, so `1` arrives as `1.00…`);
+    * a fractional key fails, naming the key. */
+  override def minMaxKey(db: String, table: String, key: String, where: String): (BigInt, BigInt) =
+    row(dialect.minMaxSql(key, db, table, where)) { rs =>
+      def whole(v: java.math.BigDecimal): BigInt =
+        try BigInt(v.toBigIntegerExact)
+        catch { case _: ArithmeticException =>
+          throw new IllegalArgumentException(
+            s"split key $key of $db.$table has the fractional value $v; a key split needs whole-number keys")
+        }
+      Option(rs.getBigDecimal(1)) match {
+        case None => (BigInt(0), BigInt(0)) // empty-range sentinel (reference A3)
+        case Some(mn) => (whole(mn), whole(rs.getBigDecimal(2)))
+      }
+    }
 
-  override def minMaxTime(db: String, table: String, key: String, where: String): (String, String) = {
-    val r = sqlQuery(dialect.minMaxTimeSql(key, db, table, where)).head()
-    (Option(r.get(0)).map(_.toString).getOrElse(""),
-     Option(r.get(1)).map(_.toString).getOrElse(""))
-  }
+  override def minMaxTime(db: String, table: String, key: String, where: String): (String, String) =
+    row(dialect.minMaxTimeSql(key, db, table, where)) { rs =>
+      (DriverJdbc.string(rs, 1), DriverJdbc.string(rs, 2))
+    }
 
   override def timestampLiteral(ts: String): String = dialect.timestampLiteral(ts)
 }

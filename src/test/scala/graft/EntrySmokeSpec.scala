@@ -12,6 +12,13 @@ class EntrySmokeSpec extends SparkSpec {
     assert(conf.get("spark.sql.shuffle.partitions") == "4")
     assert(conf.get("spark.ui.enabled") == "false")
     assert(spark.sparkContext.master == "local[4]")
+    assert(conf.get("spark.hadoop.fs.file.impl") == classOf[graft.fs.PosixLocalFileSystem].getName)
+    assert(conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[graft.fs.PosixLocalFs].getName)
+    // the cached file:// instance every local read and write goes through
+    // is the session's: nothing opened a local path before the recipe ran
+    assert(org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("file:///"),
+      spark.sessionState.newHadoopConf()).isInstanceOf[graft.fs.PosixLocalFileSystem])
     assert(spark.sql("SELECT simhash64(array('a', 'b')) AS h").schema
       .head.dataType == org.apache.spark.sql.types.LongType)
   }

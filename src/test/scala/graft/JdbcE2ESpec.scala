@@ -6,16 +6,19 @@ import graft.config.ArchiverConfig
 import graft.dml.DeleteBack
 import graft.plan.{ArchivePlanner, KeySplitPlan}
 import graft.sink.StagedLoader
-import graft.source.{DerbyDialect, JdbcTableSource}
+import graft.source.{DerbyDialect, DriverJdbc, JdbcTableSource}
 
 /** The flagship archival path against a LIVE JDBC engine — embedded Derby,
   * whose jars ship with Spark, so `spark.read.jdbc(url, table, predicates,
   * props)` actually executes (remote cursors, real catalog metadata, real
   * DML) with zero network egress. This is the tier the reference covers
   * with live-DBMS CI (cmd/main_test.go:25-59, ci.yaml:12-44; scan at
-  * source/mysql.go:182-296): discovery, planning pushdown, the partitioned
-  * predicate scan, schema probe, staged load, reconciliation, and
-  * delete-back DML — none of it through the parquet stand-in.
+  * source/mysql.go:182-296): discovery, the planning aggregates, the
+  * partitioned predicate scan, schema probe, staged load, reconciliation,
+  * and delete-back DML — none of it through the parquet stand-in.
+  * Discovery, the planning aggregates, the reconciliation count and the
+  * delete-back run as driver-side statements on one JDBC connection each
+  * ([[graft.source.DriverJdbc]]), with no Spark job; only the scan is one.
   */
 class JdbcE2ESpec extends SparkSpec {
 
@@ -63,6 +66,14 @@ class JdbcE2ESpec extends SparkSpec {
   private def source =
     new JdbcTableSource(spark, DerbyDialect, "", 0, "", "", locator)
 
+  private def url = DerbyDialect.driverUrl("", 0, "", "", locator)
+
+  private def derbyProps: java.util.Properties = {
+    val p = new java.util.Properties()
+    DerbyDialect.scanOptions.foreach { case (k, v) => p.setProperty(k, v) }
+    p
+  }
+
   private def cfg = ArchiverConfig(
     databaseType = "derby",
     sourceDB = "ARCHDB", sourceTable = "ORDERS_ARCHIVE",
@@ -91,6 +102,74 @@ class JdbcE2ESpec extends SparkSpec {
       (BigInt(0), BigInt(0)))
     val (mnT, mxT) = src.minMaxTime("ARCHDB", "ORDERS_ARCHIVE", "TS", "1=1")
     assert(mnT.startsWith("2024-03-01 00:01") && mxT.startsWith("2024-03-01 03:20"))
+  }
+
+  test("discovery, planning, count, minMaxTime and delete-back start no Spark job") {
+    seed()
+    val src = source
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(src.expandDbTables(Seq("ARCH.*@ORDERS.*")) ==
+        Map("ARCHDB" -> Seq("ORDERS_ARCHIVE")))
+      assert(ArchivePlanner.plan(src, cfg, "ARCHDB", "ORDERS_ARCHIVE")
+        .isInstanceOf[KeySplitPlan])
+      assert(src.count("ARCHDB", "ORDERS_ARCHIVE", "1=1") == 200L)
+      assert(src.minMaxTime("ARCHDB", "ORDERS_ARCHIVE", "TS", "1=1")._1.nonEmpty)
+      assert(DeleteBack.executeJdbc(url, derbyProps,
+        DeleteBack.deleteSql("ARCHDB", "ORDERS_ARCHIVE", "ID > 9999", limit = None)) == 0L)
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, "control statements must not run as Spark jobs")
+  }
+
+  test("a DECIMAL split key of whole values plans exactly; a fractional one " +
+       "fails naming the key") {
+    seed()
+    withConn { c =>
+      val st = c.createStatement()
+      try { st.execute("DROP TABLE ARCHDB.DEC_KEYS"): Unit }
+      catch { case _: java.sql.SQLException => () }
+      st.execute("CREATE TABLE ARCHDB.DEC_KEYS (K DECIMAL(12,2) NOT NULL, V INT)")
+      st.execute("INSERT INTO ARCHDB.DEC_KEYS VALUES (1.00, 1), (7.00, 2), (40.00, 3), (40.50, 4)")
+      st.close()
+    }
+    val src = source
+    assert(src.minMaxKey("ARCHDB", "DEC_KEYS", "K", "K <= 40") == (BigInt(1), BigInt(40)))
+    assert(src.minMaxKey("ARCHDB", "DEC_KEYS", "K", "K > 99") == (BigInt(0), BigInt(0)))
+    val ex = intercept[IllegalArgumentException](
+      src.minMaxKey("ARCHDB", "DEC_KEYS", "K", "1=1"))
+    assert(ex.getMessage.contains("split key K") && ex.getMessage.contains("40.50"),
+      ex.getMessage)
+  }
+
+  test("driver-side statements run the reader's sessionInitStatement first") {
+    seed()
+    val props = derbyProps
+    props.setProperty("sessionInitStatement", "SET SCHEMA ARCHDB")
+    val sql = "SELECT COUNT(*) FROM ORDERS_ARCHIVE"
+    assert(DriverJdbc.query(url, props, sql) { rs => rs.next(); rs.getLong(1) } == 200L)
+    // without it the unqualified name resolves in the default schema
+    intercept[java.sql.SQLException](DriverJdbc.query(url, derbyProps, sql)(_.next()))
+  }
+
+  test("driver-side minMaxTime strings are the ones Spark's JDBC reader renders") {
+    seed()
+    val q = """SELECT TIMESTAMP('2024-03-01 00:01:02.123456789') AS A,
+              |  DATE('2024-03-01') AS B, CAST(NULL AS TIMESTAMP) AS C,
+              |  MIN(TS) AS D, MAX(STATUS) AS E
+              |FROM ARCHDB.ORDERS_ARCHIVE""".stripMargin
+    val driver = DriverJdbc.query(url, derbyProps, q) { rs =>
+      rs.next(); (1 to 5).map(DriverJdbc.string(rs, _))
+    }
+    val row = spark.read.jdbc(url, s"($q) T", derbyProps).head()
+    assert(driver == (0 until 5).map(i => Option(row.get(i)).fold("")(_.toString)))
+    assert(driver.head == "2024-03-01 00:01:02.123456")
   }
 
   test("partitioned scan: one Spark input partition per planner predicate; " +
@@ -124,12 +203,9 @@ class JdbcE2ESpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-jdbc-e2e").toString
     val scanDf = src.scan("ARCHDB", "ORDERS_ARCHIVE", Seq.empty, "1=1")
     val loader = new StagedLoader(spark, s"$root/target", scanDf.schema)
-    val props = new java.util.Properties()
-    DerbyDialect.scanOptions.foreach { case (k, v) => props.setProperty(k, v) }
     val archiver = new Archiver(spark, cfg.copy(deleteAfterSync = true),
       src, loader, s"$root/staging", pacingSleep = _ => (),
-      deleteBackFn = (db, t, where) => DeleteBack.executeJdbc(
-        DerbyDialect.driverUrl("", 0, "", "", locator), props,
+      deleteBackFn = (db, t, where) => DeleteBack.executeJdbc(url, derbyProps,
         DeleteBack.deleteSql(db, t, where, limit = None)))
     val report = archiver.run()
     assert(report.reconciliation.correct, report.toString)

@@ -13,7 +13,8 @@ measurement SCALE.md stage diagnoses cite (round-12 verdict ask #1).
 previous job ended, its duration in ms, its task count and the call site of
 the SQL execution that ran it (the job's own call site outside SQL). Stage
 walls at 0.1 s resolution hide sub-second jobs; this view counts them, e.g.
-the jobs one archive run issues.
+the jobs one archive run starts. It ends with a per-call-site summary: the
+job count and total ms of each site, most jobs first.
 """
 import json
 import os
@@ -66,6 +67,7 @@ def jobs(path):
     print(f"{len(starts)} jobs")
     print(f"{'job':>5} {'gap_ms':>7} {'ms':>7} {'tasks':>6}  call site")
     prev_end = None
+    by_site = {}
     for job in sorted(starts, key=lambda j: (starts[j]["Submission Time"], j)):
         ev = starts[job]
         sub = ev["Submission Time"]
@@ -78,6 +80,12 @@ def jobs(path):
         print(f"{job:>5} {gap:>7} {dur:>7} {tasks.get(job, 0):>6}  {site[:110]}")
         if end is not None:
             prev_end = max(end, prev_end or end)
+        n, ms = by_site.get(site, (0, 0))
+        by_site[site] = (n + 1, ms + (0 if end is None else end - sub))
+    print(f"\n{len(by_site)} call sites")
+    print(f"{'jobs':>5} {'ms':>7}  call site")
+    for site, (n, ms) in sorted(by_site.items(), key=lambda kv: (-kv[1][0], -kv[1][1])):
+        print(f"{n:>5} {ms:>7}  {site[:110]}")
 
 
 def main():
