@@ -6,12 +6,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `SPARK_GRAFT_SF_DIR` (default sf0.1), printed as one JSON line.
   *
   * Measures steady-state engine throughput: one untimed warmup pass runs
-  * every query first (JIT compilation, whole-stage-codegen class
-  * generation and caching, parquet footer reads, shuffle/broadcast infra
-  * init — all one-time JVM costs a long-running cluster amortizes away),
-  * then the timed pass runs the suite in sorted name order. Cold-vs-warm
-  * otherwise dominates per-query numbers: the wide to_json/from_json
-  * codegen in f1_ndjson_roundtrip alone is ~4 s cold vs ~1.9 s warm.
+  * every query first (JIT compilation, whole-stage-codegen compilation,
+  * parquet footer reads, shuffle/broadcast infra init — all one-time JVM
+  * costs a long-running cluster amortizes away), then the timed pass runs
+  * the suite in sorted name order. Cold-vs-warm otherwise dominates
+  * per-query numbers: the wide to_json/from_json codegen in
+  * f1_ndjson_roundtrip alone is ~4 s cold vs ~1.9 s warm. The warmup
+  * keeps the generated classes only because `GraftSession` sizes Spark's
+  * codegen class cache above the suite's ~2,000 classes; at Spark's
+  * default of 100 the timed pass recompiled most of them. The sidecar
+  * records the compiles of each pass (`compiles`), so a regression of
+  * that sizing shows in the bench's own record.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -19,7 +24,8 @@ object Bench {
     val spark = GraftSession.local()
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Untimed warmup pass (see scaladoc).
-    names.foreach(name => timeQuery(spark, sfDir, name)(_.count()))
+    val (_, warmupCompiles) =
+      compiling(names.foreach(name => timeQuery(spark, sfDir, name)(_.count())))
     // Timed pass: best of two runs per query — single-run totals swing
     // ±30% on this box (GC debt and scheduler jitter land on random
     // queries; observed across rounds), and min-of-2 suppresses exactly
@@ -28,15 +34,15 @@ object Bench {
     // listed in the JSON and the process exits non-zero so a regression
     // can't masquerade as a speedup.
     System.gc()
-    val results = names.map { name =>
+    val (results, compiled) = names.map { name =>
       def once() = timeQuery(spark, sfDir, name)(_.count())
       // a failed query reports -1 and contributes nothing to the total —
       // its fast-fail elapsed must not read as a speedup anywhere
-      (once(), once()) match {
-        case (Some(t1), Some(t2)) => (name, math.min(t1, t2), true)
-        case _                    => (name, -1.0, false)
+      compiling((once(), once())) match {
+        case ((Some(t1), Some(t2)), n) => ((name, math.min(t1, t2), true), name -> n)
+        case (_, n)                    => ((name, -1.0, false), name -> n)
       }
-    }
+    }.unzip
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + Jfmt.num(v) }
       .mkString("{", ",", "}")
     val failed = results.collect { case (k, _, false) => k }
@@ -47,8 +53,11 @@ object Bench {
     // the line. So: the FULL map goes to a sidecar file the judge reads
     // directly, and stdout carries a compact line (totals + failures +
     // the 10 slowest queries) that fits the capture window whole.
+    val perQuery = compiled.map { case (k, n) => s"\"" + k + "\":" + n }.mkString("{", ",", "}")
+    val compiles =
+      s"""{"warmup":$warmupCompiles,"timed":${compiled.map(_._2).sum},"timed_queries":$perQuery}"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","compiles":$compiles}"""
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_SIDECAR",
       "bench_sidecar.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
@@ -76,6 +85,16 @@ object Bench {
       System.err.println(s"FAILED $name: $e")
       None
     }
+  }
+
+  /** `body`'s result and the number of classes Spark's code generator
+    * compiled while it ran: cache misses of the codegen class cache, from
+    * Spark's own compile-time histogram. */
+  def compiling[A](body: => A): (A, Long) = {
+    val c = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = c.getCount
+    val a = body
+    (a, c.getCount - before)
   }
 
   /** Run the COMPLETE plan and discard its rows: under count() Catalyst

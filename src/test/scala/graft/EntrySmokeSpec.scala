@@ -11,6 +11,7 @@ class EntrySmokeSpec extends SparkSpec {
     assert(conf.get("spark.sql.adaptive.enabled") == "true")
     assert(conf.get("spark.sql.shuffle.partitions") == "4")
     assert(conf.get("spark.ui.enabled") == "false")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "4096") // in effect: CodegenCacheSpec
     assert(spark.sparkContext.master == "local[4]")
     assert(conf.get("spark.hadoop.fs.file.impl") == classOf[graft.fs.PosixLocalFileSystem].getName)
     assert(conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==

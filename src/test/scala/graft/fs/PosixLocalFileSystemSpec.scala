@@ -7,16 +7,18 @@ import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
-import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 import graft.SparkSpec
 import graft.sink.StagedLoader
 
 /** [[PosixLocalFileSystem]] sets the permission bits stock Hadoop sets,
-  * without a process per file. The fork check is a JFR recording of
-  * `jdk.ProcessStart` events: stock Hadoop without libhadoop records one
-  * `chmod` per local file or directory it writes. */
+  * and answers symlink lookups, without a process per call. The fork check
+  * is a JFR recording of `jdk.ProcessStart` events: stock Hadoop without
+  * libhadoop records one `chmod` per local file or directory it writes and
+  * one `readlink` per link-status lookup. */
 class PosixLocalFileSystemSpec extends SparkSpec {
 
   private def hconf = spark.sessionState.newHadoopConf()
@@ -115,5 +117,41 @@ class PosixLocalFileSystemSpec extends SparkSpec {
     assert(mode(root.resolve("c")) == oct("750"))
     assert(mode(root.resolve("c/state")) == oct("640"))
     assert(Files.exists(root.resolve("c/.state.crc")), "checksummed, as stock LocalFs")
+  }
+
+  test("a FileContext rename forks no process; link status comes from java.nio") {
+    val fc = FileContext.getFileContext(URI.create("file:///"), hconf)
+    val root = Files.createTempDirectory("graft-rename")
+    def at(name: String) = new Path(root.toUri.toString, name)
+    Seq("a", "b").foreach(n => fc.create(at(n), java.util.EnumSet.of(CreateFlag.CREATE)).close())
+    // a streaming checkpoint commit: temp file renamed onto a new name,
+    // then over an existing one
+    val started = forks {
+      fc.rename(at("a"), at("c"), Options.Rename.NONE)
+      fc.rename(at("b"), at("c"), Options.Rename.OVERWRITE)
+    }
+    assert(started.isEmpty, s"processes started: $started")
+    assert(Files.exists(root.resolve("c")) && !Files.exists(root.resolve("a")) &&
+      !Files.exists(root.resolve("b")))
+
+    def raw(fs: RawLocalFileSystem) = { fs.initialize(URI.create("file:///"), hconf); fs }
+    val (ours, stock) = (raw(new PosixRawLocalFileSystem), raw(new RawLocalFileSystem))
+    def fields(s: FileStatus) = (s.getPath, s.getLen, s.isDirectory, s.isSymlink,
+      s.getModificationTime, s.getPermission, s.getOwner, s.getGroup,
+      s.getReplication, s.getBlockSize)
+    // a regular file or directory: stock getFileStatus's fields
+    for (p <- Seq(at("c"), new Path(root.toUri.toString)))
+      assert(fields(ours.getFileLinkStatus(p)) == fields(stock.getFileStatus(p)))
+    // stock never sees a link (it forks `readlink` on the `file:` path);
+    // a real symlink now reports one, with its target
+    Files.createSymbolicLink(root.resolve("l"), root.resolve("c"))
+    val stockStarted = forks { assert(!stock.getFileLinkStatus(at("l")).isSymlink) }
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable)
+      assert(stockStarted.exists(_.contains("readlink")), stockStarted)
+    val link = fc.getFileLinkStatus(at("l"))
+    assert(link.isSymlink && !link.isDirectory)
+    assert(link.getSymlink == new Path(root.resolve("c").toUri.toString))
+    assert(fc.getLinkTarget(at("l")) == new Path(root.resolve("c").toString))
+    intercept[java.io.IOException](fc.getLinkTarget(at("c")))
   }
 }
