@@ -97,7 +97,7 @@ final class Archiver(spark: SparkSession, cfg: ArchiverConfig,
   def runIncremental(): RunReport = {
     val key = cfg.sourceSplitKey
     require(key.nonEmpty, "incremental sync requires sourceSplitKey")
-    // maxKey restores an interrupted compaction swap before reading the
+    // maxKey restores an interrupted rename-aside swap before reading the
     // watermark (StagedLoader.ensureRecovered owns that invariant)
     runDelta(key, loader.maxKey(key).map(w => (s"$key > $w", s"delta-gt-$w")))
   }

@@ -7,6 +7,15 @@ package graft.config
   * Validation semantics from config/config.go:90-137 (`preCheckConfig` /
   * `validateSourceSplitTimeKey`), as pure functions returning the normalized
   * config or an error instead of panicking.
+  *
+  * Not every field drives the engine:
+  *  - accepted so reference configs load, read by no main code:
+  *    `databendDSN`, `databendTable` (the target is `Main`'s `<targetDir>`
+  *    argument), `userStage` (normalized by [[ArchiverConfig.preCheck]]
+  *    only), `copyPurge`, `copyForce`, `disableVariantCheck`, `sourceQuery`;
+  *  - the connection fields `databaseType`, `sourceHost`, `sourcePort`,
+  *    `sourceUser`, `sourcePass`: parsed; no JDBC wiring in `Main` yet
+  *    (ROADMAP direction 6).
   */
 final case class ArchiverConfig(
     databaseType: String = "mysql",

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque binary
@@ -210,24 +211,7 @@ object MultimodalOps {
         |SELECT doc_id, CAST(sum(shot_len) AS BIGINT) AS n_frames,
         |  count(*) AS n_shots, max(shot_len) AS longest_shot
         |FROM shots GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val byFrame = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
-      documents(s, d).where(col("doc_id") < 200)
-        .select(col("doc_id"), (lit(10) + col("doc_id") % 110).as("duration_s"))
-        .select(col("doc_id"),
-          explode(expr("sequence(0, duration_s * 30 - 1, 60)")).as("frame_idx"))
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))
-        .withColumn("f", (col("doc_id") * 131 + col("frame_idx") * 7919) % 256)
-        .withColumn("b",
-          when(abs(col("f") - lag(col("f"), 1).over(byFrame)) > 128, 1).otherwise(0))
-        .withColumn("shot", sum(col("b")).over(
-          byFrame.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("doc_id"), col("shot"))
-        .agg(count(lit(1)).as("shot_len"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("shot_len")).cast("bigint").as("n_frames"),
-             count(lit(1)).as("n_shots"), max(col("shot_len")).as("longest_shot"))
-        .orderBy(col("doc_id"))
+      shotSummary(shotIds(stubFrameFeatures(s, d)))
     },
 
     // Keyframe selection — the step after shot segmentation in a video
@@ -271,31 +255,7 @@ object MultimodalOps {
         |SELECT doc_id, CAST(shot AS BIGINT) AS shot, CAST(shot_len AS BIGINT) AS shot_len,
         |  frame_idx AS key_frame, CAST(sharp AS BIGINT) AS key_sharp
         |FROM rk WHERE rn = 1 ORDER BY doc_id, shot""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val byFrame = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
-      documents(s, d).where(col("doc_id") < 200)
-        .select(col("doc_id"), (lit(10) + col("doc_id") % 110).as("duration_s"))
-        .select(col("doc_id"),
-          explode(expr("sequence(0, duration_s * 30 - 1, 60)")).as("frame_idx"))
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))
-        .withColumn("f", (col("doc_id") * 131 + col("frame_idx") * 7919) % 256)
-        .withColumn("sharp",
-          (col("doc_id") * 37 + col("frame_idx") * 104729) % 1000)
-        .withColumn("b",
-          when(abs(col("f") - lag(col("f"), 1).over(byFrame)) > 128, 1).otherwise(0))
-        .withColumn("shot", sum(col("b")).over(
-          byFrame.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("doc_id"), col("shot"))
-            .orderBy(col("sharp").desc, col("frame_idx"))))
-        .withColumn("shot_len", count(lit(1)).over(
-          Window.partitionBy(col("doc_id"), col("shot"))))
-        .where(col("rn") === 1)
-        .select(col("doc_id"), col("shot").cast("long").as("shot"),
-          col("shot_len").cast("long").as("shot_len"),
-          col("frame_idx").as("key_frame"),
-          col("sharp").cast("long").as("key_sharp"))
-        .orderBy(col("doc_id"), col("shot"))
+      keyframes(shotIds(stubFrameFeatures(s, d)))
     },
 
     // Shot-boundary detection over REAL DECODED FRAMES — the composed
@@ -342,18 +302,8 @@ object MultimodalOps {
         |SELECT doc_id, CAST(sum(shot_len) AS BIGINT) AS n_frames,
         |  count(*) AS n_shots, max(shot_len) AS longest_shot
         |FROM shots GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val frames = documents(s, d).where(col("doc_id") < 24)
-        .select(col("doc_id"), (lit(10) + col("doc_id") % 110).as("duration_s"))
-        .select(col("doc_id"),
-          explode(expr("sequence(0, duration_s * 30 - 1, 60)")).as("frame_idx"))
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))
-      shotIds(decodedFrameFeatures(s, Tables.fan(s, frames)))
-        .groupBy(col("doc_id"), col("shot"))
-        .agg(count(lit(1)).as("shot_len"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("shot_len")).cast("bigint").as("n_frames"),
-             count(lit(1)).as("n_shots"), max(col("shot_len")).as("longest_shot"))
-        .orderBy(col("doc_id"))
+      shotSummary(shotIds(
+        decodedFrameFeatures(s, Tables.fan(s, sampledFrames(s, d, 24)))))
     },
 
     // Keyframe selection over the same real decoded frames: the argmax
@@ -404,24 +354,8 @@ object MultimodalOps {
         |SELECT doc_id, CAST(shot AS BIGINT) AS shot, CAST(shot_len AS BIGINT) AS shot_len,
         |  frame_idx AS key_frame, CAST(sharp AS BIGINT) AS key_sharp
         |FROM rk WHERE rn = 1 ORDER BY doc_id, shot""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val frames = documents(s, d).where(col("doc_id") < 24)
-        .select(col("doc_id"), (lit(10) + col("doc_id") % 110).as("duration_s"))
-        .select(col("doc_id"),
-          explode(expr("sequence(0, duration_s * 30 - 1, 60)")).as("frame_idx"))
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))
-      shotIds(decodedFrameFeatures(s, Tables.fan(s, frames)))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("doc_id"), col("shot"))
-            .orderBy(col("sharp").desc, col("frame_idx"))))
-        .withColumn("shot_len", count(lit(1)).over(
-          Window.partitionBy(col("doc_id"), col("shot"))))
-        .where(col("rn") === 1)
-        .select(col("doc_id"), col("shot").cast("long").as("shot"),
-          col("shot_len").cast("long").as("shot_len"),
-          col("frame_idx").as("key_frame"),
-          col("sharp").cast("long").as("key_sharp"))
-        .orderBy(col("doc_id"), col("shot"))
+      keyframes(shotIds(
+        decodedFrameFeatures(s, Tables.fan(s, sampledFrames(s, d, 24)))))
     },
 
     // A/V alignment driven by the REAL AUDIO DECODE: the audio window
@@ -556,13 +490,56 @@ object MultimodalOps {
     * running-sum gaps-and-islands topology shared by the stand-in and
     * decoded shot queries (two window passes, one partition key). */
   private[graft] def shotIds(feat: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byFrame = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
     feat
       .withColumn("b",
         when(abs(col("f") - lag(col("f"), 1).over(byFrame)) > 128, 1).otherwise(0))
       .withColumn("shot", sum(col("b")).over(
         byFrame.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** The video stand-in's sampled frame grid: every doc below `docs` is a
+    * (10 + doc_id % 110)-second clip at 30 fps, and every 60th frame is
+    * kept. The rows are generated on the executors (sequence + explode). */
+  private def sampledFrames(s: SparkSession, d: String, docs: Int): DataFrame =
+    documents(s, d).where(col("doc_id") < docs)
+      .select(col("doc_id"), (lit(10) + col("doc_id") % 110).as("duration_s"))
+      .select(col("doc_id"),
+        explode(expr("sequence(0, duration_s * 30 - 1, 60)")).as("frame_idx"))
+      .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))
+
+  /** The decode stub's per-frame features over the first 200 docs' frames:
+    * integer hashes of (doc, frame) for the break signal `f` and the
+    * keyframe score `sharp` (the codec stays out of the contract). */
+  private def stubFrameFeatures(s: SparkSession, d: String): DataFrame =
+    sampledFrames(s, d, 200)
+      .withColumn("f", (col("doc_id") * 131 + col("frame_idx") * 7919) % 256)
+      .withColumn("sharp",
+        (col("doc_id") * 37 + col("frame_idx") * 104729) % 1000)
+
+  /** Per-video summary of [[shotIds]]: frames, shots, longest shot. */
+  private def shotSummary(shots: DataFrame): DataFrame =
+    shots.groupBy(col("doc_id"), col("shot"))
+      .agg(count(lit(1)).as("shot_len"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("shot_len")).cast("bigint").as("n_frames"),
+           count(lit(1)).as("n_shots"), max(col("shot_len")).as("longest_shot"))
+      .orderBy(col("doc_id"))
+
+  /** One keyframe per shot of [[shotIds]]: the argmax of `sharp`, earliest
+    * frame on ties — a row_number per (doc, shot), no new shuffle key. */
+  private def keyframes(shots: DataFrame): DataFrame = {
+    val byShot = Window.partitionBy(col("doc_id"), col("shot"))
+    shots
+      .withColumn("rn", row_number().over(
+        byShot.orderBy(col("sharp").desc, col("frame_idx"))))
+      .withColumn("shot_len", count(lit(1)).over(byShot))
+      .where(col("rn") === 1)
+      .select(col("doc_id"), col("shot").cast("long").as("shot"),
+        col("shot_len").cast("long").as("shot_len"),
+        col("frame_idx").as("key_frame"),
+        col("sharp").cast("long").as("key_sharp"))
+      .orderBy(col("doc_id"), col("shot"))
   }
 
   /** The PNG encode→decode→feature kernel behind mm_image_features and

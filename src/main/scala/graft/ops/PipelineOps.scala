@@ -250,6 +250,37 @@ object PipelineOps {
       .orderBy(col("source"), col("bin"))
   }
 
+  /** Decontamination's gram relations: every document's distinct 8-grams
+    * as (doc_id, source, gram), and the distinct grams of the eval split
+    * (doc_id ≡ 7 mod 10, the stand-in for an external benchmark suite).
+    * Docs under 8 words contribute their whole text as one gram. */
+  private def decontamGrams(s: org.apache.spark.sql.SparkSession, d: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val grams = Tables.fan(s, documents(s, d))
+      .select(col("doc_id"), col("source"),
+        explode(word_ngrams(graft.functions.Tokenize.ws_tokens(col("text")), 8)).as("gram"))
+    (grams, grams.where(col("doc_id") % 10 === 7).select(col("gram")).distinct())
+  }
+
+  /** Per-source decontamination report: the train docs (doc_id ≢ 7 mod 10)
+    * left-joined to the distinct (doc_id, source) pairs of `contamGrams`,
+    * the train grams an eval gram confirmed. */
+  private def decontamReport(s: org.apache.spark.sql.SparkSession, d: String,
+      contamGrams: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val contam = contamGrams.select(col("doc_id"), col("source")).distinct()
+      .withColumn("is_contam", lit(1))
+    documents(s, d).where(col("doc_id") % 10 =!= 7)
+      .select(col("doc_id"), col("source"))
+      .join(contam, Seq("doc_id", "source"), "left_outer")
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_train"),
+        count(col("is_contam")).as("n_contaminated"),
+        coalesce(sum(when(col("is_contam") === 1, col("doc_id"))), lit(0L))
+          .as("contam_id_sum"))
+      .orderBy(col("source"))
+  }
+
   val all: Seq[Q] = Seq(
 
     // PII redaction: synthesize deterministic PII into each document (the
@@ -703,24 +734,9 @@ object PipelineOps {
         |FROM train t LEFT JOIN contam c
         |  ON t.doc_id = c.doc_id AND t.source = c.source
         |GROUP BY t.source ORDER BY t.source""".stripMargin) { (s, d) =>
-      val grams = Tables.fan(s, documents(s, d))
-        .select(col("doc_id"), col("source"),
-          explode(word_ngrams(graft.functions.Tokenize.ws_tokens(col("text")), 8)).as("gram"))
-      val evalGrams = grams.where(col("doc_id") % 10 === 7)
-        .select(col("gram")).distinct()
-      val contam = grams.where(col("doc_id") % 10 =!= 7)
-        .join(broadcast(evalGrams), Seq("gram"), "left_semi")
-        .select(col("doc_id"), col("source")).distinct()
-        .withColumn("is_contam", lit(1))
-      documents(s, d).where(col("doc_id") % 10 =!= 7)
-        .select(col("doc_id"), col("source"))
-        .join(contam, Seq("doc_id", "source"), "left_outer")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_train"),
-          count(col("is_contam")).as("n_contaminated"),
-          coalesce(sum(when(col("is_contam") === 1, col("doc_id"))), lit(0L))
-            .as("contam_id_sum"))
-        .orderBy(col("source"))
+      val (grams, evalGrams) = decontamGrams(s, d)
+      decontamReport(s, d, grams.where(col("doc_id") % 10 =!= 7)
+        .join(broadcast(evalGrams), Seq("gram"), "left_semi"))
     },
 
     // Decontamination, BLOOM-PREFILTER flavor — the same contract as
@@ -762,11 +778,7 @@ object PipelineOps {
         |FROM train t LEFT JOIN contam c
         |  ON t.doc_id = c.doc_id AND t.source = c.source
         |GROUP BY t.source ORDER BY t.source""".stripMargin) { (s, d) =>
-      val grams = Tables.fan(s, documents(s, d))
-        .select(col("doc_id"), col("source"),
-          explode(word_ngrams(graft.functions.Tokenize.ws_tokens(col("text")), 8)).as("gram"))
-      val evalGrams = grams.where(col("doc_id") % 10 === 7)
-        .select(col("gram")).distinct()
+      val (grams, evalGrams) = decontamGrams(s, d)
       // The bloom build is SIZED from the documents footer row count
       // (driver-side metadata, no Spark job — the pack_sequences probe
       // pattern): ~6 distinct eval grams per corpus doc (10% eval rate ×
@@ -797,19 +809,8 @@ object PipelineOps {
       // at the 13M-doc tier with "not enough memory to build hash map"
       // (UnsafeHashedRelation per-partition build, 32 tasks competing).
       // SMJ spills both sides; confirm traffic stays ∝ bloom survivors.
-      val contam = survivors
-        .join(evalGrams.hint("MERGE"), Seq("gram"), "left_semi")
-        .select(col("doc_id"), col("source")).distinct()
-        .withColumn("is_contam", lit(1))
-      documents(s, d).where(col("doc_id") % 10 =!= 7)
-        .select(col("doc_id"), col("source"))
-        .join(contam, Seq("doc_id", "source"), "left_outer")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_train"),
-          count(col("is_contam")).as("n_contaminated"),
-          coalesce(sum(when(col("is_contam") === 1, col("doc_id"))), lit(0L))
-            .as("contam_id_sum"))
-        .orderBy(col("source"))
+      decontamReport(s, d,
+        survivors.join(evalGrams.hint("MERGE"), Seq("gram"), "left_semi"))
     },
 
     // Vocabulary construction + OOV audit — the tokenizer-training precursor:

@@ -844,15 +844,15 @@ object RelationalOps {
         |  count(*) AS n_lines,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s0, d) =>
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
       // fixture-scale orders would broadcast, silently bypassing the
-      // co-location under test — force the shuffle-join family so the
-      // exchange-free bucketed path is what actually executes (the
-      // bloom_runtime_filter_join session-clone pattern)
-      val s = s0.newSession()
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val (lt, ot) = bucketedOrderTables(s0, d)
-      s.table(lt).join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
+      // co-location under test — the MERGE hint keeps the sort-merge join
+      // so the exchange-free bucketed path is what actually executes. A
+      // hint, not a session clone with broadcast off: every new session
+      // recompiles all of the query's generated code.
+      val (lt, ot) = bucketedOrderTables(s, d)
+      s.table(lt).hint("merge")
+        .join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_lines"),
           sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
@@ -865,9 +865,7 @@ object RelationalOps {
     * order key (8 buckets, sorted) once per (session, fixture) and
     * registers them in the catalog; returns the table names. The layout
     * cost is paid once — exactly how a production lake amortizes
-    * co-location. The tables land in the EXTERNAL catalog, shared with
-    * every `newSession` clone of `s`, so callers pass their base session
-    * and read through the clone. */
+    * co-location. */
   private[graft] def bucketedOrderTables(s: SparkSession,
       d: String): (String, String) = {
     val tag = java.lang.Long.toHexString(

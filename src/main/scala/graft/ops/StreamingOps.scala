@@ -24,130 +24,6 @@ object StreamingOps {
 
   private val runId = new AtomicLong(0)
 
-  /** State-store provider flip rule — a MEMORY bound, not a latency
-    * crossover, because the measured curve says there is no latency
-    * crossover to find: the HDFS-backed in-memory map provider wins
-    * outright at EVERY tier that fits heap (3M keys: 6.4 s vs RocksDB
-    * 15.4 s, `x_stream_dedup_3m_crossover`; 30M keys: 19.1 s vs
-    * 134.5 s, `x_stream_30m` — the decade run FALSIFIED the
-    * working hypothesis that 30M would flip the race; RocksDB's
-    * per-batch native open/commit + changelog write amplification
-    * grows with state and never catches up). What actually flips is
-    * SURVIVABILITY: the HDFS-backed provider's per-partition HashMap
-    * is an in-memory-by-construction structure — the same genus as
-    * the two r10 decade-tier OOM catches — whose footprint
-    * (state bytes × retained versions) must fit executor heap, while
-    * RocksDB keeps state native+disk and is the only shape whose
-    * bound involves no heap term. So the gate projects the
-    * per-executor state share against a heap budget: estimated state
-    * bytes (keys × bytes/key — the source's parquet footer row count
-    * is an upper bound on keys) ÷ executors > 20% of executor heap
-    * ⇒ RocksDB. At the local harness envelope (16 GiB, 1 executor)
-    * the measured 30M×~100 B tier sits at 3 GB — under the 3.4 GB
-    * budget, consistent with its clean, winning in-memory run — and
-    * the flip lands at ~34M×100 B locally, or ~0.8 GB/executor on a
-    * 4 GiB-executor cluster. The env override (`GRAFT_STATE_STORE`)
-    * still wins for operators who measured their own curve. Pure
-    * driver-side arithmetic, GateSpec-pinned. */
-  private[graft] val StateHeapBudgetFraction = 0.2
-
-  /** Bytes/key by state SHAPE, and the rewrite-retention factor that
-    * makes the gate shape-aware (r12, verdict ask #3). Key-set state
-    * (dropDuplicates: the key exists, no value) measures ~100 B/key in
-    * the HDFS-backed map; struct-per-key state (fMGWS sessions: a
-    * start/last/count struct) ~150 B. Rewrite-heavy shapes — every
-    * batch `state.update()`s every active key — additionally retain
-    * the PREVIOUS map version alongside the new one in the HDFS-backed
-    * provider (its version chain shares unchanged entries; a full
-    * rewrite shares nothing), so their effective heap mass doubles.
-    * The four measured corners this law reproduces (local envelope,
-    * 16 GiB, 1 executor): key-set 3M and 30M keys stay in-memory and
-    * WIN there (6.4 vs 15.4 s; 19.1 vs 134.5 s — `x_stream_30m`);
-    * struct 3M stays in-memory and wins (4.5 vs 14.4 s,
-    * `x_stream_sessionize_3m`); struct 30M = 30M × 150 B × 2 = 9 GB —
-    * past the 3.4 GB budget — flips to RocksDB, which indeed wins
-    * there on latency (71.0 vs 97.4 s, `x_stream_sessionize_30m`).
-    * The r11 rule would have kept sessionize-30M in-memory and left
-    * 27% on the table; the inversion was memory pressure all along. */
-  private[graft] val KeySetBytesPerKey = 100
-  private[graft] val StructBytesPerKey = 150
-  private[graft] val RewriteRetentionFactor = 2L
-
-  private[graft] def effectiveStateBytes(estKeys: Long, bytesPerKey: Int,
-      rewriteHeavy: Boolean): Long =
-    estKeys * bytesPerKey.toLong *
-      (if (rewriteHeavy) RewriteRetentionFactor else 1L)
-
-  private[graft] def rocksDbStateGate(estStateBytes: Long, executors: Int,
-      heapBytesPerExecutor: Long): Boolean =
-    estStateBytes.toDouble / math.max(1, executors) >
-      StateHeapBudgetFraction * heapBytesPerExecutor
-
-  private[graft] def stateProviderFor(estStateBytes: Long, executors: Int,
-      heapBytesPerExecutor: Long): String =
-    if (rocksDbStateGate(estStateBytes, executors, heapBytesPerExecutor))
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    else
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-
-  /** "4g" / "512m" / "1024k" / plain bytes → bytes (Spark's
-    * spark.executor.memory grammar, the suffixes deployments use). */
-  private[graft] def parseMemBytes(v: String): Long = {
-    val t = v.trim.toLowerCase
-    val (num, mult) = t.last match {
-      case 'g' => (t.dropRight(1), 1L << 30)
-      case 'm' => (t.dropRight(1), 1L << 20)
-      case 'k' => (t.dropRight(1), 1L << 10)
-      case 'b' => (t.dropRight(1), 1L)
-      case _   => (t, 1L)
-    }
-    (num.toDouble * mult).toLong
-  }
-
-  /** Apply the measured provider rule to a session before a stateful
-    * stream starts (the providerClass conf is captured at `start()` and
-    * baked into the checkpoint thereafter). Deployment topology comes
-    * from the session's own confs — `spark.executor.instances` /
-    * `spark.executor.memory`, falling back to the local JVM's heap for
-    * local[*] — and the explicit override (`GRAFT_STATE_STORE` /
-    * `graft.state.store` = rocksdb|hdfs) always wins for operators who
-    * measured their own curve. Returns the provider class it set.
-    * `estKeys` is the caller's distinct-key projection (a source
-    * parquet footer row count is an upper bound). `bytesPerKey` defaults
-    * to the key-set shape ([[KeySetBytesPerKey]]); struct-per-key
-    * operators pass [[StructBytesPerKey]]. `rewriteHeavy` marks shapes
-    * whose every batch rewrites the active keys' state (fMGWS
-    * sessionization) — their HDFS-backed heap mass doubles via version
-    * retention ([[RewriteRetentionFactor]]); see the shape-law scaladoc
-    * for the four measured corners. */
-  def configureStateStore(s: SparkSession, estKeys: Long,
-      bytesPerKey: Int = KeySetBytesPerKey, rewriteHeavy: Boolean = false,
-      executors: Option[Int] = None,
-      heapBytes: Option[Long] = None): String = {
-    val rocks =
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    val hdfs =
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    val chosen = sys.env.get("GRAFT_STATE_STORE")
-      .orElse(sys.props.get("graft.state.store")) match {
-      case Some(v) if v.equalsIgnoreCase("rocksdb") => rocks
-      case Some(_)                                  => hdfs
-      case None =>
-        // executor count/heap are STATIC confs (set at submit, readable
-        // here but not writable at runtime) — the Options let a caller
-        // who knows its topology better override the session's view
-        val e = executors.orElse(
-          s.conf.getOption("spark.executor.instances").map(_.toInt))
-          .getOrElse(1)
-        val h = heapBytes.orElse(s.conf.getOption("spark.executor.memory")
-          .map(parseMemBytes)).getOrElse(Runtime.getRuntime.maxMemory)
-        stateProviderFor(effectiveStateBytes(estKeys, bytesPerKey,
-          rewriteHeavy), e, h)
-    }
-    s.conf.set("spark.sql.streaming.stateStore.providerClass", chosen)
-    chosen
-  }
-
   /** Hard-link `existing` as `link` (metadata-only), or copy its bytes
     * where the filesystem refuses the link: a staging dir on another
     * mount, or a mount without hard links. `createLink` is a parameter so
@@ -229,23 +105,9 @@ object StreamingOps {
     s2.conf.set("spark.sql.shuffle.partitions", "2")
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
       noDataBatch.toString)
-    // State-store provider is switchable for measurement (GRAFT_STATE_STORE=
-    // rocksdb). Measured on this host at sf0.1 (see SCALE.md): RocksDB
-    // LOSES at this state size — its per-batch instance open/commit cost
-    // (native handle + changelog) exceeds the HDFS-backed in-memory map's
-    // entire commit, and the stateful family total regresses. It wins when
-    // state exceeds executor heap (millions of keys × large values), which
-    // the bounded-replay fixtures never approach — so the default stays
-    // HDFS-backed, and a live deployment with big state flips the env var.
-    sys.env.get("GRAFT_STATE_STORE").orElse(sys.props.get("graft.state.store"))
-      .filter(_.equalsIgnoreCase("rocksdb"))
-      .foreach { _ =>
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      }
-    // the measured-curve flip rule lives in [[rocksDbStateGate]]; the
-    // bounded-replay fixtures sit far under the threshold, so the
-    // harness default stays the gate's small-state answer (HDFS-backed)
+    // State store: Spark's default HDFS-backed provider. RocksDB won only
+    // where the state outgrew executor heap (SCALE.md, streaming state).
+    //
     // The memory-sink checkpoint is THROWAWAY by construction (the result
     // is collected and the query never restarts), yet Spark's default
     // temp checkpoint lands on java.io.tmpdir — a disk-backed ext4 here —

@@ -1,42 +1,28 @@
 package graft.sink
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Small-file compaction for the append target. Every staged load commits
-  * its own files, so a long-running archive accumulates one file set per
-  * batch — at 100 TB that is the classic small-file problem (footer reads
-  * and task scheduling dominate scans). Compaction rewrites the target
-  * into ~targetBytes files sized for the scan path (HDFS-block/row-group
-  * scale), the same maintenance a table format's OPTIMIZE performs.
-  *
-  * Replay safety: the per-ingest `ingest-<id>.done` tombstones are carried
-  * across the rewrite, so a batch replayed AFTER its data files were
-  * compacted away is recognized by StagedLoader.copyInto as already
-  * committed (tombstone present, no prefix files) and skipped — without
-  * this, compaction would reopen the at-least-once duplication window.
-  *
-  * All I/O is Hadoop-FS (file://, hdfs://, s3a://). The rewrite goes to a
-  * sibling temp dir and is swapped in by rename-aside (target → .old, tmp
-  * → target, delete .old) — on a real deployment the swap is the table
-  * format's atomic commit. A crash at any point leaves the live data
-  * recoverable: [[recover]] restores a stranded `.old` and clears stale
-  * temp dirs, and both compact() and the incremental-sync entry points
-  * call it first. The failure this closes: a delete-then-rename swap
-  * crashing mid-swap leaves the target absent, and a later incremental
-  * run would read watermark None and silently re-archive from scratch
-  * while the only copy of the compacted data sat stranded in `.compact`.
+/** Rename-aside swap of a directory with its finished rewrite, and the
+  * crash recovery for it. [[swapIn]] moves the live dir to `.old`, the
+  * rewrite from `tmp` into place, then deletes `.old`: the live data is
+  * always under the dir or under `.old`, never deleted before its
+  * replacement is in place. [[recoverSwap]] repairs a crash at any point
+  * of that sequence; [[recover]] applies it to an archive target, whose
+  * rewrite dir is `.compact` (the name older builds' target compaction
+  * used, kept so a crash state they left still recovers). DeleteBack
+  * swaps its rewritten source tables through the same two calls, and
+  * StagedLoader recovers the target before every ingest. All I/O is
+  * Hadoop-FS (file://, hdfs://, s3a://).
   */
 object Compaction {
-
-  final case class Report(filesBefore: Int, filesAfter: Int, rows: Long)
 
   def tmpPath(targetDir: String) =
     new Path(targetDir.stripSuffix("/") + ".compact")
   def oldPath(targetDir: String) =
     new Path(targetDir.stripSuffix("/") + ".old")
 
-  /** Crash recovery for the compaction swap. Idempotent; cheap (two
+  /** Crash recovery for a target's swap. Idempotent; cheap (two
     * existence probes) when there is nothing to do. See [[recoverSwap]].
     * @return true when it repaired something */
   def recover(spark: SparkSession, targetDir: String): Boolean =
@@ -79,58 +65,5 @@ object Compaction {
     if (!fs.rename(tmp, new Path(dir)))
       sys.error(s"rename-aside swap (in) failed for $dir") // .old still holds the data
     fs.delete(old, true): Unit
-  }
-
-  /** Run [[compact]] only when the small-file problem is real: at least
-    * `minSmallFiles` data files below `smallBytes`. The rewrite is a full
-    * whole-directory swap — a PARTIAL rewrite (moving only small files)
-    * cannot be made duplication-safe on a plain FS, because committing
-    * "new compacted files in, originals out" spans multiple non-atomic
-    * renames with no manifest to arbitrate a crash in the middle; that is
-    * precisely the problem table-format OPTIMIZE solves with a manifest
-    * commit. So the knob here is WHEN to pay for the rewrite, not how
-    * much of it to do. Returns None when skipped. */
-  def compactIfNeeded(spark: SparkSession, targetDir: String,
-      targetBytes: Long = 128L << 20, smallBytes: Long = 32L << 20,
-      minSmallFiles: Int = 8): Option[Report] = {
-    recover(spark, targetDir)
-    val target = new Path(targetDir)
-    val fs: FileSystem = target.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(target)) return None
-    val small = fs.listStatus(target)
-      .count(s => s.getPath.getName.endsWith(".parquet") && s.getLen < smallBytes)
-    if (small < minSmallFiles) None
-    else Some(compact(spark, targetDir, targetBytes))
-  }
-
-  def compact(spark: SparkSession, targetDir: String,
-      targetBytes: Long = 128L << 20): Report = {
-    recover(spark, targetDir)
-    val target = new Path(targetDir)
-    val fs: FileSystem = target.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(target)) return Report(0, 0, 0L)
-    val entries = fs.listStatus(target).toSeq
-    val parts = entries.filter(s => s.getPath.getName.endsWith(".parquet"))
-    if (parts.isEmpty) return Report(0, 0, 0L)
-    val tombstones = entries.map(_.getPath)
-      .filter(p => p.getName.startsWith("_ingest-") && p.getName.endsWith(".done"))
-    val total = parts.map(_.getLen).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    val tmp = tmpPath(targetDir)
-    // row count from the PRE-rewrite footers: metadata reads, no scan job
-    val rows = graft.ParquetFooters.rowCount(spark, targetDir)
-    spark.read.parquet(targetDir)
-      .repartition(n).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // RECREATE the tombstones in tmp (they are empty markers) and leave
-    // the originals in the live target until after the swap — moving them
-    // out first would strip replay protection if the swap crashes, and a
-    // compact() re-run's Overwrite would then wipe the only copies
-    tombstones.foreach { t =>
-      fs.create(new Path(tmp, t.getName), true).close()
-    }
-    swapIn(fs, targetDir, tmp)
-    val after = fs.listStatus(target)
-      .count(_.getPath.getName.endsWith(".parquet"))
-    Report(parts.length, after, rows)
   }
 }

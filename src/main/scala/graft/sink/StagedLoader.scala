@@ -56,9 +56,9 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
   private val targetPath = new Path(targetDir)
   private def fsOf(p: Path): FileSystem = p.getFileSystem(hconf)
 
-  /** Every read or commit of the target repairs an interrupted compaction
-    * swap FIRST. Without this, a crash between the swap's two renames
-    * (target absent, live data stranded in `target.old`) followed by any
+  /** Every read or commit of the target repairs an interrupted rename-aside
+    * swap ([[Compaction.swapIn]]) FIRST. Without this, a crash between the
+    * swap's two renames (target absent, live data in `target.old`) then any
     * ingest would recreate the target with just the new batch — and a
     * LATER Compaction.recover would then read that state as "swap
     * completed, `.old` obsolete" and delete the only copy of the archived
@@ -151,8 +151,9 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
     * Idempotent commit protocol (the COPY-INTO staged-file dedup of the
     * reference, expressed as files):
     *  1. a durable `ingest-<id>.done` tombstone with NO surviving data
-    *     files means the batch was committed and later compacted away —
-    *     a replay is a no-op (without this, compaction would reopen the
+    *     files means the batch was committed and an external rewrite (a
+    *     table format's OPTIMIZE, say) later moved its rows — a replay is
+    *     a no-op (without this, such a rewrite would reopen the
     *     at-least-once window);
     *  2. otherwise write the aligned batch to the private `.load-<id>` temp
     *     dir — the stage's one read — and take the loaded row count from

@@ -143,8 +143,8 @@ object StreamingArchiver {
     *
     * Scale: the delta is small relative to the snapshot by definition;
     * the full-outer join shuffles on the key both sides (co-partitioned
-    * at the store's bucketing in a real deployment), and generations are
-    * the same rewrite unit the Compaction sink manages. */
+    * at the store's bucketing in a real deployment), and each generation
+    * is one whole-directory rewrite. */
   def cdcMergeStream(changes: DataFrame, snapshotRoot: String,
       checkpoint: String): StreamingQuery = {
     changes.writeStream
@@ -201,8 +201,7 @@ object StreamingArchiver {
     * STRICTLY OLDER than the one CURRENT names, except the newest
     * `keepBehind` of them (grace window for a reader that resolved the
     * pointer just before a publish; a reader holding a lazy frame over
-    * an older generation across ≥2 batch windows is out of contract —
-    * the same reader rule sink.Compaction's tombstone walk documents).
+    * an older generation across ≥2 batch windows is out of contract).
     * Never touches the current generation, the pointer, or anything
     * at/after the current id — a concurrent merge may already be
     * writing `gen-<id+1>` before publishing it. Non-numeric generation

@@ -219,21 +219,6 @@ class ArchiveE2ESpec extends SparkSpec {
       == full.count())
   }
 
-  test("compaction rewrites the per-batch file accumulation into sized files") {
-    val tgt = tmpDir() + "/t"
-    val src = spark.read.parquet(s"$sf/region.parquet")
-    val loader = new StagedLoader(spark, tgt, src.schema)
-    (1 to 3).foreach(i => loader.ingest(src, tmpDir() + s"/stg$i"))
-    val before = new java.io.File(tgt).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(before >= 3, s"expected one file set per batch, got $before")
-    val report = graft.sink.Compaction.compact(spark, tgt)
-    assert(report.filesBefore == before)
-    assert(report.filesAfter == 1, report)
-    assert(report.rows == src.count() * 3)
-    assert(spark.read.parquet(tgt).count() == src.count() * 3)
-  }
-
   test("time-incremental sync archives only events past the µs watermark") {
     val srcDir = tmpDir(); val tgt = tmpDir() + "/t"
     val full = graft.ops.Tables.events(spark, sf)
@@ -266,9 +251,19 @@ class ArchiveE2ESpec extends SparkSpec {
     val loader = new StagedLoader(spark, tgt, src.schema)
     val stg = tmpDir() + "/stg"
     loader.ingest(src, stg): Unit
-    graft.sink.Compaction.compact(spark, tgt): Unit
+    // an external rewrite (a table format's OPTIMIZE, say) moves the
+    // batch's rows into files of its own naming and keeps the tombstone
+    val dir = new java.io.File(tgt)
+    val batchFiles = dir.listFiles().filter(f =>
+      f.getName.startsWith("ingest-") && f.getName.endsWith(".parquet"))
+    assert(batchFiles.nonEmpty)
+    assert(dir.listFiles().exists(f =>
+      f.getName.startsWith("_ingest-") && f.getName.endsWith(".done")))
+    batchFiles.zipWithIndex.foreach { case (f, i) =>
+      assert(f.renameTo(new java.io.File(dir, f"rewritten-$i%05d.parquet")))
+    }
     // at-least-once replay of the same batch AFTER its files were
-    // compacted away: the durable tombstone must make it a no-op
+    // rewritten away: the durable tombstone must make it a no-op
     assert(loader.ingest(src, stg) == 0L, "replay after compaction must be skipped")
     assert(spark.read.parquet(tgt).count() == src.count(),
       "compaction + replay must not duplicate the batch")
@@ -373,16 +368,11 @@ class ArchiveE2ESpec extends SparkSpec {
     assert(Compaction.recover(spark, tgt))
     assert(fs.exists(target) && !fs.exists(Compaction.oldPath(tgt)))
     assert(spark.read.parquet(tgt).count() == rows)
-
-    // and a full compact() still round-trips after recovery
-    val rep = Compaction.compact(spark, tgt, targetBytes = 1L << 30)
-    assert(rep.rows == rows)
-    assert(spark.read.parquet(tgt).count() == rows)
   }
 
   test("ingest into a mid-swap-crashed target restores the history first") {
-    // the data-loss chain this closes: compact() crashes between its two
-    // renames (target absent, history stranded in .old) → an ingest
+    // the data-loss chain this closes: a rename-aside swap crashes between
+    // its two renames (target absent, history stranded in .old) → an ingest
     // recreates the target with just the new batch → a later recover()
     // reads "target present + .old present" as post-swap cleanup and
     // deletes the only copy of the history. The loader must restore .old
@@ -469,24 +459,6 @@ class ArchiveE2ESpec extends SparkSpec {
       "replay cleanup deleted a different batch's file sharing the 13-char prefix")
     assert(spark.read.parquet(tgt).count() == before,
       "replay must supersede its own files and leave the other batch intact")
-  }
-
-  test("compactIfNeeded triggers only past the small-file threshold") {
-    import graft.sink.Compaction
-    val tgt = tmpDir() + "/t"
-    val src = spark.read.parquet(s"$sf/region.parquet")
-    val loader = new StagedLoader(spark, tgt, src.schema)
-    loader.ingest(src, tgt + ".stg"): Unit
-    val nFiles = new java.io.File(tgt).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    // below the file-count threshold: skipped
-    assert(Compaction.compactIfNeeded(spark, tgt,
-      minSmallFiles = nFiles + 1).isEmpty)
-    // at the threshold: runs and round-trips
-    val rep = Compaction.compactIfNeeded(spark, tgt,
-      targetBytes = 1L << 30, minSmallFiles = math.max(1, nFiles))
-    assert(rep.nonEmpty && rep.get.rows == src.count())
-    assert(spark.read.parquet(tgt).count() == src.count())
   }
 
   test("staging compresses by default (COMPRESSION AUTO analogue) and round-trips") {

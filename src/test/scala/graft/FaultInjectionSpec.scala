@@ -11,7 +11,7 @@ import graft.sink.{Compaction, Retry, StagedLoader}
   * ingester/ingest_databend.go:182-241): a failure is injected into every
   * hop — stage write, the stage→commit gap, mid-commit between part
   * renames, the tombstone-invalidate window, the post-commit purge, and a
-  * concurrent compaction-swap crash — and after each resume the target
+  * concurrent rename-aside swap crash — and after each resume the target
   * must hold EXACTLY one copy of every batch: no duplicates, no loss,
   * exact counts.
   *
@@ -166,7 +166,7 @@ class FaultInjectionSpec extends SparkSpec {
     val n = src.count()
     val loader = new StagedLoader(spark, tgt, src.schema)
     assert(loader.ingest(src, tmpDir() + "/s1") == n)
-    // crashed state: compaction swap died between its two renames — the
+    // crashed state: a rename-aside swap died between its two renames — the
     // history sits in .old, the target is absent — while a NEW batch's
     // ingest is about to retry
     assert(fs.rename(new Path(tgt), Compaction.oldPath(tgt)))

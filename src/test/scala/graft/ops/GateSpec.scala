@@ -139,70 +139,6 @@ class GateSpec extends AnyFunSuite {
     })
   }
 
-  test("state-store gate: memory bound, monotone, measured tiers stay in-memory") {
-    val gib = 1L << 30
-    val genB = Gen.chooseNum(0L, 1L << 42)          // state bytes to 4 TiB
-    val genE = Gen.chooseNum(1, 2000)               // executors
-    val genH = Gen.chooseNum(1L * gib, 64L * gib)   // heap per executor
-    runProp("bound exact", Prop.forAllNoShrink(genB, genE, genH) { (b, e, h) =>
-      StreamingOps.rocksDbStateGate(b, e, h) ==
-        (b.toDouble / e > StreamingOps.StateHeapBudgetFraction * h)
-    })
-    runProp("monotone in state bytes", Prop.forAllNoShrink(genB, genB, genE, genH) {
-      (a, b, e, h) =>
-        val (lo, hi) = if (a <= b) (a, b) else (b, a)
-        !StreamingOps.rocksDbStateGate(lo, e, h) ||
-          StreamingOps.rocksDbStateGate(hi, e, h)
-    })
-    runProp("anti-monotone in executors and heap", Prop.forAllNoShrink(
-      genB, genE, genE, genH) { (b, e1, e2, h) =>
-      val (lo, hi) = if (e1 <= e2) (e1, e2) else (e2, e1)
-      !StreamingOps.rocksDbStateGate(b, hi, h) ||
-        StreamingOps.rocksDbStateGate(b, lo, h)
-    })
-    runProp("provider strings track the gate", Prop.forAllNoShrink(genB, genE, genH) {
-      (b, e, h) =>
-        StreamingOps.stateProviderFor(b, e, h).contains("RocksDB") ==
-          StreamingOps.rocksDbStateGate(b, e, h)
-    })
-    // measured tiers at the local envelope (16 GiB, 1 executor,
-    // ~100 B/key): 3M and 30M keys BOTH stay in-memory — matching the
-    // measured runs where the HDFS-backed provider completed and won
-    // (6.4 s vs 15.4 s; 19.1 s vs 134.5 s) — and a 300M-key tier whose
-    // 30 GB state cannot fit the 16 GiB heap flips to RocksDB
-    assert(!StreamingOps.rocksDbStateGate(3000000L * 100, 1, 16 * gib))
-    assert(!StreamingOps.rocksDbStateGate(30000000L * 100, 1, 16 * gib))
-    assert(StreamingOps.rocksDbStateGate(300000000L * 100, 1, 16 * gib))
-    // cluster shape: 10B keys × 100 B = 1 TB state over 100 × 4 GiB
-    // executors → 10 GB/executor ≫ the 0.8 GiB budget → RocksDB
-    assert(StreamingOps.rocksDbStateGate(10000000000L * 100, 100, 4 * gib))
-    // SHAPE-AWARE corners (r12): the four measured A/B points. Key-set
-    // state (dropDuplicates, ~100 B/key, insert-once) stays in-memory at
-    // 3M and 30M — where the HDFS-backed provider indeed wins (6.4 vs
-    // 15.4 s; 19.1 vs 134.5 s). Struct-per-key rewrite-heavy state
-    // (fMGWS sessions, ~150 B/key, every batch update ⇒ the previous map
-    // version shares nothing and stays retained ⇒ ×2 heap mass) stays
-    // in-memory at 3M (measured win 4.5 vs 14.4 s) but its 30M tier
-    // projects 9 GB — past the 3.4 GB budget — and flips to RocksDB,
-    // which is measured 27% faster there (71.0 vs 97.4 s). The r11
-    // shape-blind rule kept sessionize-30M in-memory; the flip was
-    // memory pressure, not a latency crossover.
-    def eff(keys: Long, bpk: Int, rw: Boolean): Long =
-      StreamingOps.effectiveStateBytes(keys, bpk, rw)
-    val ks = StreamingOps.KeySetBytesPerKey
-    val st = StreamingOps.StructBytesPerKey
-    assert(!StreamingOps.rocksDbStateGate(eff(3000000L, ks, false), 1, 16 * gib))
-    assert(!StreamingOps.rocksDbStateGate(eff(30000000L, ks, false), 1, 16 * gib))
-    assert(!StreamingOps.rocksDbStateGate(eff(3000000L, st, true), 1, 16 * gib))
-    assert(StreamingOps.rocksDbStateGate(eff(30000000L, st, true), 1, 16 * gib))
-    // the factor law itself: rewrite-heavy doubles, never reorders
-    runProp("rewrite factor doubles", Prop.forAllNoShrink(
-      Gen.chooseNum(0L, 1L << 40)) { k =>
-      eff(k, st, true) == 2L * eff(k, st, false) &&
-        eff(k, ks, false) == k * ks
-    })
-  }
-
   test("bloom shard law: ⌈est/cap⌉ shards, monotone; dispatch degrades past the ceiling") {
     val genEst = Gen.chooseNum(1L, 1L << 40)
     runProp("ceiling-division law", Prop.forAllNoShrink(genEst) { est =>

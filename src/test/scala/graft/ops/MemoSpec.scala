@@ -100,12 +100,13 @@ class MemoSpec extends SparkSpec {
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
     val re = pattern.r
     walk(root).map(f => root.toPath.relativize(f.toPath).toString.replace('\\', '/'))
-      .filter { rel =>
-        !allowed(rel) && {
-          val src = scala.io.Source.fromFile(new java.io.File(root, rel), "UTF-8")
-          try re.findFirstIn(src.mkString).isDefined finally src.close()
-        }
-      }
+      .filter(rel => !allowed(rel) && re.findFirstIn(mainSource(rel)).isDefined)
+  }
+
+  /** Text of `rel` under src/main/scala. */
+  private def mainSource(rel: String): String = {
+    val src = scala.io.Source.fromFile(new java.io.File("src/main/scala", rel), "UTF-8")
+    try src.mkString finally src.close()
   }
 
   test("no file under src/main/scala but Memo and TempDirs declares a ConcurrentHashMap") {
@@ -114,6 +115,23 @@ class MemoSpec extends SparkSpec {
     assert(bad.isEmpty,
       "cross-query reuse goes through graft.ops.Memo; ad-hoc maps in: " +
         bad.mkString(", "))
+  }
+
+  test("no session clone under src/main/scala but the bloom-join memo and the streaming run") {
+    // every new session recompiles all of its generated code: Spark keys
+    // the codegen class cache by class loader, and each session has its
+    // own (artifact isolation, on by default). The two
+    // sites kept: bloom_runtime_filter_join's clone, built once per base
+    // session (Memo), and runToMemory's per-stream clone (Spark clones the
+    // session for every streaming query anyway)
+    val sites = Set("graft/ops/RelationalOps.scala", "graft/ops/StreamingOps.scala")
+    val clone = """\.newSession\("""
+    val bad = offenders(clone, sites)
+    assert(bad.isEmpty, "per-call session clones in: " + bad.mkString(", "))
+    sites.foreach { rel =>
+      assert(clone.r.findAllIn(mainSource(rel)).size == 1,
+        s"$rel must clone a session at exactly one site")
+    }
   }
 
   test("no file under src/main/scala but Materialize checkpoints, caches or persists") {

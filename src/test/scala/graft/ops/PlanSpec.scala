@@ -666,21 +666,30 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed_join_colocated: zero shuffle exchange on either join side") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (lt, ot) = RelationalOps.bucketedOrderTables(s, sf)
-    val j = s.table(lt).join(s.table(ot),
-      org.apache.spark.sql.functions.col("l_orderkey") ===
-        org.apache.spark.sql.functions.col("o_orderkey"))
-    val p = j.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    object H extends AdaptiveSparkPlanHelper
+    val p = planOf("bucketed_join_colocated")
     // both sides scan their 8 buckets directly; the join co-locates
     // bucket i with bucket i — the whole point of paying layout once
-    assert(!p.contains("Exchange"),
-      "bucketed fact-fact join must plan with zero exchange:\n" + p)
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
-    assert(p.contains("Bucketed: true"),
-      "scan must report bucketed reading:\n" + p)
+    assert("Bucketed: true".r.findAllIn(p).size == 2,
+      "both scans must report bucketed reading:\n" + p)
+    // the plan that ran (AQE may re-plan joins at runtime): the MERGE
+    // hint keeps the sort-merge join, and nothing below it shuffles —
+    // the exchanges the aggregate and the sort add sit above the join
+    val df = SparkEntry.queries("bucketed_join_colocated")(spark, sf)
+    df.collect(): Unit
+    val joins = H.collect(df.queryExecution.executedPlan) {
+      case j: SortMergeJoinExec => j
+    }
+    assert(joins.size == 1, df.queryExecution.executedPlan.toString)
+    val j = joins.head
+    assert(H.collect(j) { case e: ShuffleExchangeExec => e }.isEmpty,
+      "bucketed fact-fact join must plan with zero exchange:\n" + j)
+    val scans = H.collect(j) { case f: FileSourceScanExec => f }
+    assert(scans.size == 2 && scans.forall(_.bucketedScan), j.toString)
   }
 
   test("f_variant_shred: scan prunes to the three shredded columns") {

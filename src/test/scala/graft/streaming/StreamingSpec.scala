@@ -315,52 +315,6 @@ class StreamingSpec extends SparkSpec {
     assert(st2 == st, "replay after retirement must not move state")
   }
 
-  test("configureStateStore applies the measured memory-bound rule to a session") {
-    import graft.ops.StreamingOps
-    assert(StreamingOps.parseMemBytes("4g") == 4L << 30)
-    assert(StreamingOps.parseMemBytes("512m") == 512L << 20)
-    assert(StreamingOps.parseMemBytes("1024k") == 1L << 20)
-    assert(StreamingOps.parseMemBytes("123") == 123L)
-    val s2 = spark.newSession()
-    // both measured tiers stay on the in-memory provider at the measured
-    // local corner (16 GiB, 1 executor: the 30M-key run WON there,
-    // 19.1 s vs 134.5 s)
-    val small = StreamingOps.configureStateStore(s2, 30000000L,
-      executors = Some(1), heapBytes = Some(16L << 30))
-    assert(small.contains("HDFSBacked"))
-    assert(s2.conf.get("spark.sql.streaming.stateStore.providerClass") == small)
-    // with no override the rule reads this JVM's heap
-    assert(StreamingOps.configureStateStore(s2, 30000000L) ==
-      StreamingOps.stateProviderFor(StreamingOps.effectiveStateBytes(
-        30000000L, StreamingOps.KeySetBytesPerKey, false), 1,
-        Runtime.getRuntime.maxMemory))
-    // a cluster shape (100 × 4 GiB executors — static confs, so passed
-    // as the explicit overrides) flips once the projected per-executor
-    // share crosses the heap budget
-    val big = StreamingOps.configureStateStore(s2, 10000000000L,
-      executors = Some(100), heapBytes = Some(4L << 30))
-    assert(big.contains("RocksDB"))
-    assert(s2.conf.get("spark.sql.streaming.stateStore.providerClass") == big)
-    // the struct shape at the same key count flips where key-set state
-    // does not: 30M × 150 B × the rewrite-retention factor projects past
-    // the heap budget on a 16 GiB local session (the measured sessionize
-    // inversion, 71.0 vs 97.4 s)
-    val struct = StreamingOps.configureStateStore(s2, 30000000L,
-      bytesPerKey = StreamingOps.StructBytesPerKey, rewriteHeavy = true,
-      executors = Some(1), heapBytes = Some(16L << 30))
-    assert(struct.contains("RocksDB"))
-    val structSmall = StreamingOps.configureStateStore(s2, 3000000L,
-      bytesPerKey = StreamingOps.StructBytesPerKey, rewriteHeavy = true,
-      executors = Some(1), heapBytes = Some(16L << 30))
-    assert(structSmall.contains("HDFSBacked"))
-    // the explicit override always wins over the projection
-    sys.props.put("graft.state.store", "hdfs")
-    try
-      assert(StreamingOps.configureStateStore(s2, 10000000000L)
-        .contains("HDFSBacked"))
-    finally sys.props.remove("graft.state.store"): Unit
-  }
-
   test("linkOrCopy copies the bytes where the filesystem refuses a hard link") {
     import java.nio.file.FileSystemException
     val dir = Files.createTempDirectory("graft-link")
