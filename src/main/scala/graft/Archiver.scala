@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.BusDrain
 import org.apache.spark.sql.SparkSession
 
 import graft.config.ArchiverConfig
@@ -73,6 +74,9 @@ final class Archiver(spark: SparkSession, cfg: ArchiverConfig,
       // without them, so they MUST be reported or the truncation is silent
       val quarantined = tables.map { case (db, t) => src.quarantined(db, t) }.sum
 
+      // task-end events arrive asynchronously: without the drain the
+      // snapshot can miss the count and delete-back jobs just run
+      BusDrain.drain(spark.sparkContext)
       RunReport(reports, rc, deleted, rec.snapshot, quarantined)
     } finally MetricsRecorder.detach(spark, rec)
   }
@@ -144,6 +148,7 @@ final class Archiver(spark: SparkSession, cfg: ArchiverConfig,
       }.sum
       val rc = Reconciler.Result(sourceTotal,
         loader.targetCount(cfg.sourceWhereCondition))
+      BusDrain.drain(spark.sparkContext)
       RunReport(reports, rc, 0L, rec.snapshot)
     } finally MetricsRecorder.detach(spark, rec)
   }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
 /** Multi-sequence probe selection for the two-level (IMI) index, as a
@@ -92,36 +89,9 @@ object MultiSeqCells {
   private val inType = ArrayType(StructType(Seq(
     StructField("s", DoubleType), StructField("cid", LongType))))
 
-  private def shapeOk(t: DataType): Boolean = t match {
-    case ArrayType(StructType(Array(a, b)), _) =>
-      a.dataType == DoubleType && b.dataType == LongType
-    case _ => false
-  }
-
   /** array<long> of the top-`m` combined cell ids of the score grid. */
-  case class MultiSeqTopCells(left: Expression, right: Expression,
-      k2: Int, m: Int) extends BinaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (shapeOk(left.dataType) && shapeOk(right.dataType))
-        TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"multi_seq_cells requires two $inType inputs, got " +
-          s"${left.dataType} / ${right.dataType}")
-    override def nullSafeEval(l: Any, r: Any): Any =
-      multiSeqKernel(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], k2, m)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.MultiSeqCells.multiSeqKernel($a, $b, $k2, $m);")
-    override protected def withNewChildrenInternal(newLeft: Expression,
-        newRight: Expression): MultiSeqTopCells =
-      copy(left = newLeft, right = newRight)
-    override def prettyName: String = "multi_seq_cells"
-  }
-
   def multi_seq_cells(cells1: Column, cells2: Column, k2: Int, m: Int): Column =
-    ColumnShim.column(MultiSeqTopCells(
-      ColumnShim.expression(cells1), ColumnShim.expression(cells2), k2, m))
+    Kernel.column("multi_seq_cells", "graft.functions.MultiSeqCells.multiSeqKernel",
+      Seq(cells1, cells2), Seq(inType, inType), ArrayType(LongType, containsNull = false),
+      Seq(k2, m))
 }

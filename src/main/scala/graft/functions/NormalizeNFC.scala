@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode NFC normalization as a native Catalyst expression — the
+/** Unicode NFC normalization as a native kernel — the
   * canonicalization step a web-corpus pipeline runs BEFORE any hashing
   * dedup: the same visible text crawled from two pages can arrive as
   * precomposed («é», U+00E9) or decomposed («e»+U+0301) code-point
@@ -13,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * shingle dedup. NFC composes canonically-equivalent sequences to one
   * form so downstream digests agree.
   *
-  * A Catalyst `Expression` (not a Scala UDF): null handling stays native
-  * and `doGenCode` emits a static-kernel call so the surrounding cleaning
+  * Bound through [[Kernel]] (not a Scala UDF): null handling stays native
+  * and generated code calls the static kernel, so the surrounding cleaning
   * projection stays inside one whole-stage-codegen stage. The kernel
   * fast-paths already-normalized input (the overwhelmingly common case —
   * ASCII is trivially NFC) with a zero-allocation check, returning the
@@ -26,36 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * accents) that are stable across every Unicode version either engine
   * could ship.
   */
-case class NormalizeNFC(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"normalize_nfc requires string, got $other")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    NormalizeNFC.kernel(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.NormalizeNFC.kernel($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeNFC =
-    copy(child = newChild)
-  override def prettyName: String = "normalize_nfc"
-}
-
 object NormalizeNFC {
-  import org.apache.spark.sql.graftshim.ColumnShim
-
   def kernel(s: UTF8String): UTF8String = {
     val str = s.toString
     if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
@@ -64,5 +34,6 @@ object NormalizeNFC {
   }
 
   def normalize_nfc(c: Column): Column =
-    ColumnShim.column(NormalizeNFC(ColumnShim.expression(c)))
+    Kernel.column("normalize_nfc", "graft.functions.NormalizeNFC.kernel",
+      Seq(c), Seq(StringType), StringType)
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
-/** 64-bit SimHash over a token array as a native Catalyst expression.
+/** 64-bit SimHash over a token array as a native kernel.
   *
   * For each token a deterministic 64-bit hash is formed by a poly-31 fold
   * over the token's code points finished with the splitmix64 mixer; each of
@@ -21,41 +20,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * than pinned only by specs. splitmix64's avalanche keeps the bit votes
   * uniform despite the weak base hash.
   *
-  * A Catalyst `Expression` (not a Scala UDF) so null handling, eval on
+  * Bound through [[Kernel]] (not a Scala UDF) so null handling, eval on
   * `UTF8String` without row conversion, and filter pushdown around it stay
-  * native; `doGenCode` emits a static-kernel call so surrounding
-  * projections stay inside one whole-stage-codegen stage.
+  * native, and surrounding projections stay inside one whole-stage-codegen
+  * stage.
   */
-case class SimHash64(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"simhash64 requires array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.kernel(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.SimHash64.kernel($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-  override def prettyName: String = "simhash64"
-}
-
 object SimHash64 {
-  import org.apache.spark.sql.graftshim.ColumnShim
-
   /** poly31 over code points + splitmix64 — wrapping Long arithmetic is
     * mod-2^64, matching the oracle's HUGEINT formulation exactly. */
   def tokenHash(s: String): Long = {
@@ -95,5 +65,6 @@ object SimHash64 {
 
   /** Column API: `simhash64(tokensCol)`. */
   def simhash64(tokens: Column): Column =
-    ColumnShim.column(SimHash64(ColumnShim.expression(tokens)))
+    Kernel.column("simhash64", "graft.functions.SimHash64.kernel",
+      Seq(tokens), Seq(ArrayType(StringType)), LongType)
 }

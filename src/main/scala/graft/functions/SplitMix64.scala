@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
-/** splitmix64 of a 64-bit key as a native Catalyst expression — the
+/** splitmix64 of a 64-bit key as a native kernel — the
   * deterministic scrambler behind hash-based dataset routing (train/val/
   * test splits, stratified sampling, shard assignment). A keyed split must
   * be (a) stable across runs and engines, (b) uncorrelated with the key's
@@ -15,38 +14,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * deliberately portable: wrapping-Long arithmetic is mod-2^64, so the
   * DuckDB oracle reproduces it exactly with HUGEINT arithmetic.
   *
-  * Native expression (not a UDF) with a static-kernel `doGenCode`, so
-  * routing stays inside whole-stage codegen at the scan.
+  * Bound through [[Kernel]] (not a UDF), so routing stays inside
+  * whole-stage codegen at the scan.
   */
-case class SplitMix64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case LongType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"splitmix64 requires bigint, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SplitMix64.kernel(input.asInstanceOf[Long])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.SplitMix64.kernel($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): SplitMix64 =
-    copy(child = newChild)
-  override def prettyName: String = "splitmix64"
-}
-
 object SplitMix64 {
-  import org.apache.spark.sql.graftshim.ColumnShim
-
   def kernel(h: Long): Long = {
     var z = h + 0x9E3779B97F4A7C15L
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -56,5 +27,6 @@ object SplitMix64 {
 
   /** Column API: `splitmix64(keyCol)`. */
   def splitmix64(key: Column): Column =
-    ColumnShim.column(SplitMix64(ColumnShim.expression(key)))
+    Kernel.column("splitmix64", "graft.functions.SplitMix64.kernel",
+      Seq(key), Seq(LongType), LongType)
 }

@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
 /** Single-pass per-document word-repetition statistics.
@@ -15,7 +12,7 @@ import org.apache.spark.sql.types._
   * Gopher-style repetition signals (reference has no text ops; this is the
   * pipeline-extension family): that plan shuffles one row PER WORD of the
   * corpus — at 100 TB that is the single largest shuffle in the whole
-  * pipeline, easily 10× the corpus row count. This expression computes the
+  * pipeline, easily 10× the corpus row count. This kernel computes the
   * same four statistics in one pass over the token array at the scan, so
   * the query needs NO shuffle at all: per-doc quality signals are a pure
   * projection, exactly as embarrassingly parallel as the corpus itself.
@@ -25,7 +22,7 @@ import org.apache.spark.sql.types._
   *   total      — total word count (= array length)
   *   n_distinct — distinct word count
   *   n_bg       — distinct space-joined bigram count, with the SAME
-  *                degenerate-input convention as [[VectorOps.WordNGrams]]
+  *                degenerate-input convention as [[VectorOps.word_ngrams]]
   *                (a 1-word doc yields 1 "bigram" = the word itself), so
   *                results are bit-identical to size(word_ngrams(w, 2)).
   */
@@ -73,27 +70,9 @@ object TextStats {
   }
 
   /** struct(topc, total, n_distinct, n_bg) over an array<string> of words. */
-  case class WordRepStats(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = structType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"word_rep_stats requires array<string>, got $other")
-    }
-    override def nullSafeEval(input: Any): Any =
-      wordRepStatsKernel(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.TextStats.wordRepStatsKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): WordRepStats =
-      copy(child = newChild)
-    override def prettyName: String = "word_rep_stats"
-  }
-
   def word_rep_stats(tokens: Column): Column =
-    ColumnShim.column(WordRepStats(ColumnShim.expression(tokens)))
+    Kernel.column("word_rep_stats", "graft.functions.TextStats.wordRepStatsKernel",
+      Seq(tokens), Seq(ArrayType(StringType)), structType)
 
   private val blockStructType = StructType(Seq(
     StructField("n_blocks", LongType, nullable = false),
@@ -190,27 +169,9 @@ object TextStats {
 
   /** struct(n_blocks, dup_blocks, blk_chars, dup_chars, top_gram,
     * top_gram_n) over an array<string> of words. */
-  case class BlockRepStats(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = blockStructType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"block_rep_stats requires array<string>, got $other")
-    }
-    override def nullSafeEval(input: Any): Any =
-      blockRepStatsKernel(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.TextStats.blockRepStatsKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): BlockRepStats =
-      copy(child = newChild)
-    override def prettyName: String = "block_rep_stats"
-  }
-
   def block_rep_stats(tokens: Column): Column =
-    ColumnShim.column(BlockRepStats(ColumnShim.expression(tokens)))
+    Kernel.column("block_rep_stats", "graft.functions.TextStats.blockRepStatsKernel",
+      Seq(tokens), Seq(ArrayType(StringType)), blockStructType)
 
   private val entropyStructType = StructType(Seq(
     StructField("n_elems", LongType, nullable = false),
@@ -231,7 +192,7 @@ object TextStats {
     * BigDecimal.doubleValue — so the query's rounded entropy is
     * bit-identical (RepetitionSpec pins kernel == chain). Per-doc state
     * is one code-point→count map, bounded by document length — the
-    * WordRepStats memory class. */
+    * word_rep_stats memory class. */
   def charEntropyStatsKernel(s: org.apache.spark.unsafe.types.UTF8String): InternalRow = {
     val str = s.toString
     // split('') on the empty string yields [""] — one empty-string
@@ -259,25 +220,7 @@ object TextStats {
   }
 
   /** struct(n_elems, n_distinct, s) char-entropy statistics of a string. */
-  case class CharEntropyStats(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = entropyStructType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"char_entropy_stats requires string, got $other")
-    }
-    override def nullSafeEval(input: Any): Any =
-      charEntropyStatsKernel(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.TextStats.charEntropyStatsKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): CharEntropyStats =
-      copy(child = newChild)
-    override def prettyName: String = "char_entropy_stats"
-  }
-
   def char_entropy_stats(s: Column): Column =
-    ColumnShim.column(CharEntropyStats(ColumnShim.expression(s)))
+    Kernel.column("char_entropy_stats", "graft.functions.TextStats.charEntropyStatsKernel",
+      Seq(s), Seq(StringType), entropyStructType)
 }

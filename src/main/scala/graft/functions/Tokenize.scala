@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,8 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     Java and not a break here either.
   *   - `[a-z]+` / `[A-Za-z]` are ASCII classes; same byte-run argument.
   *
-  * Same expression discipline as [[VectorOps]]: `doGenCode` emits a
-  * static-kernel call, so the surrounding projection stays one
+  * Same discipline as [[VectorOps]]: each helper binds its static kernel
+  * through [[Kernel]], so the surrounding projection stays one
   * whole-stage-codegen span; no CodegenFallback, no UDF.
   */
 object Tokenize {
@@ -170,24 +167,9 @@ object Tokenize {
     StructField("sum_len", IntegerType, nullable = false)))
 
   /** struct(nw, n_stop, sum_len) classifier word stats over lower(text). */
-  case class QualityWordStats(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = qualityStructType
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkString(child.dataType, prettyName)
-    override def nullSafeEval(input: Any): Any =
-      qualityWordStatsKernel(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.Tokenize.qualityWordStatsKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): QualityWordStats =
-      copy(child = newChild)
-    override def prettyName: String = "quality_word_stats"
-  }
-
   def quality_word_stats(s: Column): Column =
-    ColumnShim.column(QualityWordStats(ColumnShim.expression(s)))
+    Kernel.column("quality_word_stats", "graft.functions.Tokenize.qualityWordStatsKernel",
+      Seq(s), Seq(StringType), qualityStructType)
 
   /** Ordered bigram HASH pairs over the \S+ tokens of `s`, with
     * multiplicity: struct(w1, w2) where wX = xxhash64(token) (XXH64,
@@ -241,24 +223,9 @@ object Tokenize {
     StructField("w2", LongType, nullable = false))), containsNull = false)
 
   /** array<struct<w1,w2>> of xxhash64'd adjacent \S+ token pairs. */
-  case class WsBigramHashes(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = bigramStructType
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkString(child.dataType, prettyName)
-    override def nullSafeEval(input: Any): Any =
-      wsBigramHashesKernel(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.Tokenize.wsBigramHashesKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): WsBigramHashes =
-      copy(child = newChild)
-    override def prettyName: String = "ws_bigram_hashes"
-  }
-
   def ws_bigram_hashes(s: Column): Column =
-    ColumnShim.column(WsBigramHashes(ColumnShim.expression(s)))
+    Kernel.column("ws_bigram_hashes", "graft.functions.Tokenize.wsBigramHashesKernel",
+      Seq(s), Seq(StringType), bigramStructType)
 
   /** Rolling polynomial fingerprint: left fold (acc·31 + codepoint) mod
     * 1e9+7 from seed 7 over the string's code points — ≡ the
@@ -285,24 +252,9 @@ object Tokenize {
 
   /** long rolling fingerprint of a string's code points (seed 7, ×31,
     * mod 1e9+7). */
-  case class PolyFingerprint(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkString(child.dataType, prettyName)
-    override def nullSafeEval(input: Any): Any =
-      polyFingerprintKernel(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.Tokenize.polyFingerprintKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): PolyFingerprint =
-      copy(child = newChild)
-    override def prettyName: String = "poly_fingerprint"
-  }
-
   def poly_fingerprint(s: Column): Column =
-    ColumnShim.column(PolyFingerprint(ColumnShim.expression(s)))
+    Kernel.column("poly_fingerprint", "graft.functions.Tokenize.polyFingerprintKernel",
+      Seq(s), Seq(StringType), LongType)
 
   /** All adjacent character-pair CODES (c₀·256 + c₁) of the [a-z]+ runs
     * of `s`, with multiplicity, in one byte scan — ≡ the BPE trainer's
@@ -344,24 +296,9 @@ object Tokenize {
   }
 
   /** array<int> of adjacent [a-z] pair codes over lower(text). */
-  case class AlphaPairCodes(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkString(child.dataType, prettyName)
-    override def nullSafeEval(input: Any): Any =
-      alphaPairCodesKernel(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.Tokenize.alphaPairCodesKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): AlphaPairCodes =
-      copy(child = newChild)
-    override def prettyName: String = "alpha_pair_codes"
-  }
-
   def alpha_pair_codes(s: Column): Column =
-    ColumnShim.column(AlphaPairCodes(ColumnShim.expression(s)))
+    Kernel.column("alpha_pair_codes", "graft.functions.Tokenize.alphaPairCodesKernel",
+      Seq(s), Seq(StringType), ArrayType(IntegerType, containsNull = false))
 
   /** struct(n_chars, n_tokens) of a word array under a learned BPE merge
     * list: n_chars = Σ length(word), n_tokens = Σ length(encode(word))
@@ -424,108 +361,33 @@ object Tokenize {
     StructField("n_tokens", LongType, nullable = false)))
 
   /** struct(n_chars, n_tokens) BPE-encode counts over a word array. */
-  case class BpeCounts(child: Expression, merges: Seq[String])
-      extends UnaryExpression {
+  def bpe_counts(words: Column, merges: Seq[String]): Column = {
     require(merges.length <= 26 &&
         merges.forall(m => m.length == 2 && m.forall(c => c >= 'a' && c <= 'z')),
       s"bpe_counts merges must be 2-char [a-z] pairs, got $merges")
-    override def dataType: DataType = bpeStructType
-    override def nullable: Boolean = true // a null element nulls the fold
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"bpe_counts requires array<string>, got $other")
-    }
-    @transient private lazy val pairBytes: Array[Array[Byte]] =
-      merges.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
-    @transient private lazy val markerBytes: Array[Byte] =
-      merges.indices.map(i => ('A' + i).toByte).toArray
-    override def nullSafeEval(input: Any): Any =
-      bpeCountsKernel(input.asInstanceOf[ArrayData], pairBytes, markerBytes)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-      val ps = ctx.addReferenceObj("bpePairs", pairBytes, "byte[][]")
-      val ms = ctx.addReferenceObj("bpeMarkers", markerBytes, "byte[]")
-      nullSafeCodeGen(ctx, ev, a =>
-        s"""${ev.value} = graft.functions.Tokenize.bpeCountsKernel($a, $ps, $ms);
-           |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-    }
-    override protected def withNewChildInternal(newChild: Expression): BpeCounts =
-      copy(child = newChild)
-    override def prettyName: String = "bpe_counts"
+    val pairs = merges.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+    val markers = merges.indices.map(i => ('A' + i).toByte).toArray
+    // a null element nulls the fold
+    Kernel.column("bpe_counts", "graft.functions.Tokenize.bpeCountsKernel",
+      Seq(words), Seq(ArrayType(StringType)), bpeStructType, Seq(pairs, markers),
+      nullResult = true)
   }
 
-  def bpe_counts(words: Column, merges: Seq[String]): Column =
-    ColumnShim.column(BpeCounts(ColumnShim.expression(words), merges))
-
-  private def checkString(dt: DataType, name: String): TypeCheckResult =
-    dt match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"$name requires string, got $other")
-    }
-
-  /** ≡ regexp_extract_all(child, '\\S+', 0); same ArrayType(StringType)
+  /** ≡ regexp_extract_all(s, '\\S+', 0); same ArrayType(StringType)
     * (containsNull = true) as RegExpExtractAll so downstream schema
     * nullability — and therefore every contract-output schema — is
     * byte-identical to the regexp plan's. */
-  case class WsTokens(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType)
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkString(child.dataType, prettyName)
-    override def nullSafeEval(input: Any): Any =
-      wsTokensKernel(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.Tokenize.wsTokensKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): WsTokens =
-      copy(child = newChild)
-    override def prettyName: String = "ws_tokens"
-  }
-
-  /** ≡ regexp_extract_all(child, '[a-z]+', 0). */
-  case class AlphaRuns(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType)
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkString(child.dataType, prettyName)
-    override def nullSafeEval(input: Any): Any =
-      alphaRunsKernel(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.Tokenize.alphaRunsKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): AlphaRuns =
-      copy(child = newChild)
-    override def prettyName: String = "alpha_runs"
-  }
-
-  /** ≡ size(regexp_extract_all(child, '[A-Za-z]', 0)) for non-null input. */
-  case class CountAlpha(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkString(child.dataType, prettyName)
-    override def nullSafeEval(input: Any): Any =
-      countAlphaKernel(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.Tokenize.countAlphaKernel($a);")
-    override protected def withNewChildInternal(newChild: Expression): CountAlpha =
-      copy(child = newChild)
-    override def prettyName: String = "count_alpha"
-  }
-
   def ws_tokens(s: Column): Column =
-    ColumnShim.column(WsTokens(ColumnShim.expression(s)))
+    Kernel.column("ws_tokens", "graft.functions.Tokenize.wsTokensKernel",
+      Seq(s), Seq(StringType), ArrayType(StringType))
 
+  /** ≡ regexp_extract_all(s, '[a-z]+', 0). */
   def alpha_runs(s: Column): Column =
-    ColumnShim.column(AlphaRuns(ColumnShim.expression(s)))
+    Kernel.column("alpha_runs", "graft.functions.Tokenize.alphaRunsKernel",
+      Seq(s), Seq(StringType), ArrayType(StringType))
 
+  /** ≡ size(regexp_extract_all(s, '[A-Za-z]', 0)) for non-null input. */
   def count_alpha(s: Column): Column =
-    ColumnShim.column(CountAlpha(ColumnShim.expression(s)))
+    Kernel.column("count_alpha", "graft.functions.Tokenize.countAlphaKernel",
+      Seq(s), Seq(StringType), IntegerType)
 }

@@ -1,15 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
 import scala.util.hashing.MurmurHash3
 
-/** Native vector/sketch expressions for the similarity operators.
+/** Native vector/sketch kernels for the similarity operators.
   *
   * These replace `aggregate`/`zip_with` higher-order-function chains in the
   * pair-scoring hot path: HOFs evaluate a lambda per element per row
@@ -18,8 +15,8 @@ import scala.util.hashing.MurmurHash3
   * the exact same left-to-right double accumulation, so results (and the
   * DuckDB oracle hashes) are bit-identical.
   *
-  * Each expression participates in whole-stage codegen via `doGenCode`
-  * emitting a call to its static kernel (the JIT inlines it) — no
+  * Each helper binds its static kernel through [[Kernel]], whose
+  * generated code calls the kernel directly (the JIT inlines it) — no
   * CodegenFallback, so surrounding projections stay in one generated
   * stage.
   */
@@ -36,53 +33,10 @@ object VectorOps {
     s
   }
 
-  /** Left-to-right Σ aᵢ·bᵢ over two double arrays. */
-  case class DotProductD(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case other =>
-          TypeCheckResult.TypeCheckFailure(s"dot_d requires array<double> args, got $other")
-      }
-    override def nullSafeEval(l: Any, r: Any): Any =
-      dotKernel(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.VectorOps.dotKernel($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-      copy(left = l, right = r)
-    override def prettyName: String = "dot_d"
-  }
-
   /** MinHash signature (nHash values) over a string array in ONE pass per
     * element: two murmur runs per shingle, then the j-th hash is
     * h1 + j·h2 (Kirsch–Mitzenmacher construction) — vs. nHash independent
     * hash passes, same LSH properties. */
-  case class MinHashSig(child: Expression, nHash: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"minhash_sig requires array<string>, got $other")
-    }
-    override def nullSafeEval(input: Any): Any =
-      minHashSigKernel(input.asInstanceOf[ArrayData], nHash)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.VectorOps.minHashSigKernel($a, $nHash);")
-    override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-      copy(child = newChild)
-    override def prettyName: String = "minhash_sig"
-  }
-
   def minHashSigKernel(arr: ArrayData, nHash: Int): GenericArrayData = {
     val mins = Array.fill(nHash)(Long.MaxValue)
     var i = 0
@@ -112,26 +66,6 @@ object VectorOps {
     * mixing the n consecutive token hashes, then Kirsch–Mitzenmacher
     * extends to nHash values. Duplicate shingles are harmless (min is
     * idempotent), so no distinct pass is needed. */
-  case class MinHashShingled(child: Expression, gram: Int, nHash: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"minhash_shingled requires array<string>, got $other")
-    }
-    override def nullSafeEval(input: Any): Any =
-      minHashShingledKernel(input.asInstanceOf[ArrayData], gram, nHash)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.VectorOps.minHashShingledKernel($a, $gram, $nHash);")
-    override protected def withNewChildInternal(newChild: Expression): MinHashShingled =
-      copy(child = newChild)
-    override def prettyName: String = "minhash_shingled"
-  }
-
   def minHashShingledKernel(arr: ArrayData, gram: Int, nHash: Int): GenericArrayData = {
     {
       val n = arr.numElements()
@@ -171,29 +105,9 @@ object VectorOps {
     }
   }
 
-  /** Distinct space-joined word n-grams as a native expression — replaces a
+  /** Distinct space-joined word n-grams as a native kernel — replaces a
     * transform(sequence)+slice+array_join HOF chain (one interpreted lambda
     * per gram) with a single pass and a dedup set. */
-  case class WordNGrams(child: Expression, gram: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"word_ngrams requires array<string>, got $other")
-    }
-    override def nullSafeEval(input: Any): Any =
-      wordNGramsKernel(input.asInstanceOf[ArrayData], gram)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.VectorOps.wordNGramsKernel($a, $gram);")
-    override protected def withNewChildInternal(newChild: Expression): WordNGrams =
-      copy(child = newChild)
-    override def prettyName: String = "word_ngrams"
-  }
-
   def wordNGramsKernel(arr: ArrayData, gram: Int): GenericArrayData = {
     {
       val n = arr.numElements()
@@ -243,26 +157,6 @@ object VectorOps {
     * collision merges two different grams; an intra-doc collision is
     * strictly rarer, ~m²/2⁶⁵ per doc). Output order is the first-seen
     * gram order; every consumer feeds order-invariant aggregates. */
-  case class GramHashes(child: Expression, gram: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"gram_hashes requires array<string>, got $other")
-    }
-    override def nullSafeEval(input: Any): Any =
-      gramHashesKernel(input.asInstanceOf[ArrayData], gram)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.VectorOps.gramHashesKernel($a, $gram);")
-    override protected def withNewChildInternal(newChild: Expression): GramHashes =
-      copy(child = newChild)
-    override def prettyName: String = "gram_hashes"
-  }
-
   def gramHashesKernel(arr: ArrayData, gram: Int): GenericArrayData = {
     val n = arr.numElements()
     val toks = new Array[Array[Byte]](n)
@@ -311,38 +205,6 @@ object VectorOps {
     * formulation and the DuckDB oracle), then emit the concatenation of
     * chosen codewords. Replaces an M×K struct-array expression tree whose
     * generated code dominated the query's runtime with one kernel call. */
-  case class PqReconstruct(child: Expression, codebooks: Array[Array[Array[Double]]])
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"pq_reconstruct requires array<double>, got $other")
-    }
-    // per-codeword ‖cw‖², summed in the same left-to-right order the kernel
-    // (and the oracle's list_reduce) uses — constant across rows, so
-    // computed once here instead of per input row
-    @transient private lazy val norms: Array[Array[Double]] =
-      codebooks.map(_.map { cw =>
-        var s = 0.0; var i = 0
-        while (i < cw.length) { s += cw(i) * cw(i); i += 1 }
-        s
-      })
-    override def nullSafeEval(input: Any): Any =
-      pqReconstructKernel(input.asInstanceOf[ArrayData], codebooks, norms)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-      val cb = ctx.addReferenceObj("pqCodebooks", codebooks, "double[][][]")
-      val nm = ctx.addReferenceObj("pqNorms", norms, "double[][]")
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.VectorOps.pqReconstructKernel($a, $cb, $nm);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): PqReconstruct =
-      copy(child = newChild)
-    override def prettyName: String = "pq_reconstruct"
-  }
-
   def pqReconstructKernel(arr: ArrayData,
       codebooks: Array[Array[Array[Double]]],
       norms: Array[Array[Double]]): GenericArrayData = {
@@ -381,21 +243,41 @@ object VectorOps {
     new GenericArrayData(out)
   }
 
-  def pq_reconstruct(v: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    ColumnShim.column(PqReconstruct(ColumnShim.expression(v), codebooks))
+  private val Tokens = ArrayType(StringType)
+  private val Longs = ArrayType(LongType, containsNull = false)
+
+  def pq_reconstruct(v: Column, codebooks: Array[Array[Array[Double]]]): Column = {
+    // per-codeword ‖cw‖², summed in the same left-to-right order the kernel
+    // (and the oracle's list_reduce) uses — constant across rows, so
+    // computed once here instead of per input row
+    val norms = codebooks.map(_.map { cw =>
+      var s = 0.0; var i = 0
+      while (i < cw.length) { s += cw(i) * cw(i); i += 1 }
+      s
+    })
+    Kernel.column("pq_reconstruct", "graft.functions.VectorOps.pqReconstructKernel",
+      Seq(v), Seq(ArrayType(DoubleType)), ArrayType(DoubleType, containsNull = false),
+      Seq(codebooks, norms))
+  }
 
   def word_ngrams(tokens: Column, gram: Int): Column =
-    ColumnShim.column(WordNGrams(ColumnShim.expression(tokens), gram))
+    Kernel.column("word_ngrams", "graft.functions.VectorOps.wordNGramsKernel",
+      Seq(tokens), Seq(Tokens), ArrayType(StringType, containsNull = false), Seq(gram))
 
   def gram_hashes(tokens: Column, gram: Int): Column =
-    ColumnShim.column(GramHashes(ColumnShim.expression(tokens), gram))
+    Kernel.column("gram_hashes", "graft.functions.VectorOps.gramHashesKernel",
+      Seq(tokens), Seq(Tokens), Longs, Seq(gram))
 
   def minhash_shingled(tokens: Column, gram: Int, nHash: Int): Column =
-    ColumnShim.column(MinHashShingled(ColumnShim.expression(tokens), gram, nHash))
+    Kernel.column("minhash_shingled", "graft.functions.VectorOps.minHashShingledKernel",
+      Seq(tokens), Seq(Tokens), Longs, Seq(gram, nHash))
 
+  /** Left-to-right Σ aᵢ·bᵢ over two double arrays. */
   def dot_d(a: Column, b: Column): Column =
-    ColumnShim.column(DotProductD(ColumnShim.expression(a), ColumnShim.expression(b)))
+    Kernel.column("dot_d", "graft.functions.VectorOps.dotKernel",
+      Seq(a, b), Seq(ArrayType(DoubleType), ArrayType(DoubleType)), DoubleType)
 
   def minhash_sig(shingles: Column, nHash: Int): Column =
-    ColumnShim.column(MinHashSig(ColumnShim.expression(shingles), nHash))
+    Kernel.column("minhash_sig", "graft.functions.VectorOps.minHashSigKernel",
+      Seq(shingles), Seq(Tokens), Longs, Seq(nHash))
 }

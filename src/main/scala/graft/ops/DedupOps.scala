@@ -7,7 +7,7 @@ import graft.functions.SimHash64
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash-groupBy), exact n-gram Jaccard (inverted-index join),
-  * MinHash+LSH banding, SimHash (custom Catalyst expression), and
+  * MinHash+LSH banding, SimHash (native kernel), and
   * embedding-cosine near-dup.
   *
   * Scale design: every pair-generating path goes through an inverted index

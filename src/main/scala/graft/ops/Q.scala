@@ -35,9 +35,4 @@ object Q {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle))
-
-  /** Non-SQL-expressible op: the driver records a weaker rows-only check;
-    * correctness is pinned by a ScalaTest spec instead. */
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }

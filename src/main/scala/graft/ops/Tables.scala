@@ -66,45 +66,32 @@ object Tables {
   }
 
   /** Scheduled partition count of a single-file-relation plan, from the
-    * file listing alone (no RDD, no physical planning). Mirrors Spark's
-    * `FilePartition`: maxSplitBytes = min(maxPartitionBytes,
-    * max(openCostInBytes, totalBytes/minPartitionNum)); files split at
-    * maxSplitBytes (parquet is splittable), splits sorted descending and
-    * greedily packed, each split costed at length + openCost. None when
-    * the plan is not exactly one HadoopFsRelation (fallback path). */
-  private def plannedScanPartitions(s: SparkSession, df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    * file listing alone (no RDD, no physical planning), through the calls
+    * the file scan makes: `FilePartition.maxSplitBytes`,
+    * `PartitionedFileUtil.splitFiles` per file, and
+    * `FilePartition.getFilePartitions` over the splits, largest first.
+    * None when the plan is not exactly one HadoopFsRelation (fallback
+    * path). */
+  private[ops] def plannedScanPartitions(s: SparkSession, df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     val rels = df.queryExecution.analyzed.collect {
       case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
         l.relation.asInstanceOf[HadoopFsRelation]
     }
     if (rels.size != 1) None
     else {
-      val conf = s.sessionState.conf
-      val maxPartitionBytes = conf.filesMaxPartitionBytes
-      val openCost = conf.filesOpenCostInBytes
-      val minPartitionNum =
-        conf.filesMinPartitionNum.getOrElse(s.sparkContext.defaultParallelism)
-      val lens = rels.head.location.listFiles(Nil, Nil)
-        .flatMap(_.files).map(_.getLen).filter(_ > 0)
-      val totalBytes = lens.map(_ + openCost).sum
-      val bytesPerCore = totalBytes / math.max(1, minPartitionNum)
-      val maxSplit = math.min(maxPartitionBytes, math.max(openCost, bytesPerCore))
-      val splits = lens.flatMap { len =>
-        (0L until len by maxSplit).map(off => math.min(maxSplit, len - off))
-      }.sortBy(-_)
-      var parts = 0
-      var currentSize = 0L
-      var currentFiles = 0
-      splits.foreach { sz =>
-        if (currentSize + sz > maxSplit && currentFiles > 0) {
-          parts += 1; currentSize = 0L; currentFiles = 0
+      val rel = rels.head
+      val dirs = rel.location.listFiles(Nil, Nil)
+      val maxSplit = FilePartition.maxSplitBytes(s, dirs)
+      val splits = dirs.flatMap { dir =>
+        dir.files.flatMap { f =>
+          val path = f.getPath
+          PartitionedFileUtil.splitFiles(f, path,
+            rel.fileFormat.isSplitable(s, rel.options, path), maxSplit, dir.values)
         }
-        currentSize += sz + openCost
-        currentFiles += 1
-      }
-      if (currentFiles > 0) parts += 1
-      Some(parts)
+      }.sortBy(_.length)(Ordering[Long].reverse)
+      Some(FilePartition.getFilePartitions(s, splits, maxSplit).size)
     }
   }
 

@@ -787,7 +787,7 @@ object TextOps {
     // text is ASCII, so the query PLANTS deterministic decomposed
     // sequences and literal tab/newline runs per doc (chr()-built in both
     // engines), then pins md5 of the cleaned result. NFC runs as the
-    // native [[graft.functions.NormalizeNFC]] expression (codegen'd,
+    // native [[graft.functions.NormalizeNFC]] kernel (codegen'd,
     // zero-copy fast path on already-normal text — the 99%+ case at
     // scale); DuckDB replays it with ICU nfc_normalize. Pure projection,
     // zero shuffle.
@@ -836,7 +836,7 @@ object TextOps {
     //
     // Scale: every signal here is a quantity that never leaves its own
     // document, so the whole query is a PURE PROJECTION via the native
-    // [[graft.functions.TextStats.BlockRepStats]] kernel (one O(words)
+    // [[graft.functions.TextStats.block_rep_stats]] kernel (one O(words)
     // pass, two hash maps) — zero shuffle except the contract ORDER BY.
     // The first cut as explode → groupBy(doc, token) aggregation lanes
     // measured 101 s at the 1.3M-doc tier (a corpus-sized string

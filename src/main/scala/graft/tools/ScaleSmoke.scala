@@ -63,7 +63,7 @@ object ScaleSmoke {
     // graph at the 100k-vector tier
     "dedup_paragraph_gated", "knn_graph_ivf",
     // the intra-doc Gopher-repetition pair — both pure projections
-    // (BlockRepStats kernel / array_distinct reassembly)
+    // (block_rep_stats kernel / array_distinct reassembly)
     "text_repetition_stats", "text_repetition_rewrite")
 
   /** The lanes a comma list names, in sweep order; None selects all.

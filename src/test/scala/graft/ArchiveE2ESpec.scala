@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.BusDrain
+
 import graft.config.ArchiverConfig
 import graft.dml.DeleteBack
+import graft.metrics.MetricsRecorder
 import graft.sink.{Retry, StagedLoader}
 
 /** End-to-end pipeline tests in the spirit of the reference's workflow
@@ -29,7 +32,13 @@ class ArchiveE2ESpec extends SparkSpec {
     val schema = spark.read.parquet(s"$srcDir/orders.parquet").schema
     val archiver = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
       schema, pacingSleep = _ => ())
-    val report = archiver.run()
+    // a recorder around the same run, read after a drain, sees every task
+    // of the run: the report's own snapshot must not miss the last jobs
+    BusDrain.drain(spark.sparkContext)
+    val outer = MetricsRecorder.attach(spark)
+    val report =
+      try archiver.run()
+      finally { BusDrain.drain(spark.sparkContext); MetricsRecorder.detach(spark, outer) }
 
     val expected = spark.read.parquet(s"$srcDir/orders.parquet")
       .where("o_totalprice > 1000").count()
@@ -37,6 +46,7 @@ class ArchiveE2ESpec extends SparkSpec {
     assert(report.reconciliation.targetRows == expected)
     assert(report.tables.head.rowsLoaded == expected)
     assert(report.metrics.rowsRead > 0)
+    assert(report.metrics.rowsRead == outer.snapshot.rowsRead)
   }
 
   test("time-split archive: events windows load sequentially and reconcile") {

@@ -112,7 +112,7 @@ class JdbcE2ESpec extends SparkSpec {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet(): Unit
     }
-    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    org.apache.spark.BusDrain.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       assert(src.expandDbTables(Seq("ARCH.*@ORDERS.*")) ==
@@ -123,7 +123,7 @@ class JdbcE2ESpec extends SparkSpec {
       assert(src.minMaxTime("ARCHDB", "ORDERS_ARCHIVE", "TS", "1=1")._1.nonEmpty)
       assert(DeleteBack.executeJdbc(url, derbyProps,
         DeleteBack.deleteSql("ARCHDB", "ORDERS_ARCHIVE", "ID > 9999", limit = None)) == 0L)
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      org.apache.spark.BusDrain.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get == 0, "control statements must not run as Spark jobs")
   }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.SpecBus
+import org.apache.spark.BusDrain
 import org.apache.spark.sql.functions.{max, min}
 
 import graft.metrics.MetricsRecorder
@@ -28,12 +28,12 @@ class StagedLoaderSpec extends SparkSpec {
     val n = src.count()
     val loader = new StagedLoader(spark, tgt, src.schema,
       orderedCommitKey = Some("o_orderkey"))
-    SpecBus.drain(spark.sparkContext)
+    BusDrain.drain(spark.sparkContext)
     val rec = MetricsRecorder.attach(spark)
     val loaded =
       try {
         val l = loader.ingest(src, s"$root/stg")
-        SpecBus.drain(spark.sparkContext)
+        BusDrain.drain(spark.sparkContext)
         l
       } finally MetricsRecorder.detach(spark, rec)
     assert(loaded == n)

@@ -7,7 +7,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import graft.SparkSpec
+import graft.{MainSources, SparkSpec}
 
 /** [[Memo]]'s lock discipline and lifetime contract, the bloom-join clone
   * it now holds, and the rules that it is the only cross-query memo and
@@ -90,27 +90,8 @@ class MemoSpec extends SparkSpec {
     assert(Memo.size == n, "each call must reuse the one configured clone")
   }
 
-  /** Files under src/main/scala, other than `allowed`, whose text matches
-    * `pattern` (comments included, as grep reads them). */
-  private def offenders(pattern: String, allowed: Set[String]): Seq[String] = {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val re = pattern.r
-    walk(root).map(f => root.toPath.relativize(f.toPath).toString.replace('\\', '/'))
-      .filter(rel => !allowed(rel) && re.findFirstIn(mainSource(rel)).isDefined)
-  }
-
-  /** Text of `rel` under src/main/scala. */
-  private def mainSource(rel: String): String = {
-    val src = scala.io.Source.fromFile(new java.io.File("src/main/scala", rel), "UTF-8")
-    try src.mkString finally src.close()
-  }
-
   test("no file under src/main/scala but Memo and TempDirs declares a ConcurrentHashMap") {
-    val bad = offenders("ConcurrentHashMap",
+    val bad = MainSources.offenders("ConcurrentHashMap",
       Set("graft/ops/Memo.scala", "graft/ops/TempDirs.scala"))
     assert(bad.isEmpty,
       "cross-query reuse goes through graft.ops.Memo; ad-hoc maps in: " +
@@ -126,16 +107,16 @@ class MemoSpec extends SparkSpec {
     // session for every streaming query anyway)
     val sites = Set("graft/ops/RelationalOps.scala", "graft/ops/StreamingOps.scala")
     val clone = """\.newSession\("""
-    val bad = offenders(clone, sites)
+    val bad = MainSources.offenders(clone, sites)
     assert(bad.isEmpty, "per-call session clones in: " + bad.mkString(", "))
     sites.foreach { rel =>
-      assert(clone.r.findAllIn(mainSource(rel)).size == 1,
+      assert(clone.r.findAllIn(MainSources.text(rel)).size == 1,
         s"$rel must clone a session at exactly one site")
     }
   }
 
   test("no file under src/main/scala but Materialize checkpoints, caches or persists") {
-    val bad = offenders("""localCheckpoint|\.cache\(\)|\.persist\(""",
+    val bad = MainSources.offenders("""localCheckpoint|\.cache\(\)|\.persist\(""",
       Set("graft/ops/Materialize.scala"))
     assert(bad.isEmpty,
       "in-query materialization goes through graft.ops.Materialize; found in: " +

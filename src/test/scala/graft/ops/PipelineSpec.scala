@@ -106,7 +106,7 @@ class PipelineSpec extends SparkSpec {
       // conventions live in two kernels, so pin their equivalence here
       assert(row.getLong(3) ==
         graft.functions.VectorOps.wordNGramsKernel(arr, 2).numElements().toLong,
-        s"WordRepStats and WordNGrams bigram conventions diverged for $toks")
+        s"word_rep_stats and word_ngrams bigram conventions diverged for $toks")
     }
   }
 
@@ -173,9 +173,9 @@ class PipelineSpec extends SparkSpec {
         override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           n.incrementAndGet(): Unit
       }
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      org.apache.spark.BusDrain.drain(spark.sparkContext)
       spark.sparkContext.addSparkListener(l)
-      try { body; org.apache.spark.SpecBus.drain(spark.sparkContext) }
+      try { body; org.apache.spark.BusDrain.drain(spark.sparkContext) }
       finally spark.sparkContext.removeSparkListener(l)
       n.get
     }

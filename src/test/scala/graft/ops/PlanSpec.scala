@@ -469,6 +469,8 @@ class PlanSpec extends SparkSpec {
       .repartition(target * 2).write.mode("overwrite").parquet(s"$dir/docs")
     val presplit = spark.read.parquet(s"$dir/docs")
     assert(presplit.rdd.getNumPartitions >= target, "fixture must be pre-split")
+    assert(graft.ops.Tables.plannedScanPartitions(spark, presplit) ==
+      Some(presplit.rdd.getNumPartitions), "planned count must be the scan's")
     val fanned = graft.ops.Tables.fan(spark, presplit)
     val p = fanned.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
