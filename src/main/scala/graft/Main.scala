@@ -10,12 +10,13 @@ import graft.config.ArchiverConfig
   * print reconciliation and wall-clock.
   *
   * Usage: runMain graft.Main <conf.json> <sourceDir> <targetDir>
-  *          [--incremental | --incremental-time] [--landing json|csv]
+  *          [--incremental] [--landing json|csv]
   *
-  * `--incremental` / `--incremental-time` run the high-watermark delta
-  * sync (key- or time-flavored) instead of the full archive: resume from
-  * max(split key) already in the target, load only newer rows, reconcile
-  * over the full predicate. The scheduled-delta deployment mode.
+  * `--incremental` runs the high-watermark delta sync instead of the full
+  * archive: resume from the max split key already in the target, load
+  * only newer rows, reconcile over the full predicate. The config's split
+  * key picks the flavour: `sourceSplitKey` a key delta,
+  * `sourceSplitTimeKey` a time delta. The scheduled-delta deployment mode.
   * `--landing json|csv` treats <sourceDir> as a file landing zone
   * (NDJSON/CSV drops) instead of parquet tables; the sink schema comes
   * from the config table's first drop.
@@ -24,13 +25,12 @@ object Main {
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     val Array(confPath, sourceDir, targetDir) = args.take(3)
-    var mode = "full"
+    var incremental = false
     var landing: Option[String] = None
     var rest = args.drop(3).toList
     while (rest.nonEmpty) rest match {
-      case "--incremental" :: t      => mode = "incremental"; rest = t
-      case "--incremental-time" :: t => mode = "incremental-time"; rest = t
-      case "--landing" :: fmt :: t   => landing = Some(fmt); rest = t
+      case "--incremental" :: t    => incremental = true; rest = t
+      case "--landing" :: fmt :: t => landing = Some(fmt); rest = t
       case other :: _ => sys.error(s"unknown flag: $other")
       case Nil        => ()
     }
@@ -54,7 +54,7 @@ object Main {
       "graft-signal-cancel")
     Runtime.getRuntime.addShutdownHook(hook)
     val correct =
-      try run(spark, cfg, sourceDir, targetDir, t0, mode, landing)
+      try run(spark, cfg, sourceDir, targetDir, t0, incremental, landing)
       finally {
         try Runtime.getRuntime.removeShutdownHook(hook)
         catch { case _: IllegalStateException => () } // already shutting down
@@ -101,16 +101,16 @@ object Main {
     * returns whether reconciliation passed. */
   def run(spark: SparkSession, cfg: ArchiverConfig,
       sourceDir: String, targetDir: String,
-      t0: Long = System.nanoTime(), mode: String = "full",
+      t0: Long = System.nanoTime(), incremental: Boolean = false,
       landing: Option[String] = None): Boolean = try {
     spark.sparkContext.setJobGroup(JobGroup, "graft archive run",
       interruptOnCancel = true)
-    runBody(spark, cfg, sourceDir, targetDir, t0, mode, landing)
+    runBody(spark, cfg, sourceDir, targetDir, t0, incremental, landing)
   } finally spark.sparkContext.clearJobGroup()
 
   private def runBody(spark: SparkSession, cfg: ArchiverConfig,
       sourceDir: String, targetDir: String,
-      t0: Long, mode: String,
+      t0: Long, incremental: Boolean,
       landing: Option[String]): Boolean = {
     val archiver = landing match {
       case Some(fmt) =>
@@ -130,12 +130,7 @@ object Main {
         Archiver.parquet(spark, cfg, sourceDir, targetDir,
           staging(targetDir), sinkSchema)
     }
-    val report = mode match {
-      case "full"             => archiver.run()
-      case "incremental"      => archiver.runIncremental()
-      case "incremental-time" => archiver.runIncrementalTime()
-      case other              => sys.error(s"unknown mode: $other")
-    }
+    val report = if (incremental) archiver.runIncremental() else archiver.run()
     report.tables.foreach(t =>
       println(s"[archive] ${t.db}.${t.table}: ${t.rowsLoaded} rows"))
     val rc = report.reconciliation

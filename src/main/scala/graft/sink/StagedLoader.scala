@@ -14,8 +14,8 @@ import graft.ParquetFooters
   * Staging + load mirrors the reference's stage-upload + COPY INTO
   * (ingester/ingest_databend.go:106-195): the batch is written as NDJSON to
   * a staging directory, then loaded into the target with column alignment
-  * by name — absent columns take defaults (`missing_field_as =
-  * FIELD_DEFAULT`), unknown columns are dropped. `purge` deletes the
+  * by name — absent columns are NULL (`missing_field_as = FIELD_DEFAULT`
+  * over columns without a default), unknown columns are dropped. `purge` deletes the
   * staging files after a successful load (COPY ... PURGE = true).
   *
   * All target/staging I/O goes through the Hadoop FileSystem API, so the
@@ -44,8 +44,7 @@ import graft.ParquetFooters
   *   `max(committed key)` remains a sound incremental watermark (see
   *   Archiver.runIncremental). */
 final class StagedLoader(spark: SparkSession, val targetDir: String,
-    sinkSchema: StructType, defaults: Map[String, Any] = Map.empty,
-    purge: Boolean = true, compression: String = "gzip",
+    sinkSchema: StructType, purge: Boolean = true, compression: String = "gzip",
     val orderedCommitKey: Option[String] = None,
     stagingFormat: String = "json") {
 
@@ -68,9 +67,9 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
   private def ensureRecovered(): Unit =
     Compaction.recover(spark, targetDir): Unit
 
-  /** Idempotency pre-check (cmd/main.go:74-82): refuse to start when the
-    * target already holds rows matching the predicate. */
-  def syncedCount(where: String): Long = {
+  /** Target rows matching `where`: the idempotency gate's count
+    * (cmd/main.go:74-82) and reconciliation's target side. */
+  def targetCount(where: String): Long = {
     ensureRecovered()
     if (!fsOf(targetPath).exists(targetPath)) 0L
     else spark.read.schema(sinkSchema).parquet(targetDir).where(where).count()
@@ -269,16 +268,14 @@ final class StagedLoader(spark: SparkSession, val targetDir: String,
     StructType(sinkSchema.fields.map(_.copy(nullable = true)))
 
   /** FIELD_DEFAULT alignment: select sink columns by name; a column absent
-    * from the batch takes its configured default (else null). */
+    * from the batch is NULL. */
   def align(df: DataFrame): DataFrame = {
     val present = df.columns.toSet
     df.select(sinkSchema.fields.map { f =>
       if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(defaults.getOrElse(f.name, null)).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
   }
-
-  def targetCount(where: String = "true"): Long = syncedCount(where)
 
   /** High-watermark read for incremental sync: max of the split key
     * already in the target (None when the target is empty/absent).

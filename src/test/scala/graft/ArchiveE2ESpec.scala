@@ -243,12 +243,12 @@ class ArchiveE2ESpec extends SparkSpec {
     val schema = spark.read.parquet(s"$srcDir/events.parquet").schema
     def mk() = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
       schema, pacingSleep = _ => ())
-    val r1 = mk().runIncrementalTime()
+    val r1 = mk().runIncremental()
     assert(r1.reconciliation.correct, r1.reconciliation)
     val day1 = r1.tables.head.rowsLoaded
     assert(day1 == full.where(s"ts < '$cut'").count())
     full.write.mode("overwrite").parquet(s"$srcDir/events.parquet")
-    val r2 = mk().runIncrementalTime()
+    val r2 = mk().runIncremental()
     assert(r2.reconciliation.correct, r2.reconciliation)
     assert(r2.tables.head.rowsLoaded == full.count() - day1,
       "second run must load only events past the watermark")
@@ -487,5 +487,25 @@ class ArchiveE2ESpec extends SparkSpec {
     plain.ingest(src, stg2): Unit
     val staged2 = new java.io.File(stg2).listFiles().filter(_.getName.startsWith("part-"))
     assert(staged2.nonEmpty && staged2.forall(_.getName.endsWith(".json")))
+  }
+
+  test("one run body: src/main/scala builds RunReport once and Archiver only in wire") {
+    // full and delta runs share Archiver's one run body; a second
+    // RunReport construction or an Archiver built inside another is the
+    // fork that once let a delta run drop the quarantine audit
+    val file = "graft/Archiver.scala"
+    val text = MainSources.text(file)
+    val report = """(?<!class )RunReport\("""
+    val bad = MainSources.offenders(report, Set(file))
+    assert(bad.isEmpty, "RunReport built outside Archiver in: " + bad.mkString(", "))
+    assert(report.r.findAllIn(text).size == 1, s"$file must build RunReport at one site")
+    val ctor = """new\s+Archiver\("""
+    val ctorBad = MainSources.offenders(ctor, Set(file))
+    assert(ctorBad.isEmpty, "Archiver constructed outside its companion in: " +
+      ctorBad.mkString(", "))
+    val wire = text.indexOf("private def wire(")
+    assert(wire >= 0 && ctor.r.findAllIn(text).size == 1 &&
+      ctor.r.findAllIn(text.substring(wire)).size == 1,
+      s"$file must construct Archiver only in the companion's wire")
   }
 }

@@ -117,12 +117,12 @@ class FileSourceSpec extends SparkSpec {
     val archiver = new Archiver(spark, cfg, src, loader, s"$out/staging",
       pacingSleep = _ => ())
     val n1 = events.where(org.apache.spark.sql.functions.col("ts") <= cut).count()
-    val r1 = archiver.runIncrementalTime()
+    val r1 = archiver.runIncremental()
     assert(r1.reconciliation.correct && r1.reconciliation.targetRows == n1,
       r1.toString)
     // second drop: the rest of the feed; only rows past the watermark load
     dump(events.where(org.apache.spark.sql.functions.col("ts") > cut))
-    val r2 = archiver.runIncrementalTime()
+    val r2 = archiver.runIncremental()
     val nAll = events.count()
     assert(r2.reconciliation.correct && r2.reconciliation.targetRows == nAll,
       r2.toString)
@@ -183,11 +183,10 @@ class FileSourceSpec extends SparkSpec {
       orders.where("o_totalprice > 0").count())
   }
 
-  test("corrupt landing lines: exactly N quarantined, the rest archived") {
-    // a landing zone is untrusted producer output — malformed lines must
-    // neither silently become nulls nor fail the sweep; the run report
-    // carries the exact quarantine count (reference classifies loader
-    // errors the same way, ingester/ingest_databend.go:25-29)
+  /** An NDJSON `orders` drop of the rows with key < 200 and three corrupt
+    * lines among them (plus a trailing blank line): the landing root, the
+    * good rows and the corrupt lines. */
+  private def corruptDrop(): (String, org.apache.spark.sql.DataFrame, Seq[String]) = {
     val root = Files.createTempDirectory("graft-landing-bad").toString
     val orders = spark.read.parquet(s"$sf/orders.parquet")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -200,6 +199,16 @@ class FileSourceSpec extends SparkSpec {
     val lines = (good.take(50) ++ bad ++ good.drop(50)) :+ "" // + blank line
     Files.write(java.nio.file.Paths.get(s"$root/orders.json"),
       String.join("\n", lines: _*).getBytes("UTF-8"))
+    (root, orders, bad)
+  }
+
+  test("corrupt landing lines: exactly N quarantined, the rest archived") {
+    // a landing zone is untrusted producer output — malformed lines must
+    // neither silently become nulls nor fail the sweep; the run report
+    // carries the exact quarantine count (reference classifies loader
+    // errors the same way, ingester/ingest_databend.go:25-29)
+    val (root, orders, bad) = corruptDrop()
+    val good = orders.toJSON.collect()
     val dbName = new java.io.File(root).getName
     val src = new FileTableSource(spark, root,
       schemas = Map("orders" -> orders.schema))
@@ -219,6 +228,32 @@ class FileSourceSpec extends SparkSpec {
       s"run report must surface the quarantine count: $report")
     assert(spark.read.schema(orders.schema).parquet(s"$out/target").count() ==
       orders.where("o_totalprice > 0").count())
+  }
+
+  test("corrupt landing lines: a delta run reports the quarantine count too") {
+    // a delta run goes through the same run body as a full one, so the
+    // corrupt-record audit (and Main's [quarantine] line) covers it
+    val (root, orders, bad) = corruptDrop()
+    val out = Files.createTempDirectory("graft-landing-bad-delta-out").toString
+    val cfg = ArchiverConfig(
+      sourceDB = new java.io.File(root).getName, sourceTable = "orders",
+      sourceWhereCondition = "o_totalprice > 0",
+      sourceSplitKey = "o_orderkey", batchSize = 100, maxThread = 2)
+    val archiver = Archiver.landing(spark, cfg, root, s"$out/target",
+      s"$out/staging", orders.schema, pacingSleep = _ => ())
+    val n = orders.where("o_totalprice > 0").count()
+    val r1 = archiver.runIncremental() // empty target → full load
+    assert(r1.reconciliation.correct && r1.reconciliation.targetRows == n,
+      r1.toString)
+    assert(r1.quarantined == bad.length.toLong,
+      s"a delta run must surface the quarantine count: $r1")
+    // nothing new past the watermark: the rerun loads nothing and still
+    // reports the drop's corrupt lines
+    val r2 = archiver.runIncremental()
+    assert(r2.reconciliation.correct && r2.tables.map(_.rowsLoaded).sum == 0L,
+      r2.toString)
+    assert(r2.quarantined == bad.length.toLong, r2.toString)
+    assert(spark.read.schema(orders.schema).parquet(s"$out/target").count() == n)
   }
 
   test("CSV corrupt lines quarantine under the contract parse") {

@@ -316,7 +316,7 @@ class JdbcE2ESpec extends SparkSpec {
     // µs-precision time watermark, then a live delta over the typed literal
     assert(loader.maxTime("TS").contains("2024-03-01 00:29:30.000000"))
     insertRows(61 to 70, 30 * 60)
-    val r2 = archiver.runIncrementalTime()
+    val r2 = archiver.runIncremental()
     assert(r2.reconciliation.correct && r2.reconciliation.targetRows == 70L)
     assert(r2.tables.map(_.rowsLoaded).sum == 10L,
       s"time-delta run must load only the 10 new rows: $r2")

@@ -83,7 +83,7 @@ class MainSpec extends SparkSpec {
          |  "batchSize": 100000,
          |  "maxThread": 1
          |}""".stripMargin).fold(e => fail(s"config parse: $e"), identity)
-    assert(Main.run(spark, cfg, srcDir, tgt, mode = "incremental-time",
+    assert(Main.run(spark, cfg, srcDir, tgt, incremental = true,
       landing = Some("json")))
     val tgtDf = spark.read.parquet(tgt)
     assert(tgtDf.schema("ts").dataType ==
@@ -93,7 +93,7 @@ class MainSpec extends SparkSpec {
     assert(tgtDf.count() == n1)
     // second drop past the watermark sweeps only the delta
     dump(events.where(org.apache.spark.sql.functions.col("ts") > cut))
-    assert(Main.run(spark, cfg, srcDir, tgt, mode = "incremental-time",
+    assert(Main.run(spark, cfg, srcDir, tgt, incremental = true,
       landing = Some("json")))
     val after = spark.read.parquet(tgt)
     assert(after.count() == events.count())
@@ -117,13 +117,13 @@ class MainSpec extends SparkSpec {
          |  "maxThread": 4
          |}""".stripMargin).fold(e => fail(s"config parse: $e"), identity)
     // first delta run over an empty target = the initial full load
-    assert(Main.run(spark, cfg, srcDir, tgt, mode = "incremental"))
+    assert(Main.run(spark, cfg, srcDir, tgt, incremental = true))
     val expected = spark.read.parquet(s"$srcDir/orders.parquet")
       .where("o_totalprice > 5000").count()
     assert(spark.read.parquet(tgt).count() == expected)
     // second delta run: nothing new at the source → still correct, no dupes
     // (the full-archive mode would refuse here via the idempotency gate)
-    assert(Main.run(spark, cfg, srcDir, tgt, mode = "incremental"))
+    assert(Main.run(spark, cfg, srcDir, tgt, incremental = true))
     assert(spark.read.parquet(tgt).count() == expected)
   }
 
@@ -154,7 +154,7 @@ class MainSpec extends SparkSpec {
     val th = new Thread(() => {
       // the interrupted process: outcome irrelevant (it would be SIGKILLed
       // dead in production) — only the on-disk state it leaves matters
-      try { Main.run(spark, cfg, srcDir, tgt, mode = "incremental"); () }
+      try { Main.run(spark, cfg, srcDir, tgt, incremental = true); () }
       catch { case _: Throwable => () }
       finally done.set(true)
     }, "graft-sig-run")
@@ -170,7 +170,7 @@ class MainSpec extends SparkSpec {
     th.join(180000)
     assert(!th.isAlive, "interrupted run thread must terminate")
     // fresh process, same config: the delta run resumes from the watermark
-    assert(Main.run(spark, cfg, srcDir, tgt, mode = "incremental"))
+    assert(Main.run(spark, cfg, srcDir, tgt, incremental = true))
     val src = spark.read.parquet(s"$srcDir/orders.parquet")
       .where("o_totalprice > 5000")
     val got = spark.read.parquet(tgt)
