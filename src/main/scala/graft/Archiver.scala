@@ -4,7 +4,6 @@ import org.apache.spark.BusDrain
 import org.apache.spark.sql.SparkSession
 
 import graft.config.ArchiverConfig
-import graft.dml.DeleteBack
 import graft.metrics.MetricsRecorder
 import graft.plan.{ArchivePlanner, EmptyTablePlan, KeySplitPlan, TimeSplitPlan}
 import graft.sink.{Retry, StagedLoader}
@@ -65,7 +64,7 @@ final class Archiver(spark: SparkSession, cfg: ArchiverConfig,
     *    "max key archived" would not mean "all rows ≤ max archived".
     *  - crash-consistency: the loader must commit batches in ascending
     *    key order (`orderedCommitKey` = the split key, which
-    *    [[Archiver.parquet]] wires up) so a crash mid-commit strands a
+    *    [[Archiver.wire]] wires up) so a crash mid-commit strands a
     *    key-PREFIX and the next run's watermark resumes exactly after it. */
   def runIncremental(): RunReport = {
     val k = Archiver.splitKey(cfg).getOrElse(
@@ -189,45 +188,22 @@ object Archiver {
   private def splitKey(cfg: ArchiverConfig): Option[String] =
     Seq(cfg.sourceSplitKey, cfg.sourceSplitTimeKey).find(_.nonEmpty)
 
-  /** Sandbox wiring: parquet fixtures as the source, a parquet dir as the
-    * warehouse target. Delete-back rewrites the source table (K5/K6) —
-    * note it mutates `sourceDir`, so tests copy fixtures first. */
-  def parquet(spark: SparkSession, cfg: ArchiverConfig,
-      sourceDir: String, targetDir: String, stagingRoot: String,
-      sinkSchema: org.apache.spark.sql.types.StructType,
+  /** The one wiring of a source into an archive run: the loader's sink
+    * schema is the config table's own ([[TableSource.schema]]), it commits
+    * in split-key order, and delete-back is the source's
+    * ([[TableSource.deleteWhere]]). With `sourceDbTables` alone there is
+    * no table to take the schema from, so `sourceTable` is required. */
+  def wire(spark: SparkSession, cfg: ArchiverConfig, src: TableSource,
+      targetDir: String, stagingRoot: String,
       pacingSleep: Long => Unit = Thread.sleep): Archiver = {
-    val src = new graft.source.ParquetTableSource(spark, sourceDir)
-    wire(spark, cfg, src, targetDir, stagingRoot, sinkSchema, pacingSleep,
-      deleteBackFn = (db, table, where) =>
-        DeleteBack.deleteFromParquet(spark, s"$sourceDir/$table.parquet", where))
-  }
-
-  /** File-landing-zone deployment: NDJSON/CSV drops under `sourceDir`
-    * swept into the warehouse. Landing files are immutable producer
-    * output — delete-back is not part of this topology (the producer
-    * retires its own drops), so the delete hook is a loud no-op. */
-  def landing(spark: SparkSession, cfg: ArchiverConfig,
-      sourceDir: String, targetDir: String, stagingRoot: String,
-      sinkSchema: org.apache.spark.sql.types.StructType,
-      format: String = "json",
-      pacingSleep: Long => Unit = Thread.sleep): Archiver = {
-    val src = new graft.source.FileTableSource(spark, sourceDir, format,
-      schemas = Map(cfg.sourceTable -> sinkSchema).filter(_._1.nonEmpty))
-    wire(spark, cfg, src, targetDir, stagingRoot, sinkSchema, pacingSleep,
-      deleteBackFn = (db, table, _) => sys.error(
-        s"delete-back is not supported on a file landing zone ($db.$table)"))
-  }
-
-  private def wire(spark: SparkSession, cfg: ArchiverConfig,
-      src: graft.source.TableSource, targetDir: String, stagingRoot: String,
-      sinkSchema: org.apache.spark.sql.types.StructType,
-      pacingSleep: Long => Unit,
-      deleteBackFn: (String, String, String) => Long): Archiver = {
-    val loader = new StagedLoader(spark, targetDir, sinkSchema,
+    require(cfg.sourceTable.nonEmpty,
+      "sourceTable must name the table whose schema the target takes")
+    val loader = new StagedLoader(spark, targetDir,
+      src.schema(cfg.sourceDB, cfg.sourceTable),
       compression = cfg.stagingCompression,
       orderedCommitKey = splitKey(cfg),
       stagingFormat = cfg.stagingFormat)
     new Archiver(spark, cfg, src, loader, stagingRoot, pacingSleep,
-      deleteBackFn = deleteBackFn)
+      deleteBackFn = src.deleteWhere)
   }
 }

@@ -3,23 +3,32 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.config.ArchiverConfig
+import graft.source.{FileTableSource, JdbcDialect, JdbcTableSource, ParquetTableSource, TableSource}
 
-/** CLI entry point (cmd/main.go equivalent): load + validate config, run
-  * the archive pipeline against a parquet source/target (the sandbox
-  * deployment; a JDBC deployment swaps the TableSource/loader wiring),
-  * print reconciliation and wall-clock.
+/** CLI entry point (cmd/main.go equivalent): load + validate config, build
+  * the source the config names, run the archive pipeline into a parquet
+  * target, print reconciliation and wall-clock.
   *
   * Usage: runMain graft.Main <conf.json> <sourceDir> <targetDir>
   *          [--incremental] [--landing json|csv]
+  *
+  * The source, like the reference's `databaseType` dispatch
+  * (source/source.go:31-46):
+  *  - `--landing json|csv`: <sourceDir> is a file landing zone (NDJSON/CSV
+  *    drops); the contract schema is inferred once from the config
+  *    table's drop. A config that also sets `sourceHost` is refused: the
+  *    two name different sources.
+  *  - a non-empty `sourceHost`: a live JDBC source, the dialect from
+  *    `databaseType`, connected with `sourceHost`/`sourcePort`/
+  *    `sourceUser`/`sourcePass` to `sourceDB`. <sourceDir> is not read
+  *    (pass `-`).
+  *  - otherwise: <sourceDir> is a directory of `<table>.parquet` tables.
   *
   * `--incremental` runs the high-watermark delta sync instead of the full
   * archive: resume from the max split key already in the target, load
   * only newer rows, reconcile over the full predicate. The config's split
   * key picks the flavour: `sourceSplitKey` a key delta,
   * `sourceSplitTimeKey` a time delta. The scheduled-delta deployment mode.
-  * `--landing json|csv` treats <sourceDir> as a file landing zone
-  * (NDJSON/CSV drops) instead of parquet tables; the sink schema comes
-  * from the config table's first drop.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -112,24 +121,8 @@ object Main {
       sourceDir: String, targetDir: String,
       t0: Long, incremental: Boolean,
       landing: Option[String]): Boolean = {
-    val archiver = landing match {
-      case Some(fmt) =>
-        // landing drops are schemaless text: the sink schema comes from
-        // the config table's first drop (inferred once, then pinned as
-        // the landing contract for the scan loop)
-        val probe = new graft.source.FileTableSource(spark, sourceDir, fmt)
-        val sinkSchema =
-          probe.scan(new java.io.File(sourceDir).getName, cfg.sourceTable,
-            Seq.empty, "").schema
-        Archiver.landing(spark, cfg, sourceDir, targetDir,
-          staging(targetDir), sinkSchema, fmt)
-      case None =>
-        // sink schema = source table schema (pre-existing warehouse table)
-        val sinkSchema = spark.read
-          .parquet(s"$sourceDir/${cfg.sourceTable}.parquet").schema
-        Archiver.parquet(spark, cfg, sourceDir, targetDir,
-          staging(targetDir), sinkSchema)
-    }
+    val archiver = Archiver.wire(spark, cfg, source(spark, cfg, sourceDir, landing),
+      targetDir, staging(targetDir))
     val report = if (incremental) archiver.runIncremental() else archiver.run()
     report.tables.foreach(t =>
       println(s"[archive] ${t.db}.${t.table}: ${t.rowsLoaded} rows"))
@@ -144,6 +137,22 @@ object Main {
       s"written=${m.bytesWritten} bytes")
     println(f"[done] total ${(System.nanoTime() - t0) / 1e9}%.1f s")
     rc.correct
+  }
+
+  /** The source rule of the usage text above. */
+  private def source(spark: SparkSession, cfg: ArchiverConfig,
+      sourceDir: String, landing: Option[String]): TableSource = landing match {
+    case Some(fmt) =>
+      require(cfg.sourceHost.isEmpty,
+        s"--landing names a file landing zone and sourceHost " +
+          s"'${cfg.sourceHost}' a JDBC source: give one of them")
+      val probe = new FileTableSource(spark, sourceDir, fmt)
+      new FileTableSource(spark, sourceDir, fmt,
+        schemas = Map(cfg.sourceTable -> probe.schema(cfg.sourceDB, cfg.sourceTable)))
+    case None if cfg.sourceHost.nonEmpty =>
+      new JdbcTableSource(spark, JdbcDialect.forType(cfg.databaseType),
+        cfg.sourceHost, cfg.sourcePort, cfg.sourceUser, cfg.sourcePass, cfg.sourceDB)
+    case None => new ParquetTableSource(spark, sourceDir)
   }
 
   private def staging(targetDir: String): String = s"$targetDir.staging"

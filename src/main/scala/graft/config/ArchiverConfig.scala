@@ -9,13 +9,13 @@ package graft.config
   * config or an error instead of panicking.
   *
   * Not every field drives the engine:
-  *  - accepted so reference configs load, read by no main code:
-  *    `databendDSN`, `databendTable` (the target is `Main`'s `<targetDir>`
-  *    argument), `userStage` (normalized by [[ArchiverConfig.preCheck]]
-  *    only), `copyPurge`, `copyForce`, `disableVariantCheck`, `sourceQuery`;
   *  - the connection fields `databaseType`, `sourceHost`, `sourcePort`,
-  *    `sourceUser`, `sourcePass`: parsed; no JDBC wiring in `Main` yet
-  *    (ROADMAP direction 6).
+  *    `sourceUser`, `sourcePass` are read by `graft.Main`: a non-empty
+  *    `sourceHost` selects the JDBC source, `databaseType` its dialect;
+  *  - accepted for reference configs, unused: `databendDSN`,
+  *    `databendTable` (the target is `Main`'s `<targetDir>` argument),
+  *    `userStage` (normalized by [[ArchiverConfig.preCheck]] only),
+  *    `copyPurge`, `copyForce`, `disableVariantCheck`, `sourceQuery`.
   */
 final case class ArchiverConfig(
     databaseType: String = "mysql",

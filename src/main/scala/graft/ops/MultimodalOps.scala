@@ -74,14 +74,9 @@ object MultimodalOps {
         |  CAST(frame_idx * 1000 / 30 AS BIGINT) AS ts_ms,
         |  CAST(duration_s * 30 AS BIGINT) AS total_frames
         |FROM frames ORDER BY doc_id, frame_idx""".stripMargin) { (s, d) =>
-      documents(s, d).where(col("doc_id") < 200)
-        .select(col("doc_id"), (lit(10) + col("doc_id") % 110).as("duration_s"))
-        .withColumn("total_frames", (col("duration_s") * 30).cast("long"))
-        .select(col("doc_id"), col("total_frames"),
-          explode(expr("sequence(0, duration_s * 30 - 1, 60)")).as("frame_idx"))
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"),
-          (col("frame_idx").cast("long") * 1000 / 30).cast("long").as("ts_ms"),
-          col("total_frames"))
+      sampledFrames(s, d, 200)
+        .select(col("doc_id"), col("frame_idx"), frameTsMs.as("ts_ms"),
+          (durationS * 30).cast("long").as("total_frames"))
         .orderBy(col("doc_id"), col("frame_idx"))
     },
 
@@ -152,18 +147,13 @@ object MultimodalOps {
         |  CAST(least(CAST(f.frame_idx * 1000 / 30 AS BIGINT) // 32, a.n_windows - 1) AS BIGINT) AS audio_widx
         |FROM frames f JOIN aw a USING (doc_id)
         |ORDER BY doc_id, frame_idx""".stripMargin) { (s, d) =>
-      val meta = documents(s, d).where(col("doc_id") < 50)
-        .select(col("doc_id"),
-          (lit(10) + col("doc_id") % 110).as("duration_s"),
-          (lit(16000) * (lit(1) + col("doc_id") % 30)).cast("long").as("n_samples"))
-      val frames = meta
-        .select(col("doc_id"),
-          explode(expr("sequence(0, duration_s * 30 - 1, 60)")).as("frame_idx"))
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"),
-          (col("frame_idx").cast("long") * 1000 / 30).cast("long").as("ts_ms"))
+      val frames = sampledFrames(s, d, 50)
+        .withColumn("ts_ms", frameTsMs)
         .withColumn("tb", col("frame_idx"))
       // 1024-sample windows, 512 hop at 16 kHz → one window start per 32 ms
-      val windows = meta
+      val windows = documents(s, d).where(col("doc_id") < 50)
+        .select(col("doc_id"),
+          (lit(16000) * (lit(1) + col("doc_id") % 30)).cast("long").as("n_samples"))
         .select(col("doc_id"),
           explode(expr("sequence(0, (n_samples - 1024) div 512, 1)")).as("widx"))
         .select(col("doc_id"), col("widx").cast("long").as("widx"),
@@ -498,12 +488,18 @@ object MultimodalOps {
         byFrame.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
+  /** A stand-in clip's length in seconds, from its `doc_id`. */
+  private def durationS = lit(10) + col("doc_id") % 110
+
+  /** A sampled frame's timestamp in ms at 30 fps, from its `frame_idx`. */
+  private def frameTsMs = (col("frame_idx") * 1000 / 30).cast("long")
+
   /** The video stand-in's sampled frame grid: every doc below `docs` is a
     * (10 + doc_id % 110)-second clip at 30 fps, and every 60th frame is
     * kept. The rows are generated on the executors (sequence + explode). */
   private def sampledFrames(s: SparkSession, d: String, docs: Int): DataFrame =
     documents(s, d).where(col("doc_id") < docs)
-      .select(col("doc_id"), (lit(10) + col("doc_id") % 110).as("duration_s"))
+      .select(col("doc_id"), durationS.as("duration_s"))
       .select(col("doc_id"),
         explode(expr("sequence(0, duration_s * 30 - 1, 60)")).as("frame_idx"))
       .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))

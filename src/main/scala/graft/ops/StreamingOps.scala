@@ -63,6 +63,27 @@ object StreamingOps {
     reader.readStream.schema(stagedSchema(s, dir)).parquet(dir)
   }
 
+  /** The stream-stream joins' input on `reader`: each purchase joined
+    * (`joinType`) to the same user's clicks in the preceding hour, both
+    * streams watermarked 4 h so the join state is GC-able; the
+    * (user_id, p_id, c_id) rows. */
+  private def purchaseClicks(s: SparkSession, d: String,
+      reader: SparkSession, joinType: String): DataFrame = {
+    val p = eventStream(s, d, reader).where(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
+      .withWatermark("p_ts", "4 hours")
+    val c = eventStream(s, d, reader).where(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+              col("event_id").as("c_id"))
+      .withWatermark("c_ts", "4 hours")
+    p.join(c,
+      col("user_id") === col("c_user") &&
+        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+        col("c_ts") <= col("p_ts"),
+      joinType)
+      .select(col("user_id"), col("p_id"), col("c_id"))
+  }
+
   /** Schema of a staged parquet dir, memoized: the batch-read probe
     * re-lists files and re-reads footers (~50-100 ms), and the join
     * queries open two streams over the same staging. */
@@ -287,20 +308,8 @@ object StreamingOps {
         |       AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL 1 HOUR
         |       AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)) t
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      runToMemory(s, "append", noDataBatch = false) { s2 =>
-        val p = eventStream(s, d, s2).where(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-          .withWatermark("p_ts", "4 hours")
-        val c = eventStream(s, d, s2).where(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-                  col("event_id").as("c_id"))
-          .withWatermark("c_ts", "4 hours")
-        p.join(c,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-            col("c_ts") <= col("p_ts"))
-          .select(col("user_id"), col("p_id"), col("c_id"))
-      }
+      runToMemory(s, "append", noDataBatch = false)(
+        purchaseClicks(s, d, _, "inner"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
              sum(col("p_id")).as("purchase_id_sum"),
@@ -348,21 +357,7 @@ object StreamingOps {
         |  CAST(sum(p_id) AS BIGINT) AS purchase_id_sum
         |FROM (SELECT * FROM j UNION ALL SELECT * FROM unm) t
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      runToMemory(s, "append") { s2 =>
-        val p = eventStream(s, d, s2).where(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-          .withWatermark("p_ts", "4 hours")
-        val c = eventStream(s, d, s2).where(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-                  col("event_id").as("c_id"))
-          .withWatermark("c_ts", "4 hours")
-        p.join(c,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-            col("c_ts") <= col("p_ts"),
-          "left_outer")
-          .select(col("user_id"), col("p_id"), col("c_id"))
-      }
+      runToMemory(s, "append")(purchaseClicks(s, d, _, "left_outer"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_rows"), count(col("c_id")).as("n_matched"),
              (count(lit(1)) - count(col("c_id"))).as("n_unmatched"),

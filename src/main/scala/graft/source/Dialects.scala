@@ -26,6 +26,9 @@ sealed trait JdbcDialect {
     s"SELECT count(*) FROM ${qualify(db, table)} WHERE $where"
   def minMaxSql(key: String, db: String, table: String, where: String): String =
     s"SELECT MIN($key), MAX($key) FROM ${qualify(db, table)} WHERE $where"
+  /** The unbatched delete-back statement (postgres.go:174-187 et al). */
+  def deleteSql(db: String, table: String, where: String): String =
+    s"DELETE FROM ${qualify(db, table)} WHERE $where"
   def minMaxTimeSql(key: String, db: String, table: String, where: String): String =
     s"SELECT MIN($key), MAX($key) FROM ${qualify(db, table)} WHERE $where"
   /** Typed timestamp literal for WHERE predicates against timestamp
@@ -112,8 +115,10 @@ case object OracleDialect extends JdbcDialect {
   * the partitioned predicate scan, and delete-back DML all execute against
   * a live JDBC engine — the tier the reference covers with live-DBMS CI
   * (cmd/main_test.go:25-59, ci.yaml:12-44). Derby's unit of discovery is
-  * the schema (Oracle-style); `db` carries the database locator (e.g.
-  * "memory:graftdb"), host/port are unused by the embedded driver.
+  * the schema (Oracle-style). The embedded driver has no host, so the
+  * database locator (e.g. "memory:graftdb") rides in `host` when it is set
+  * (a config's `sourceHost`, next to `sourceDB` naming the schema) and in
+  * `db` otherwise; the port is unused.
   *
   * Strict typing: Derby will not implicitly compare a TIMESTAMP column
   * against a bare string, so time predicates go through
@@ -123,7 +128,7 @@ case object OracleDialect extends JdbcDialect {
 case object DerbyDialect extends JdbcDialect {
   val name = "derby"
   def driverUrl(h: String, p: Int, u: String, pw: String, db: String) =
-    s"jdbc:derby:$db"
+    s"jdbc:derby:${if (h.nonEmpty) h else db}"
   val listDatabasesSql =
     """SELECT schemaname FROM sys.sysschemas
       |WHERE schemaname NOT LIKE 'SYS%'

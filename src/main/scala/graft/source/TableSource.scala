@@ -2,6 +2,9 @@ package graft.source
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.dml.DeleteBack
 
 /** Source abstraction: a catalog of (db, table) relations plus the planning
   * aggregates and the partitioned scan. Two implementations:
@@ -49,6 +52,18 @@ trait TableSource {
     * run report so truncation is never silent. Structured sources have
     * nothing to quarantine. */
   def quarantined(db: String, table: String): Long = 0L
+
+  /** The table's row schema, the sink schema of its archive: by default
+    * that of an unfiltered [[scan]] (analysis only, no rows read). */
+  def schema(db: String, table: String): StructType =
+    scan(db, table, Seq.empty, "").schema
+
+  /** Delete-back: remove the rows matching `where` from the source table,
+    * returning how many went. Sources the archiver must not mutate refuse
+    * loudly. */
+  def deleteWhere(db: String, table: String, where: String): Long =
+    throw new UnsupportedOperationException(
+      s"delete-back is not supported on ${getClass.getSimpleName} ($db.$table)")
 
   /** Render a `yyyy-MM-dd HH:mm:ss[.SSSSSS]` timestamp as a literal this
     * source's engine compares against a timestamp column. The ANSI typed
@@ -107,6 +122,11 @@ class ParquetTableSource(spark: SparkSession, rootDir: String)
 
   protected def table(t: String): DataFrame =
     spark.read.parquet(s"$rootDir/$t.parquet")
+
+  /** Rewrites the table without the matching rows (K5/K6): this mutates
+    * `rootDir`, so tests archive copies of their fixtures. */
+  override def deleteWhere(db: String, t: String, where: String): Long =
+    DeleteBack.deleteFromParquet(spark, s"$rootDir/$t.parquet", where)
 }
 
 /** File-landing-zone source: `rootDir/<table>.<json|csv>[.gz]` — the
@@ -118,7 +138,9 @@ class ParquetTableSource(spark: SparkSession, rootDir: String)
   * writes), else from inference (one extra planning-time pass, fine for
   * exploration, not for the scan loop). Everything above the relation —
   * catalog regex, key/time-split planning, staged load, reconciliation —
-  * is inherited unchanged from [[DataFrameTableSource]].
+  * is inherited unchanged from [[DataFrameTableSource]]. Delete-back keeps
+  * the inherited refusal: landing drops are immutable producer output, and
+  * the producer retires its own.
   *
   * Robustness (a production landing zone is untrusted producer output):
   *
@@ -375,6 +397,10 @@ final class JdbcTableSource(spark: SparkSession, dialect: JdbcDialect,
     row(dialect.minMaxTimeSql(key, db, table, where)) { rs =>
       (DriverJdbc.string(rs, 1), DriverJdbc.string(rs, 2))
     }
+
+  /** One unbatched driver-side `DELETE` on the dialect's qualified name. */
+  override def deleteWhere(db: String, table: String, where: String): Long =
+    DeleteBack.executeJdbc(url, props, dialect.deleteSql(db, table, where))
 
   override def timestampLiteral(ts: String): String = dialect.timestampLiteral(ts)
 }

@@ -8,6 +8,7 @@ import graft.config.ArchiverConfig
 import graft.dml.DeleteBack
 import graft.metrics.MetricsRecorder
 import graft.sink.{Retry, StagedLoader}
+import graft.source.ParquetTableSource
 
 /** End-to-end pipeline tests in the spirit of the reference's workflow
   * tests (cmd/main_test.go): seed a source, run the archiver, golden-check
@@ -16,6 +17,13 @@ class ArchiveE2ESpec extends SparkSpec {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-e2e").toString
+
+  /** The archiver `Archiver.wire` builds over the parquet tables in
+    * `srcDir`, staging next to `tgt`, with no pacing sleeps. */
+  private def parquetArchiver(cfg: ArchiverConfig, srcDir: String,
+      tgt: String): Archiver =
+    Archiver.wire(spark, cfg, new ParquetTableSource(spark, srcDir), tgt,
+      tgt + ".stg", pacingSleep = _ => ())
 
   private def copyFixture(table: String, destDir: String): Unit = {
     spark.read.parquet(s"$sf/$table.parquet")
@@ -29,9 +37,7 @@ class ArchiveE2ESpec extends SparkSpec {
       sourceDB = new java.io.File(srcDir).getName, sourceTable = "orders",
       sourceWhereCondition = "o_totalprice > 1000",
       sourceSplitKey = "o_orderkey", batchSize = 200, maxThread = 4)
-    val schema = spark.read.parquet(s"$srcDir/orders.parquet").schema
-    val archiver = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
-      schema, pacingSleep = _ => ())
+    val archiver = parquetArchiver(cfg, srcDir, tgt)
     // a recorder around the same run, read after a drain, sees every task
     // of the run: the report's own snapshot must not miss the last jobs
     BusDrain.drain(spark.sparkContext)
@@ -59,10 +65,7 @@ class ArchiveE2ESpec extends SparkSpec {
       sourceWhereCondition =
         "ts >= '2024-01-02 00:00:00' and ts < '2024-01-05 00:00:00'",
       sourceSplitTimeKey = "ts", timeSplitUnit = "day", batchSize = 1000)
-    val schema = spark.read.parquet(s"$srcDir/events.parquet").schema
-    val archiver = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
-      schema, pacingSleep = _ => ())
-    val report = archiver.run()
+    val report = parquetArchiver(cfg, srcDir, tgt).run()
 
     val expected = spark.read.parquet(s"$srcDir/events.parquet")
       .where("ts >= '2024-01-02 00:00:00' and ts < '2024-01-05 00:00:00'").count()
@@ -78,9 +81,7 @@ class ArchiveE2ESpec extends SparkSpec {
       sourceDB = new java.io.File(srcDir).getName, sourceTable = "nation",
       sourceWhereCondition = "n_nationkey >= 0",
       sourceSplitKey = "n_nationkey", batchSize = 10)
-    val schema = spark.read.parquet(s"$srcDir/nation.parquet").schema
-    def mk() = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
-      schema, pacingSleep = _ => ())
+    def mk() = parquetArchiver(cfg, srcDir, tgt)
     assert(mk().run().reconciliation.correct)
     val e = intercept[IllegalArgumentException] { mk().run() }
     assert(e.getMessage.contains("refusing"))
@@ -150,10 +151,8 @@ class ArchiveE2ESpec extends SparkSpec {
       sourceWhereCondition = "s_suppkey <= 5",
       sourceSplitKey = "s_suppkey", batchSize = 2,
       deleteAfterSync = true)
-    val schema = spark.read.parquet(s"$srcDir/supplier.parquet").schema
     val before = spark.read.parquet(s"$srcDir/supplier.parquet").count()
-    val report = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
-      schema, pacingSleep = _ => ()).run()
+    val report = parquetArchiver(cfg, srcDir, tgt).run()
     assert(report.reconciliation.correct)
     assert(report.deletedBack == report.reconciliation.targetRows)
     val after = spark.read.parquet(s"$srcDir/supplier.parquet").count()
@@ -210,9 +209,7 @@ class ArchiveE2ESpec extends SparkSpec {
       sourceDB = new java.io.File(srcDir).getName, sourceTable = "orders",
       sourceWhereCondition = "o_totalprice > 0",
       sourceSplitKey = "o_orderkey", batchSize = 200, maxThread = 4)
-    val schema = full.schema
-    def mk() = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
-      schema, pacingSleep = _ => ())
+    def mk() = parquetArchiver(cfg, srcDir, tgt)
     val r1 = mk().runIncremental() // empty target → full load of day-1 rows
     assert(r1.reconciliation.correct, r1.reconciliation)
     val day1 = r1.tables.head.rowsLoaded
@@ -240,9 +237,7 @@ class ArchiveE2ESpec extends SparkSpec {
       sourceWhereCondition =
         "ts >= '2024-01-01 00:00:00' and ts < '2025-01-01 00:00:00'",
       sourceSplitTimeKey = "ts", timeSplitUnit = "day", batchSize = 1000)
-    val schema = spark.read.parquet(s"$srcDir/events.parquet").schema
-    def mk() = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
-      schema, pacingSleep = _ => ())
+    def mk() = parquetArchiver(cfg, srcDir, tgt)
     val r1 = mk().runIncremental()
     assert(r1.reconciliation.correct, r1.reconciliation)
     val day1 = r1.tables.head.rowsLoaded
@@ -503,9 +498,18 @@ class ArchiveE2ESpec extends SparkSpec {
     val ctorBad = MainSources.offenders(ctor, Set(file))
     assert(ctorBad.isEmpty, "Archiver constructed outside its companion in: " +
       ctorBad.mkString(", "))
-    val wire = text.indexOf("private def wire(")
+    val wire = text.indexOf("  def wire(")
     assert(wire >= 0 && ctor.r.findAllIn(text).size == 1 &&
       ctor.r.findAllIn(text.substring(wire)).size == 1,
       s"$file must construct Archiver only in the companion's wire")
+    // the source/loader wiring is the factory's alone: the streaming
+    // archive query is the one other loader, and it has no Archiver
+    val loaderCtor = """new\s+(graft\.sink\.)?StagedLoader\("""
+    val loaderBad = MainSources.offenders(loaderCtor,
+      Set(file, "graft/ops/StreamingOps.scala"))
+    assert(loaderBad.isEmpty, "StagedLoader wired by hand in: " + loaderBad.mkString(", "))
+    assert(loaderCtor.r.findAllIn(text).size == 1 &&
+      loaderCtor.r.findAllIn(text.substring(wire)).size == 1,
+      s"$file must construct StagedLoader only in wire")
   }
 }

@@ -38,7 +38,8 @@ class DialectSqlSpec extends AnyFunSuite {
     "minMax" -> d.minMaxSql("o_orderkey", "archive_db", "orders", "1 = 1"),
     "minMaxTime" -> d.minMaxTimeSql("created_at", "archive_db", "orders",
       s"created_at < ${d.timestampLiteral("2024-01-02 03:04:05")}"),
-    "countDotted" -> d.countSql("archive_db", "audit.orders", "1 = 1"))
+    "countDotted" -> d.countSql("archive_db", "audit.orders", "1 = 1"),
+    "delete" -> d.deleteSql("archive_db", "orders", "o_orderkey <= 120"))
 
   private def balanced(s: String, open: Char, close: Char): Boolean = {
     var depth = 0
@@ -53,8 +54,8 @@ class DialectSqlSpec extends AnyFunSuite {
     for (d <- dialects; (what, sql) <- statements(d)) {
       val where = s"${d.name}.$what: $sql"
       assert(sql.trim.nonEmpty, where)
-      assert(sql.toUpperCase.startsWith("SELECT") ||
-        sql.toUpperCase.startsWith("SHOW"), s"statement form — $where")
+      val form = if (what == "delete") Seq("DELETE FROM") else Seq("SELECT", "SHOW")
+      assert(form.exists(sql.toUpperCase.startsWith), s"statement form — $where")
       assert(!sql.contains("%s") && !sql.contains("{}") && !sql.contains("${"),
         s"leaked format placeholder — $where")
       assert(sql.count(_ == '\'') % 2 == 0, s"unbalanced quotes — $where")
@@ -65,6 +66,15 @@ class DialectSqlSpec extends AnyFunSuite {
       assert(!sql.contains("..") || what == "countDotted",
         s"empty path segment — $where")
     }
+  }
+
+  test("delete-back (JdbcTableSource.deleteWhere) deletes on each dialect's qualified name") {
+    for (d <- dialects)
+      assert(d.deleteSql("db", "t", "id <= 5") ==
+        s"DELETE FROM ${d.qualify("db", "t")} WHERE id <= 5", d.name)
+    assert(SqlServerDialect.deleteSql("db", "t", "id <= 5") ==
+      "DELETE FROM [db].dbo.[t] WHERE id <= 5")
+    assert(DerbyDialect.deleteSql("DB", "T", "ID <= 5") == "DELETE FROM DB.T WHERE ID <= 5")
   }
 
   test("pg surface matches the reference's published statements") {

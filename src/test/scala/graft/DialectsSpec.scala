@@ -33,6 +33,14 @@ class DialectsSpec extends AnyFunSuite {
     assert(MySqlDialect.credentialOptions("u", "p").isEmpty)
   }
 
+  test("derby's embedded locator comes from host when set, else from db") {
+    // a config's sourceHost carries the locator; sourceDB names the schema
+    assert(DerbyDialect.driverUrl("memory:graftdb", 0, "", "", "ARCHDB") ==
+      "jdbc:derby:memory:graftdb")
+    assert(DerbyDialect.driverUrl("", 0, "", "", "memory:graftdb") ==
+      "jdbc:derby:memory:graftdb")
+  }
+
   test("sqlserver dirty reads use sessionInitStatement (read path), not isolationLevel") {
     val opts = SqlServerDialect.scanOptions
     assert(!opts.contains("isolationLevel"), "isolationLevel is write-path only")

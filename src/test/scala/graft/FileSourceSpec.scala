@@ -23,6 +23,14 @@ class FileSourceSpec extends SparkSpec {
     (root, orders)
   }
 
+  /** The archiver `Archiver.wire` builds over the NDJSON drops in `root`
+    * under the config table's contract schema, writing below `out`. */
+  private def landingArchiver(cfg: ArchiverConfig, root: String,
+      contract: org.apache.spark.sql.types.StructType, out: String): Archiver =
+    Archiver.wire(spark, cfg,
+      new FileTableSource(spark, root, schemas = Map(cfg.sourceTable -> contract)),
+      s"$out/target", s"$out/staging", pacingSleep = _ => ())
+
   test("landing-dir discovery + planning aggregates over NDJSON relations") {
     val (root, orders) = stageLanding()
     val dbName = new java.io.File(root).getName
@@ -143,8 +151,7 @@ class FileSourceSpec extends SparkSpec {
       sourceWhereCondition = "o_totalprice > 0",
       sourceSplitKey = "o_orderkey", batchSize = 1000, maxThread = 2,
       deleteAfterSync = true)
-    val archiver = Archiver.landing(spark, cfg, root, s"$out/target",
-      s"$out/staging", orders.schema, pacingSleep = _ => ())
+    val archiver = landingArchiver(cfg, root, orders.schema, out)
     // the archive itself must complete; the delete hook (which only fires
     // after a correct reconciliation) is the loud no-op
     val e = intercept[RuntimeException](archiver.run())
@@ -174,8 +181,7 @@ class FileSourceSpec extends SparkSpec {
       sourceDB = dbName, sourceTable = "orders",
       sourceWhereCondition = "o_totalprice > 0",
       sourceSplitKey = "o_orderkey", batchSize = 500, maxThread = 2)
-    val archiver = Archiver.landing(spark, cfg, root, s"$out/target",
-      s"$out/staging", orders.schema, pacingSleep = _ => ())
+    val archiver = landingArchiver(cfg, root, orders.schema, out)
     val report = archiver.run()
     assert(report.reconciliation.correct, report.toString)
     assert(report.quarantined == 0L, report.toString)
@@ -220,8 +226,7 @@ class FileSourceSpec extends SparkSpec {
       sourceDB = dbName, sourceTable = "orders",
       sourceWhereCondition = "o_totalprice > 0",
       sourceSplitKey = "o_orderkey", batchSize = 100, maxThread = 2)
-    val archiver = Archiver.landing(spark, cfg, root, s"$out/target",
-      s"$out/staging", orders.schema, pacingSleep = _ => ())
+    val archiver = landingArchiver(cfg, root, orders.schema, out)
     val report = archiver.run()
     assert(report.reconciliation.correct, report.toString)
     assert(report.quarantined == bad.length.toLong,
@@ -239,8 +244,7 @@ class FileSourceSpec extends SparkSpec {
       sourceDB = new java.io.File(root).getName, sourceTable = "orders",
       sourceWhereCondition = "o_totalprice > 0",
       sourceSplitKey = "o_orderkey", batchSize = 100, maxThread = 2)
-    val archiver = Archiver.landing(spark, cfg, root, s"$out/target",
-      s"$out/staging", orders.schema, pacingSleep = _ => ())
+    val archiver = landingArchiver(cfg, root, orders.schema, out)
     val n = orders.where("o_totalprice > 0").count()
     val r1 = archiver.runIncremental() // empty target → full load
     assert(r1.reconciliation.correct && r1.reconciliation.targetRows == n,

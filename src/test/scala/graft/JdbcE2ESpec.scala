@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.config.ArchiverConfig
-import graft.dml.DeleteBack
 import graft.plan.{ArchivePlanner, KeySplitPlan}
 import graft.sink.StagedLoader
 import graft.source.{DerbyDialect, DriverJdbc, JdbcTableSource}
@@ -121,8 +120,7 @@ class JdbcE2ESpec extends SparkSpec {
         .isInstanceOf[KeySplitPlan])
       assert(src.count("ARCHDB", "ORDERS_ARCHIVE", "1=1") == 200L)
       assert(src.minMaxTime("ARCHDB", "ORDERS_ARCHIVE", "TS", "1=1")._1.nonEmpty)
-      assert(DeleteBack.executeJdbc(url, derbyProps,
-        DeleteBack.deleteSql("ARCHDB", "ORDERS_ARCHIVE", "ID > 9999", limit = None)) == 0L)
+      assert(src.deleteWhere("ARCHDB", "ORDERS_ARCHIVE", "ID > 9999") == 0L)
       org.apache.spark.BusDrain.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get == 0, "control statements must not run as Spark jobs")
@@ -201,12 +199,9 @@ class JdbcE2ESpec extends SparkSpec {
     seed()
     val src = source
     val root = Files.createTempDirectory("graft-jdbc-e2e").toString
-    val scanDf = src.scan("ARCHDB", "ORDERS_ARCHIVE", Seq.empty, "1=1")
-    val loader = new StagedLoader(spark, s"$root/target", scanDf.schema)
-    val archiver = new Archiver(spark, cfg.copy(deleteAfterSync = true),
-      src, loader, s"$root/staging", pacingSleep = _ => (),
-      deleteBackFn = (db, t, where) => DeleteBack.executeJdbc(url, derbyProps,
-        DeleteBack.deleteSql(db, t, where, limit = None)))
+    val schema = src.schema("ARCHDB", "ORDERS_ARCHIVE")
+    val archiver = Archiver.wire(spark, cfg.copy(deleteAfterSync = true),
+      src, s"$root/target", s"$root/staging", pacingSleep = _ => ())
     val report = archiver.run()
     assert(report.reconciliation.correct, report.toString)
     assert(report.reconciliation.targetRows == 120L)
@@ -215,7 +210,7 @@ class JdbcE2ESpec extends SparkSpec {
     assert(src.count("ARCHDB", "ORDERS_ARCHIVE", "1=1") == 80L)
     assert(src.count("ARCHDB", "ORDERS_ARCHIVE", "ID <= 120") == 0L)
     // and the target holds it, decimal/timestamp fidelity intact
-    val tgt = spark.read.schema(scanDf.schema).parquet(s"$root/target")
+    val tgt = spark.read.schema(schema).parquet(s"$root/target")
     assert(tgt.count() == 120L)
     assert(tgt.where("ID = 120").select("AMOUNT").head().getDecimal(0)
       .compareTo(new java.math.BigDecimal("150.00")) == 0)
@@ -241,12 +236,12 @@ class JdbcE2ESpec extends SparkSpec {
     val src = source
     val root = Files.createTempDirectory("graft-jdbc-inc").toString
     val schema = src.scan("ARCHDB", "ORDERS_DELTA", Seq.empty, "1=1").schema
-    val loader = new StagedLoader(spark, s"$root/target", schema,
-      orderedCommitKey = Some("ID"))
+    // reads the watermark of the target the archiver writes
+    val loader = new StagedLoader(spark, s"$root/target", schema)
     val icfg = cfg.copy(sourceTable = "ORDERS_DELTA",
       sourceWhereCondition = "ID >= 1", batchSize = 40)
-    val archiver = new Archiver(spark, icfg, src, loader, s"$root/staging",
-      pacingSleep = _ => ())
+    val archiver = Archiver.wire(spark, icfg, src, s"$root/target",
+      s"$root/staging", pacingSleep = _ => ())
     val r1 = archiver.runIncremental()
     assert(r1.reconciliation.correct && r1.reconciliation.targetRows == 100L)
     assert(loader.maxKey("ID").contains(BigInt(100)))
@@ -294,8 +289,8 @@ class JdbcE2ESpec extends SparkSpec {
     val src = source
     val root = Files.createTempDirectory("graft-jdbc-ts").toString
     val schema = src.scan("ARCHDB", "EVENTS_TS", Seq.empty, "1=1").schema
-    val loader = new StagedLoader(spark, s"$root/target", schema,
-      orderedCommitKey = Some("TS"))
+    // reads the watermark of the target the archiver writes
+    val loader = new StagedLoader(spark, s"$root/target", schema)
     val tcfg = cfg.copy(sourceTable = "EVENTS_TS",
       sourceWhereCondition = "ID >= 1",
       sourceSplitKey = "", sourceSplitTimeKey = "TS",
@@ -309,8 +304,8 @@ class JdbcE2ESpec extends SparkSpec {
         assert(ws.head.contains("TIMESTAMP('2024-03-01 00:00:00')"), ws.head)
       case other => fail(s"expected TimeSplitPlan, got $other")
     }
-    val archiver = new Archiver(spark, tcfg, src, loader, s"$root/staging",
-      pacingSleep = _ => ())
+    val archiver = Archiver.wire(spark, tcfg, src, s"$root/target",
+      s"$root/staging", pacingSleep = _ => ())
     val r1 = archiver.run()
     assert(r1.reconciliation.correct && r1.reconciliation.targetRows == 60L)
     // µs-precision time watermark, then a live delta over the typed literal
@@ -373,15 +368,17 @@ class JdbcE2ESpec extends SparkSpec {
     seedWave("WAVEDB2", 5)  // 15 rows, 3 NULL-wave rows
     val src = source
     val root = Files.createTempDirectory("graft-jdbc-multi").toString
+    // the config table (inside the regex's expansion) names the target's
+    // schema; the expansion adds WAVEDB2's table of the same shape
     val mcfg = ArchiverConfig(
       databaseType = "derby",
+      sourceDB = "WAVEDB1", sourceTable = "ORDERS_WAVE",
       sourceDbTables = Seq("WAVEDB.*@ORDERS.*"),
       sourceWhereCondition = "ID >= 1", sourceSplitKey = "ID",
       batchSize = 7, maxThread = 3)
     val schema = src.scan("WAVEDB1", "ORDERS_WAVE", Seq.empty, "1=1").schema
-    val loader = new StagedLoader(spark, s"$root/target", schema)
-    val archiver = new Archiver(spark, mcfg, src, loader, s"$root/staging",
-      pacingSleep = _ => ())
+    val archiver = Archiver.wire(spark, mcfg, src, s"$root/target",
+      s"$root/staging", pacingSleep = _ => ())
     val r = archiver.run()
     assert(r.tables.map(t => (t.db, t.table, t.rowsLoaded)).toSet ==
       Set(("WAVEDB1", "ORDERS_WAVE", 20L), ("WAVEDB2", "ORDERS_WAVE", 15L)),

@@ -8,6 +8,90 @@ import graft.config.ArchiverConfig
   * count on the target (O5 in COVERAGE.md, previously only hand-driven). */
 class MainSpec extends SparkSpec {
 
+  /** In-memory Derby database `locator` with MAINDB.ORDERS: ids 1..200,
+    * one a minute from 2024-03-01 00:01 (re-seeded on every call). */
+  private def seedDerby(locator: String): Unit = {
+    val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$locator;create=true")
+    try {
+      val st = c.createStatement()
+      try { st.execute("CREATE SCHEMA MAINDB"): Unit }
+      catch { case _: java.sql.SQLException => () } // already exists
+      try { st.execute("DROP TABLE MAINDB.ORDERS"): Unit }
+      catch { case _: java.sql.SQLException => () }
+      st.execute("CREATE TABLE MAINDB.ORDERS (ID BIGINT NOT NULL PRIMARY KEY, " +
+        "TS TIMESTAMP, AMOUNT DECIMAL(12,2))")
+      st.close()
+      val ps = c.prepareStatement("INSERT INTO MAINDB.ORDERS VALUES (?, ?, ?)")
+      (1 to 200).foreach { i =>
+        ps.setLong(1, i.toLong)
+        ps.setTimestamp(2, java.sql.Timestamp.valueOf(
+          java.time.LocalDateTime.of(2024, 3, 1, 0, 0, 0).plusMinutes(i.toLong)))
+        ps.setBigDecimal(3, new java.math.BigDecimal(i).setScale(2))
+        ps.addBatch()
+      }
+      ps.executeBatch(); ps.close()
+    } finally c.close()
+  }
+
+  /** MAINDB.ORDERS rows matching `where`, read over plain JDBC. */
+  private def derbyCount(locator: String, where: String): Long = {
+    val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$locator")
+    try {
+      val rs = c.createStatement().executeQuery(
+        s"SELECT COUNT(*) FROM MAINDB.ORDERS WHERE $where")
+      rs.next(); rs.getLong(1)
+    } finally c.close()
+  }
+
+  private def derbyConfig(locator: String, split: String): ArchiverConfig =
+    ArchiverConfig.fromJson(
+      s"""{
+         |  "databaseType": "derby",
+         |  "sourceHost": "$locator",
+         |  "sourceDB": "MAINDB",
+         |  "sourceTable": "ORDERS",
+         |  "batchSize": 25,
+         |  $split
+         |}""".stripMargin).fold(e => fail(s"config parse: $e"), identity)
+
+  test("Main.run key-split archives a JDBC source named by the config and deletes back") {
+    val locator = "memory:graftmain"
+    seedDerby(locator)
+    val tgt = Files.createTempDirectory("graft-main-jdbc").toString + "/t"
+    val cfg = derbyConfig(locator,
+      """"sourceWhereCondition": "ID <= 120", "sourceSplitKey": "ID",
+        |  "maxThread": 3, "deleteAfterSync": true""".stripMargin)
+    // sourceDir is not read for a JDBC source
+    assert(Main.run(spark, cfg, "-", tgt))
+    val got = spark.read.parquet(tgt)
+    assert(got.count() == 120L)
+    assert(got.select("ID").distinct().count() == 120L)
+    // the source lost exactly the archived range
+    assert(derbyCount(locator, "ID <= 120") == 0L)
+    assert(derbyCount(locator, "1=1") == 80L)
+  }
+
+  test("Main.run time-split archives a JDBC source named by the config") {
+    val locator = "memory:graftmain"
+    seedDerby(locator)
+    val tgt = Files.createTempDirectory("graft-main-jdbc-ts").toString + "/t"
+    val cfg = derbyConfig(locator,
+      """"sourceWhereCondition": "TS >= '2024-03-01 00:30:00' and TS < '2024-03-01 02:30:00'",
+        |  "sourceSplitTimeKey": "TS", "timeSplitUnit": "hour",
+        |  "batchMaxInterval": 0, "maxThread": 1""".stripMargin)
+    assert(Main.run(spark, cfg, "-", tgt))
+    assert(spark.read.parquet(tgt).count() == 120L) // minutes 30..149
+    assert(derbyCount(locator, "1=1") == 200L)
+  }
+
+  test("Main.run refuses --landing with a config that names a JDBC source") {
+    val cfg = ArchiverConfig(sourceHost = "memory:graftmain", sourceTable = "orders")
+    val e = intercept[IllegalArgumentException](
+      Main.run(spark, cfg, "-", "-", landing = Some("json")))
+    assert(e.getMessage.contains("--landing") && e.getMessage.contains("sourceHost"),
+      e.getMessage)
+  }
+
   test("Main.run archives per a JSON config and reconciles") {
     val srcDir = Files.createTempDirectory("graft-main-src").toString
     val tgt = Files.createTempDirectory("graft-main-tgt").toString + "/t"

@@ -57,8 +57,9 @@ class TypeFixtureSpec extends SparkSpec {
       sourceDB = new java.io.File(srcDir).getName, sourceTable = "test_table",
       sourceWhereCondition = "id < 10000", sourceSplitKey = "id",
       batchSize = 5, maxThread = 3)
-    val report = Archiver.parquet(spark, cfg, srcDir, tgt, tgt + ".stg",
-      schema, pacingSleep = _ => ()).run()
+    val report = Archiver.wire(spark, cfg,
+      new graft.source.ParquetTableSource(spark, srcDir), tgt, tgt + ".stg",
+      pacingSleep = _ => ()).run()
 
     assert(report.reconciliation.correct)
     assert(report.reconciliation.targetRows == 20) // reference golden count

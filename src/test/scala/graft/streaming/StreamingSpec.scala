@@ -126,8 +126,9 @@ class StreamingSpec extends SparkSpec {
       sourceDB = new java.io.File(srcDir).getName, sourceTable = "events",
       sourceWhereCondition = "event_id >= 0",
       sourceSplitKey = "event_id", batchSize = 100000)
-    val archiver = graft.Archiver.parquet(spark, cfg, srcDir, tgt,
-      tgt + ".delta-stg", schema, pacingSleep = _ => ())
+    val archiver = graft.Archiver.wire(spark, cfg,
+      new graft.source.ParquetTableSource(spark, srcDir), tgt,
+      tgt + ".delta-stg", pacingSleep = _ => ())
     val rep = archiver.runIncremental()
     assert(rep.reconciliation.correct, rep.reconciliation)
     assert(spark.read.schema(schema).parquet(tgt).count() == all.count(),
