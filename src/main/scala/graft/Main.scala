@@ -21,7 +21,8 @@ import graft.source.{FileTableSource, JdbcDialect, JdbcTableSource, ParquetTable
   *  - a non-empty `sourceHost`: a live JDBC source, the dialect from
   *    `databaseType`, connected with `sourceHost`/`sourcePort`/
   *    `sourceUser`/`sourcePass` to `sourceDB`. <sourceDir> is not read
-  *    (pass `-`).
+  *    (pass `-`). On mysql/tidb `deleteAfterSync` deletes in `LIMIT
+  *    batchSize` batches, `batchMaxInterval` seconds apart.
   *  - otherwise: <sourceDir> is a directory of `<table>.parquet` tables.
   *
   * `--incremental` runs the high-watermark delta sync instead of the full
@@ -151,7 +152,8 @@ object Main {
         schemas = Map(cfg.sourceTable -> probe.schema(cfg.sourceDB, cfg.sourceTable)))
     case None if cfg.sourceHost.nonEmpty =>
       new JdbcTableSource(spark, JdbcDialect.forType(cfg.databaseType),
-        cfg.sourceHost, cfg.sourcePort, cfg.sourceUser, cfg.sourcePass, cfg.sourceDB)
+        cfg.sourceHost, cfg.sourcePort, cfg.sourceUser, cfg.sourcePass, cfg.sourceDB,
+        deleteBatch = cfg.batchSize, deletePacingSeconds = cfg.batchMaxInterval)
     case None => new ParquetTableSource(spark, sourceDir)
   }
 

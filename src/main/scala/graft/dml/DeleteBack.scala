@@ -14,8 +14,9 @@ import graft.sink.Compaction
   * dialects issue one unbatched DELETE (postgres.go:174-187 etc).
   *
   * Two faces here:
-  *  - [[batchPlan]] — the pure batching/pacing schedule (unit-testable,
-  *    and what a JDBC executor would run statement-by-statement);
+  *  - [[batchPlan]] — the pure batching/pacing schedule, which
+  *    [[runBatches]] runs statement by statement (a mysql
+  *    `JdbcTableSource.deleteWhere`);
   *  - [[deleteFromParquet]] — the sandbox execution: a table rewrite
   *    keeping only the anti-predicate rows (what DELETE means for an
   *    immutable-file table; a real table format makes this transactional).
@@ -37,6 +38,17 @@ object DeleteBack {
     out.result()
   }
 
+  /** Runs the mysql schedule for one delete statement: `stmt LIMIT n` for
+    * each [[batchPlan]] batch through `exec`, the pacing `sleep` (ms)
+    * between batches. Returns the rows `exec` reports deleted. */
+  def runBatches(stmt: String, totalRows: Long, batchSize: Long, pacingSeconds: Int,
+      sleep: Long => Unit = Thread.sleep)(exec: String => Long): Long =
+    batchPlan(totalRows, batchSize, pacingSeconds).map { b =>
+      val n = exec(s"$stmt LIMIT ${b.limit}")
+      if (b.sleepSecondsAfter > 0) sleep(b.sleepSecondsAfter * 1000L)
+      n
+    }.sum
+
   /** Batched delete statements for a JDBC executor (dialect-generic). */
   def deleteSql(db: String, table: String, where: String, limit: Option[Long]): String =
     limit match {
@@ -45,13 +57,12 @@ object DeleteBack {
     }
 
   /** Live-JDBC DML execution: one statement, returns the update count.
-    * The non-mysql delete-back path is exactly one unbatched statement
-    * from [[deleteSql]]; the mysql path feeds [[batchPlan]]'s LIMIT
-    * batches through here one statement at a time with the pacing sleep
-    * between them. Runs on the DRIVER by design — delete-back is a
-    * planning-sized control action (one statement per table), never a
-    * per-row distributed job — on the connection every control statement
-    * opens ([[graft.source.DriverJdbc]]). */
+    * The non-mysql delete-back path is exactly one unbatched statement;
+    * the mysql path feeds [[runBatches]]' LIMIT batches through here one
+    * statement at a time with the pacing sleep between them. Runs on the
+    * DRIVER by design — delete-back is a planning-sized control action
+    * (one statement per table), never a per-row distributed job — on the
+    * connection every control statement opens ([[graft.source.DriverJdbc]]). */
   def executeJdbc(url: String, props: java.util.Properties, sql: String): Long =
     DriverJdbc.update(url, props, sql)
 

@@ -26,9 +26,12 @@ sealed trait JdbcDialect {
     s"SELECT count(*) FROM ${qualify(db, table)} WHERE $where"
   def minMaxSql(key: String, db: String, table: String, where: String): String =
     s"SELECT MIN($key), MAX($key) FROM ${qualify(db, table)} WHERE $where"
-  /** The unbatched delete-back statement (postgres.go:174-187 et al). */
+  /** The delete-back statement (postgres.go:174-187 et al). */
   def deleteSql(db: String, table: String, where: String): String =
     s"DELETE FROM ${qualify(db, table)} WHERE $where"
+  /** Whether delete-back runs [[deleteSql]] in rate-limited `LIMIT`
+    * batches (mysql.go:134-172) instead of as one statement. */
+  def batchedDelete: Boolean = false
   def minMaxTimeSql(key: String, db: String, table: String, where: String): String =
     s"SELECT MIN($key), MAX($key) FROM ${qualify(db, table)} WHERE $where"
   /** Typed timestamp literal for WHERE predicates against timestamp
@@ -47,6 +50,7 @@ case object MySqlDialect extends JdbcDialect {
     s"jdbc:mysql://$h:$p/$db?user=${JdbcDialect.enc(u)}&password=${JdbcDialect.enc(pw)}"
   val listDatabasesSql = "SHOW DATABASES"
   def listTablesSql(db: String) = s"SHOW TABLES FROM $db"
+  override def batchedDelete = true
 }
 
 case object PostgresDialect extends JdbcDialect {

@@ -335,7 +335,8 @@ object FileTableSource {
   * predicate array to `spark.read.jdbc` — one predicate per Spark
   * partition. */
 final class JdbcTableSource(spark: SparkSession, dialect: JdbcDialect,
-    host: String, port: Int, user: String, pass: String, defaultDb: String)
+    host: String, port: Int, user: String, pass: String, defaultDb: String,
+    deleteBatch: Long = 0L, deletePacingSeconds: Int = 0)
     extends TableSource {
 
   private def props: java.util.Properties = {
@@ -398,9 +399,17 @@ final class JdbcTableSource(spark: SparkSession, dialect: JdbcDialect,
       (DriverJdbc.string(rs, 1), DriverJdbc.string(rs, 2))
     }
 
-  /** One unbatched driver-side `DELETE` on the dialect's qualified name. */
-  override def deleteWhere(db: String, table: String, where: String): Long =
-    DeleteBack.executeJdbc(url, props, dialect.deleteSql(db, table, where))
+  /** Driver-side `DELETE` on the dialect's qualified name: one statement,
+    * or on a dialect that batches it (mysql) with a positive
+    * `deleteBatch`, the counted range in `LIMIT min(deleteBatch,
+    * remaining)` statements with `deletePacingSeconds` sleeps between. */
+  override def deleteWhere(db: String, table: String, where: String): Long = {
+    val stmt = dialect.deleteSql(db, table, where)
+    if (dialect.batchedDelete && deleteBatch > 0)
+      DeleteBack.runBatches(stmt, count(db, table, where), deleteBatch,
+        deletePacingSeconds)(DeleteBack.executeJdbc(url, props, _))
+    else DeleteBack.executeJdbc(url, props, stmt)
+  }
 
   override def timestampLiteral(ts: String): String = dialect.timestampLiteral(ts)
 }

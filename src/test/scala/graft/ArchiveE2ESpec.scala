@@ -298,6 +298,14 @@ class ArchiveE2ESpec extends SparkSpec {
     assert(plan.map(_.sleepSecondsAfter) == Seq(3, 3, 0))
     assert(DeleteBack.deleteSql("db", "t", "id < 5", Some(10)) ==
       "DELETE FROM db.t WHERE id < 5 LIMIT 10")
+    // the mysql delete-back runs that plan statement by statement
+    val stmts = collection.mutable.ArrayBuffer.empty[String]
+    val sleeps = collection.mutable.ArrayBuffer.empty[Long]
+    val deleted = DeleteBack.runBatches("DELETE FROM db.t WHERE id < 5", 25, 10, 3,
+        sleeps.append(_)) { sql => stmts += sql; sql.split(" ").last.toLong }
+    assert(deleted == 25L)
+    assert(stmts.toSeq == Seq(10, 10, 5).map(n => s"DELETE FROM db.t WHERE id < 5 LIMIT $n"))
+    assert(sleeps.toSeq == Seq(3000L, 3000L))
   }
 
   test("all staging formats round-trip µs timestamps and quoted text exactly") {

@@ -68,15 +68,6 @@ class DialectSqlSpec extends AnyFunSuite {
     }
   }
 
-  test("delete-back (JdbcTableSource.deleteWhere) deletes on each dialect's qualified name") {
-    for (d <- dialects)
-      assert(d.deleteSql("db", "t", "id <= 5") ==
-        s"DELETE FROM ${d.qualify("db", "t")} WHERE id <= 5", d.name)
-    assert(SqlServerDialect.deleteSql("db", "t", "id <= 5") ==
-      "DELETE FROM [db].dbo.[t] WHERE id <= 5")
-    assert(DerbyDialect.deleteSql("DB", "T", "ID <= 5") == "DELETE FROM DB.T WHERE ID <= 5")
-  }
-
   test("pg surface matches the reference's published statements") {
     // postgres.go:308 lists pg_database (ours additionally excludes
     // templates — a superset filter, same relation and column)
@@ -107,6 +98,8 @@ class DialectSqlSpec extends AnyFunSuite {
     assert(SqlServerDialect.qualify("db", "t") == "[db].dbo.[t]")
     assert(SqlServerDialect.qualify("db", "s.t") == "[db].s.t",
       "a schema-qualified table must not be re-defaulted to dbo")
+    assert(SqlServerDialect.deleteSql("db", "t", "id <= 5") ==
+      "DELETE FROM [db].dbo.[t] WHERE id <= 5")
   }
 
   test("oracle surface matches the reference's published statements") {
@@ -127,5 +120,9 @@ class DialectSqlSpec extends AnyFunSuite {
     // mysql.go:299,327
     assert(MySqlDialect.listDatabasesSql == "SHOW DATABASES")
     assert(MySqlDialect.listTablesSql("db1") == "SHOW TABLES FROM db1")
+    // mysql.go:134-172: delete-back runs in LIMIT batches
+    assert(MySqlDialect.batchedDelete)
+    assert(Seq(PostgresDialect, SqlServerDialect, OracleDialect, DerbyDialect)
+      .forall(!_.batchedDelete))
   }
 }

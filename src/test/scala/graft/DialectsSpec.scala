@@ -39,6 +39,8 @@ class DialectsSpec extends AnyFunSuite {
       "jdbc:derby:memory:graftdb")
     assert(DerbyDialect.driverUrl("", 0, "", "", "memory:graftdb") ==
       "jdbc:derby:memory:graftdb")
+    // ... and its tables, deleted back too, qualify as SCHEMA.TABLE
+    assert(DerbyDialect.deleteSql("DB", "T", "ID <= 5") == "DELETE FROM DB.T WHERE ID <= 5")
   }
 
   test("sqlserver dirty reads use sessionInitStatement (read path), not isolationLevel") {

@@ -376,6 +376,9 @@ class JdbcE2ESpec extends SparkSpec {
       sourceDbTables = Seq("WAVEDB.*@ORDERS.*"),
       sourceWhereCondition = "ID >= 1", sourceSplitKey = "ID",
       batchSize = 7, maxThread = 3)
+    // the regex alone expands to both schemas; the config table adds none
+    assert(src.expandDbTables(mcfg.sourceDbTables) ==
+      Map("WAVEDB1" -> Seq("ORDERS_WAVE"), "WAVEDB2" -> Seq("ORDERS_WAVE")))
     val schema = src.scan("WAVEDB1", "ORDERS_WAVE", Seq.empty, "1=1").schema
     val archiver = Archiver.wire(spark, mcfg, src, s"$root/target",
       s"$root/staging", pacingSleep = _ => ())
