@@ -15,9 +15,9 @@ import graft.source.{FileTableSource, JdbcDialect, JdbcTableSource, ParquetTable
   * The source, like the reference's `databaseType` dispatch
   * (source/source.go:31-46):
   *  - `--landing json|csv`: <sourceDir> is a file landing zone (NDJSON/CSV
-  *    drops); the contract schema is inferred once from the config
-  *    table's drop. A config that also sets `sourceHost` is refused: the
-  *    two name different sources.
+  *    drops); each table's contract schema is inferred once from its own
+  *    drop, and lines that fail it are quarantined. A config that also
+  *    sets `sourceHost` is refused: the two name different sources.
   *  - a non-empty `sourceHost`: a live JDBC source, the dialect from
   *    `databaseType`, connected with `sourceHost`/`sourcePort`/
   *    `sourceUser`/`sourcePass` to `sourceDB`. <sourceDir> is not read
@@ -147,9 +147,7 @@ object Main {
       require(cfg.sourceHost.isEmpty,
         s"--landing names a file landing zone and sourceHost " +
           s"'${cfg.sourceHost}' a JDBC source: give one of them")
-      val probe = new FileTableSource(spark, sourceDir, fmt)
-      new FileTableSource(spark, sourceDir, fmt,
-        schemas = Map(cfg.sourceTable -> probe.schema(cfg.sourceDB, cfg.sourceTable)))
+      new FileTableSource(spark, sourceDir, fmt)
     case None if cfg.sourceHost.nonEmpty =>
       new JdbcTableSource(spark, JdbcDialect.forType(cfg.databaseType),
         cfg.sourceHost, cfg.sourcePort, cfg.sourceUser, cfg.sourcePass, cfg.sourceDB,

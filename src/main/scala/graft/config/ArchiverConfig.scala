@@ -8,14 +8,14 @@ package graft.config
   * `validateSourceSplitTimeKey`), as pure functions returning the normalized
   * config or an error instead of panicking.
   *
-  * Not every field drives the engine:
-  *  - the connection fields `databaseType`, `sourceHost`, `sourcePort`,
-  *    `sourceUser`, `sourcePass` are read by `graft.Main`: a non-empty
-  *    `sourceHost` selects the JDBC source, `databaseType` its dialect;
-  *  - accepted for reference configs, unused: `databendDSN`,
-  *    `databendTable` (the target is `Main`'s `<targetDir>` argument),
-  *    `userStage` (normalized by [[ArchiverConfig.preCheck]] only),
-  *    `copyPurge`, `copyForce`, `disableVariantCheck`, `sourceQuery`.
+  * The connection fields `databaseType`, `sourceHost`, `sourcePort`,
+  * `sourceUser`, `sourcePass` are read by `graft.Main`: a non-empty
+  * `sourceHost` selects the JDBC source, `databaseType` its dialect.
+  * Reference-config keys with no engine counterpart (`databendDSN`,
+  * `databendTable` — the target is `Main`'s `<targetDir>` argument —
+  * `userStage`, `copyPurge`, `copyForce`, `disableVariantCheck`,
+  * `sourceQuery`) are not fields: the JSON loader ignores unknown keys,
+  * so such configs still load.
   */
 final case class ArchiverConfig(
     databaseType: String = "mysql",
@@ -26,19 +26,12 @@ final case class ArchiverConfig(
     sourceDB: String = "",
     sourceTable: String = "",
     sourceDbTables: Seq[String] = Seq.empty,     // "dbRegex@tableRegex"
-    sourceQuery: String = "",                    // accepted but overwritten (worker/worker.go:34)
     sourceWhereCondition: String = "",
     sourceSplitKey: String = "",                 // integer PK key-split mode
     sourceSplitTimeKey: String = "",             // time-split mode
     timeSplitUnit: String = "minute",
-    databendDSN: String = "",
-    databendTable: String = "",
     batchSize: Long = 1000L,
     batchMaxInterval: Int = 3,                   // pacing seconds
-    userStage: String = "~",
-    copyPurge: Boolean = false,
-    copyForce: Boolean = false,
-    disableVariantCheck: Boolean = false,
     maxThread: Int = 1,
     deleteAfterSync: Boolean = false,
     // staging FILE_FORMAT (the reference hard-codes `type = NDJSON`,
@@ -62,9 +55,7 @@ object ArchiverConfig {
     * exactly one split mode, WHERE required, time mode single-threaded
     * with a whitelisted unit and a shape-checked predicate. */
   def preCheck(cfg0: ArchiverConfig): Either[String, ArchiverConfig] = {
-    val cfg = cfg0.copy(
-      userStage = if (cfg0.userStage.isEmpty) "~" else cfg0.userStage,
-      maxThread = if (cfg0.maxThread == 0) 1 else cfg0.maxThread)
+    val cfg = cfg0.copy(maxThread = if (cfg0.maxThread == 0) 1 else cfg0.maxThread)
     if (!Set("json", "csv", "parquet", "orc")(cfg.stagingFormat))
       Left(s"invalid stagingFormat: ${cfg.stagingFormat}, it should be 'json', 'csv', 'parquet', or 'orc'")
     else if (cfg.sourceSplitKey.nonEmpty && cfg.sourceSplitTimeKey.nonEmpty)

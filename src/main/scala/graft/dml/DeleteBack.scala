@@ -1,6 +1,6 @@
 package graft.dml
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
 
@@ -66,21 +66,6 @@ object DeleteBack {
   def executeJdbc(url: String, props: java.util.Properties, sql: String): Long =
     DriverJdbc.update(url, props, sql)
 
-  /** Crash recovery for [[deleteFromParquet]]'s rename-aside swap, through
-    * the active session's file system: the three states
-    * [[graft.sink.Compaction.recoverSwap]] repairs, with the rewrite in
-    * `.rewrite`. The DELETE is idempotent, so a restored `.old` is simply
-    * redone by the caller.
-    * @return true when it repaired something */
-  def recoverParquet(path: String): Boolean =
-    Compaction.recoverSwap(fileSystem(SparkSession.active, path), path,
-      rewritePath(path))
-
-  private def rewritePath(path: String) = new Path(path.stripSuffix("/") + ".rewrite")
-
-  private def fileSystem(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
   /** Sandbox execution over a parquet "table": rewrite keeping every row
     * where the predicate is NOT TRUE. SQL DELETE removes only rows where
     * the predicate evaluates to TRUE — a NULL predicate (e.g. a NULL key
@@ -91,11 +76,13 @@ object DeleteBack {
     * The swap is rename-ASIDE ([[graft.sink.Compaction.swapIn]]), never
     * delete-then-rename: the live table must not be deleted before its
     * replacement is in place, or a crash in between loses the only copy.
-    * Recovery (as in [[recoverParquet]]) runs first so an interrupted
-    * prior swap is repaired before the rewrite reads the table. */
+    * Recovery ([[graft.sink.Compaction.recoverSwap]], the rewrite in
+    * `.rewrite`) runs first so an interrupted prior swap is repaired
+    * before the rewrite reads the table; the DELETE is idempotent, so a
+    * restored `.old` is simply redone. */
   def deleteFromParquet(spark: SparkSession, path: String, where: String): Long = {
-    val fs = fileSystem(spark, path)
-    val tmp = rewritePath(path)
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = new Path(path.stripSuffix("/") + ".rewrite")
     Compaction.recoverSwap(fs, path, tmp): Unit
     val keep = spark.read.parquet(path)
       .where(not(coalesce(expr(where), lit(false))))

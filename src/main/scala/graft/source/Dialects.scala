@@ -124,11 +124,13 @@ case object OracleDialect extends JdbcDialect {
   * (a config's `sourceHost`, next to `sourceDB` naming the schema) and in
   * `db` otherwise; the port is unused.
   *
-  * Strict typing: Derby will not implicitly compare a TIMESTAMP column
-  * against a bare string, so time predicates go through
-  * [[timestampLiteral]] (`TIMESTAMP('...')`) — all four archival modes
-  * (key-split, time-split, key- and time-incremental) run live in
-  * JdbcE2ESpec. */
+  * Timestamps: Derby compares a TIMESTAMP column with a bare
+  * `'yyyy-MM-dd HH:mm:ss[.ffffff]'` string exactly, µs fraction included
+  * (the shape a config's `sourceWhereCondition` carries), but rejects the
+  * ANSI typed literal `TIMESTAMP '...'` as a syntax error, so
+  * [[timestampLiteral]] renders its function form `TIMESTAMP('...')` —
+  * all four archival modes (key-split, time-split, key- and
+  * time-incremental) run live in JdbcE2ESpec. */
 case object DerbyDialect extends JdbcDialect {
   val name = "derby"
   def driverUrl(h: String, p: Int, u: String, pw: String, db: String) =

@@ -77,9 +77,24 @@ trait TableSource {
   * aggregates and the predicate scan run through Catalyst on the same
   * relation — predicates become partition filters instead of remote
   * cursors, everything above (catalog regex, planner, loader, reconciler,
-  * delete-back) is source-agnostic. */
+  * delete-back) is source-agnostic. The catalog is a directory:
+  * `rootDir/<table><suffix>` for each of [[suffixes]], one database named
+  * after the directory's base name. */
 trait DataFrameTableSource extends TableSource {
+  protected val rootDir: String
+  /** File-name suffixes that mark a table. */
+  protected def suffixes: Seq[String]
   protected def table(t: String): DataFrame
+
+  private def dir = new java.io.File(rootDir)
+  private def dbName = dir.getName
+
+  override def listDatabases(): Seq[String] = Seq(dbName)
+
+  override def listTables(db: String): Seq[String] =
+    if (db != dbName) Seq.empty
+    else dir.listFiles((_, n) => suffixes.exists(n.endsWith)).toSeq
+      .map(n => suffixes.foldLeft(n.getName)(_.stripSuffix(_))).distinct.sorted
 
   override def scan(db: String, t: String, predicates: Seq[String],
       userPred: String): DataFrame = {
@@ -106,19 +121,10 @@ trait DataFrameTableSource extends TableSource {
   }
 }
 
-/** Parquet-backed source: `rootDir/<table>.parquet`, database name = the
-  * directory's base name. */
-class ParquetTableSource(spark: SparkSession, rootDir: String)
+/** Parquet-backed source: `rootDir/<table>.parquet`. */
+class ParquetTableSource(spark: SparkSession, protected val rootDir: String)
     extends DataFrameTableSource {
-  private val dir = new java.io.File(rootDir)
-  private val dbName = dir.getName
-
-  override def listDatabases(): Seq[String] = Seq(dbName)
-
-  override def listTables(db: String): Seq[String] =
-    if (db != dbName) Seq.empty
-    else dir.listFiles((_, n) => n.endsWith(".parquet")).toSeq
-      .map(_.getName.stripSuffix(".parquet")).sorted
+  protected def suffixes: Seq[String] = Seq(".parquet")
 
   protected def table(t: String): DataFrame =
     spark.read.parquet(s"$rootDir/$t.parquet")
@@ -132,15 +138,19 @@ class ParquetTableSource(spark: SparkSession, rootDir: String)
 /** File-landing-zone source: `rootDir/<table>.<json|csv>[.gz]` — the
   * ingestion topology where an upstream producer drops NDJSON or CSV
   * batches in a landing directory and the archiver sweeps them into the
-  * warehouse. Table schemas come from the landing CONTRACT when provided
-  * (the production shape — text formats carry no types; µs-precision
-  * timestamps parse via the same `timestampFormat` the staged loader
-  * writes), else from inference (one extra planning-time pass, fine for
-  * exploration, not for the scan loop). Everything above the relation —
-  * catalog regex, key/time-split planning, staged load, reconciliation —
-  * is inherited unchanged from [[DataFrameTableSource]]. Delete-back keeps
-  * the inherited refusal: landing drops are immutable producer output, and
-  * the producer retires its own.
+  * warehouse. Every table is read under a CONTRACT schema (text formats
+  * carry no types; µs-precision timestamps parse via the same
+  * `timestampFormat` the staged loader writes): the one `schemas` gives
+  * for it, else the schema inferred from its drop — json, or csv with a
+  * header, timestamps opted in (the default infers them as strings, which
+  * would silently turn a time-split watermark into string comparison) —
+  * once per drop, re-inferred only when the drop's files change. A table
+  * a `db@table` regex matches is therefore parsed, audited and
+  * quarantined exactly like the config table. Everything above the
+  * relation — catalog regex, key/time-split planning, staged load,
+  * reconciliation — is inherited unchanged from [[DataFrameTableSource]].
+  * Delete-back keeps the inherited refusal: landing drops are immutable
+  * producer output, and the producer retires its own.
   *
   * Robustness (a production landing zone is untrusted producer output):
   *
@@ -149,13 +159,16 @@ class ParquetTableSource(spark: SparkSession, rootDir: String)
   *    splittable, so scan parallelism is the file count: exactly the
   *    shape landing producers deliver (many per-batch drops), not a
   *    problem the archiver needs to solve.
-  *  - corrupt-record policy (contract-schema path): lines that fail to
-  *    parse land in a `_corrupt_record` audit column, are EXCLUDED from
-  *    the archived scan, and are counted per table via [[quarantined]]
-  *    so the run report can surface exactly how many rows were left
-  *    behind — the same classified-error discipline the reference's
-  *    loader applies (ingester/ingest_databend.go:25-29). A malformed
-  *    line must neither silently become nulls nor fail the whole sweep.
+  *  - corrupt-record policy: lines that fail to parse under the contract
+  *    land in a `_corrupt_record` audit column, are EXCLUDED from the
+  *    archived scan, and are counted per table via [[quarantined]] so the
+  *    run report can surface exactly how many rows were left behind — the
+  *    same classified-error discipline the reference's loader applies
+  *    (ingester/ingest_databend.go:25-29). A malformed line must neither
+  *    silently become nulls nor fail the whole sweep.
+  *  - a drop that yields no columns to infer (empty, or every line
+  *    corrupt) fails loudly, naming the table and its drop: there is no
+  *    contract to archive it under.
   *
   * The parse is deliberately `text` + `from_json`/`from_csv`, not the
   * json/csv file source: Spark disallows file-source queries whose
@@ -164,30 +177,13 @@ class ParquetTableSource(spark: SparkSession, rootDir: String)
   * over the corrupt-filtered relation prunes to. Parsing as an ordinary
   * projection over a text scan keeps every count/filter shape legal, at
   * the same cost (json can't push predicates anyway). */
-final class FileTableSource(spark: SparkSession, rootDir: String,
+final class FileTableSource(spark: SparkSession, protected val rootDir: String,
     format: String = "json",
-    schemas: Map[String, org.apache.spark.sql.types.StructType] = Map.empty)
+    schemas: Map[String, StructType] = Map.empty)
     extends DataFrameTableSource {
   require(Set("json", "csv")(format), s"unsupported landing format: $format")
   import FileTableSource.CorruptCol
-  private val dir = new java.io.File(rootDir)
-  private val dbName = dir.getName
-  private val suffixes = Seq(s".$format", s".$format.gz")
-
-  // contract schemas never include the audit column itself (an inference
-  // probe over a dirty landing file CAN include it — inference appends
-  // columnNameOfCorruptRecord when it meets malformed records)
-  private val dataSchemas: Map[String, org.apache.spark.sql.types.StructType] =
-    schemas.view.mapValues(sc =>
-      org.apache.spark.sql.types.StructType(sc.filterNot(_.name == CorruptCol)))
-      .toMap
-
-  override def listDatabases(): Seq[String] = Seq(dbName)
-
-  override def listTables(db: String): Seq[String] =
-    if (db != dbName) Seq.empty
-    else dir.listFiles((_, n) => suffixes.exists(n.endsWith)).toSeq
-      .map(n => suffixes.foldLeft(n.getName)(_.stripSuffix(_))).distinct.sorted
+  protected def suffixes: Seq[String] = Seq(s".$format", s".$format.gz")
 
   private def pathOf(t: String): String = {
     val present = suffixes.map(sfx => s"$rootDir/$t$sfx")
@@ -208,6 +204,31 @@ final class FileTableSource(spark: SparkSession, rootDir: String,
     "columnNameOfCorruptRecord" -> CorruptCol,
     "timestampFormat" -> graft.sink.StagedLoader.MicrosTimestampFormat)
 
+  /** Table `t`'s contract, without the audit column (inference over a
+    * dirty drop appends it when it meets malformed records). */
+  private def contract(t: String): StructType =
+    StructType(schemas.getOrElse(t, inferred(t)).filterNot(_.name == CorruptCol))
+
+  /** The schema inferred from `t`'s drop, memoized under the drop's file
+    * signature ([[graft.ops.Memo.signed]]): one inference job per drop,
+    * however many times planning, scan, count and audit ask. */
+  private def inferred(t: String): StructType = {
+    val path = pathOf(t)
+    graft.ops.Memo.signed(spark, "source.inferred", path, format) { _ =>
+      val r = spark.read
+        .option("timestampFormat", graft.sink.StagedLoader.MicrosTimestampFormat)
+        .option("inferTimestamp", "true")
+      val sc = (format match {
+        case "json" => r.json(path)
+        case "csv"  => r.option("header", "true").option("inferSchema", "true").csv(path)
+      }).schema
+      require(sc.exists(_.name != CorruptCol),
+        s"landing table '$t' has no contract and its drop $path yields no " +
+          "columns to infer (empty, or every line corrupt)")
+      sc
+    }
+  }
+
   /** A line is header-SHAPED when its CSV tokens — dequoted by the same
     * parser the data path uses, trimmed, case-folded — are exactly the
     * contract's field names in order. Tolerating render variants
@@ -219,22 +240,19 @@ final class FileTableSource(spark: SparkSession, rootDir: String,
     * literally equals its column name — is unresolvable in headered
     * CSV itself, and under a typed contract such a row would fail the
     * parse anyway for any non-string column.) */
-  private def headerShaped(sc: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.Column = {
-    val strSchema = org.apache.spark.sql.types.StructType(sc.fieldNames.map(
+  private def headerShaped(sc: StructType): org.apache.spark.sql.Column = {
+    val strSchema = StructType(sc.fieldNames.map(
       org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType)))
     val toks = from_csv(col("value"), strSchema, Map("mode" -> "PERMISSIVE"))
     sc.fieldNames.map(f =>
       lower(trim(toks.getField(f))) === lit(f.toLowerCase)).reduce(_ && _)
   }
 
-  /** Contract-schema parse with the audit column: every non-blank line
-    * becomes one row, malformed ones carrying their raw text in
-    * `_corrupt_record` (and nothing else). CSV header-shaped lines are
-    * dropped per line (see [[headerShaped]]) and never enter the
-    * quarantine count. */
-  private def parsedWithAudit(t: String,
-      sc: org.apache.spark.sql.types.StructType): DataFrame = {
+  /** Contract parse with the audit column: every non-blank line becomes
+    * one row, malformed ones carrying their raw text in `_corrupt_record`
+    * (and nothing else). CSV header-shaped lines are dropped per line
+    * (see [[headerShaped]]) and never enter the quarantine count. */
+  private def parsedWithAudit(t: String, sc: StructType): DataFrame = {
     val pSchema = sc.add(CorruptCol, org.apache.spark.sql.types.StringType)
     val lines = spark.read.text(pathOf(t))
       .where(length(trim(col("value"))) > 0)
@@ -265,62 +283,35 @@ final class FileTableSource(spark: SparkSession, rootDir: String,
   // for reconciliation's count() and AGAIN for the quarantine audit — one
   // full extra scan per table per run. count() below fills the memo from
   // the pass it already makes, so the audit read is usually free.
-  private def quarantineMemo(t: String, sc: org.apache.spark.sql.types.StructType)(
-      corrupt: => Long): Long =
+  private def quarantineMemo(t: String, sc: StructType)(corrupt: => Long): Long =
     graft.ops.Memo.signed(spark, "source.quarantined", pathOf(t), (format, sc))(
       _ => corrupt)
 
   /** Valid-row count under `where` and the corrupt-line count, from ONE
     * parse of the landing drop. */
-  private def countBoth(t: String,
-      sc: org.apache.spark.sql.types.StructType, where: String): (Long, Long) = {
+  override def count(db: String, t: String, where: String): Long = {
+    val sc = contract(t)
     val w = if (where.isEmpty) "true" else where
     val r = parsedWithAudit(t, sc).agg(
       org.apache.spark.sql.functions.count(
         when(col(CorruptCol).isNull && expr(w), 1)),
       org.apache.spark.sql.functions.count(
         when(col(CorruptCol).isNotNull, 1))).head()
-    (r.getLong(0), r.getLong(1))
+    quarantineMemo(t, sc)(r.getLong(1)): Unit
+    r.getLong(0)
   }
-
-  override def count(db: String, t: String, where: String): Long =
-    dataSchemas.get(t) match {
-      case Some(sc) =>
-        val (valid, corrupt) = countBoth(t, sc, where)
-        quarantineMemo(t, sc)(corrupt): Unit
-        valid
-      case None => super.count(db, t, where)
-    }
 
   /** Rows this table's landing drop contains that FAILED the contract
     * parse — quarantined out of the archived scan, surfaced in the run
-    * report. Zero on the inference path (no contract to violate). */
-  override def quarantined(db: String, t: String): Long = dataSchemas.get(t) match {
-    case Some(sc) =>
-      quarantineMemo(t, sc)(
-        parsedWithAudit(t, sc).where(col(CorruptCol).isNotNull).count())
-    case None => 0L
+    * report. */
+  override def quarantined(db: String, t: String): Long = {
+    val sc = contract(t)
+    quarantineMemo(t, sc)(
+      parsedWithAudit(t, sc).where(col(CorruptCol).isNotNull).count())
   }
 
-  protected def table(t: String): DataFrame = dataSchemas.get(t) match {
-    case Some(sc) =>
-      parsedWithAudit(t, sc).where(col(CorruptCol).isNull).drop(CorruptCol)
-    case None =>
-      // exploration path: schema inference (timestamps opted in — the
-      // default infers them as strings, which would silently turn a
-      // time-split watermark into string comparison). Inference over a
-      // dirty file appends the corrupt column; drop it so the probed
-      // schema is a clean sink contract (rows stay unfiltered here — the
-      // scan loop re-reads under the pinned contract, corrupt-aware).
-      val r = spark.read
-        .option("timestampFormat", graft.sink.StagedLoader.MicrosTimestampFormat)
-        .option("inferTimestamp", "true")
-      (format match {
-        case "json" => r.json(pathOf(t))
-        case "csv"  => r.option("header", "true").option("inferSchema", "true")
-          .csv(pathOf(t))
-      }).drop(CorruptCol)
-  }
+  protected def table(t: String): DataFrame =
+    parsedWithAudit(t, contract(t)).where(col(CorruptCol).isNull).drop(CorruptCol)
 }
 
 object FileTableSource {

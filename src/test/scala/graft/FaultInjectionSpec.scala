@@ -152,12 +152,15 @@ class FaultInjectionSpec extends SparkSpec {
     assert(!fs.exists(new Path(table + ".old")) &&
            !fs.exists(new Path(table + ".rewrite")))
     // crashed state B: crash after the swap, before cleanup (stale .old) —
-    // the obsolete copy must be dropped, the live table untouched
+    // the next delete's recovery must drop the obsolete copy and leave the
+    // live table untouched (a predicate matching no row isolates that)
     fs.mkdirs(new Path(table + ".old"))
-    assert(DeleteBack.recoverParquet(table))
+    val before = spark.read.parquet(table).collect().toSet
+    assert(DeleteBack.deleteFromParquet(spark, table, "r_regionkey < 0") == 0)
     assert(spark.read.parquet(table).count() == n - 2)
-    assert(!fs.exists(new Path(table + ".old")))
-    assert(!DeleteBack.recoverParquet(table), "second recover must be a no-op")
+    assert(spark.read.parquet(table).collect().toSet == before)
+    assert(!fs.exists(new Path(table + ".old")) &&
+           !fs.exists(new Path(table + ".rewrite")))
   }
 
   test("retry loop drives a mid-swap-crashed target through recovery to exact counts") {

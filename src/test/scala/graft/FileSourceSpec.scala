@@ -260,6 +260,84 @@ class FileSourceSpec extends SparkSpec {
     assert(spark.read.schema(orders.schema).parquet(s"$out/target").count() == n)
   }
 
+  test("a regex-matched table with no contract parses under its inferred one: " +
+       "corrupt line quarantined, no null row archived") {
+    // the db@table sweep reaches tables the config names no contract for;
+    // each is read under the schema inferred from its own drop, so a
+    // truncated line is quarantined and counted, never archived as nulls
+    val (root, orders) = stageLanding()
+    val b = orders.where("o_orderkey < 4").withColumn("o_orderkey",
+      org.apache.spark.sql.functions.col("o_orderkey") + 1000000L)
+    val lines = b.toJSON.collect() :+ """{"o_orderkey": 1000009, "o_custkey": 5, "o_tot"""
+    Files.write(java.nio.file.Paths.get(s"$root/orders_b.json"),
+      String.join("\n", lines: _*).getBytes("UTF-8"))
+    val dbName = new java.io.File(root).getName
+    val out = Files.createTempDirectory("graft-landing-regex-out").toString
+    val cfg = ArchiverConfig(
+      sourceDB = dbName, sourceTable = "orders",
+      sourceDbTables = Seq(".*@^orders"),
+      sourceWhereCondition = "1=1",
+      sourceSplitKey = "o_orderkey", batchSize = 300, maxThread = 2)
+    val archiver = landingArchiver(cfg, root, orders.schema, out)
+    assert(archiver.discoverTables().toSet ==
+      Set(dbName -> "orders", dbName -> "orders_b"))
+    val report = archiver.run()
+    assert(report.quarantined == 1L, report.toString)
+    assert(report.reconciliation.correct &&
+      report.reconciliation.targetRows == orders.count() + b.count(), report.toString)
+    val tgt = spark.read.schema(orders.schema).parquet(s"$out/target")
+    assert(tgt.where(orders.columns.map(c => s"$c IS NULL").mkString(" AND "))
+      .count() == 0L, "a corrupt line must not be archived as an all-null row")
+  }
+
+  test("a drop with no contract is inferred once; a rewritten drop again; " +
+       "an empty drop fails naming the table") {
+    val (root, orders) = stageLanding()
+    val dbName = new java.io.File(root).getName
+    val src = new FileTableSource(spark, root)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(st => stages.add(st.name))
+    }
+    /** Jobs `body` starts whose call site is the json schema inference. */
+    def inferences(body: => Unit): Int = {
+      org.apache.spark.BusDrain.drain(spark.sparkContext)
+      stages.clear()
+      body
+      org.apache.spark.BusDrain.drain(spark.sparkContext)
+      stages.toArray.count(_.toString.startsWith("json at"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(inferences(src.schema(dbName, "orders")) >= 1)
+      assert(inferences {
+        assert(src.schema(dbName, "orders").fieldNames.toSet == orders.columns.toSet)
+        assert(src.count(dbName, "orders", "1=1") == orders.count())
+        assert(src.scan(dbName, "orders", Seq.empty, "o_orderkey < 100").count() ==
+          orders.where("o_orderkey < 100").count())
+        assert(src.quarantined(dbName, "orders") == 0L)
+        // a second source over the same unchanged drop shares the inference
+        assert(new FileTableSource(spark, root).count(dbName, "orders", "1=1") ==
+          orders.count())
+      } == 0, "an unchanged drop must not be inferred again")
+      // the producer rewrites the drop with one more column
+      orders.withColumn("o_note", org.apache.spark.sql.functions.lit("n"))
+        .write.mode("overwrite").json(s"$root/orders.json")
+      assert(inferences(
+        assert(src.schema(dbName, "orders").fieldNames.contains("o_note"))) >= 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // an empty drop and an all-corrupt drop have no columns to infer
+    Files.write(java.nio.file.Paths.get(s"$root/empty.json"), Array.emptyByteArray)
+    Files.write(java.nio.file.Paths.get(s"$root/garbage.json"),
+      "not json\n{\"o_orderkey\": 1,".getBytes("UTF-8"))
+    Seq("empty", "garbage").foreach { t =>
+      val e = intercept[IllegalArgumentException](src.count(dbName, t, "1=1"))
+      assert(e.getMessage.contains(s"'$t'") && e.getMessage.contains(s"$t.json"),
+        e.getMessage)
+    }
+  }
+
   test("CSV corrupt lines quarantine under the contract parse") {
     val root = Files.createTempDirectory("graft-landing-csv-bad").toString
     // comma-free columns only — free-text comments would break the

@@ -296,8 +296,8 @@ class JdbcE2ESpec extends SparkSpec {
       sourceSplitKey = "", sourceSplitTimeKey = "TS",
       timeSplitUnit = "minute", batchMaxInterval = 0, maxThread = 1)
     // the plan the live engine will execute: 10-minute tumbling windows
-    // with Derby's TIMESTAMP('...') literals (bare strings don't compare
-    // against TIMESTAMP columns on strict-typing engines)
+    // with Derby's TIMESTAMP('...') literals (Derby rejects the ANSI
+    // TIMESTAMP '...' form the other dialects take)
     ArchivePlanner.plan(src, tcfg, "ARCHDB", "EVENTS_TS") match {
       case graft.plan.TimeSplitPlan(ws) =>
         assert(ws.size == 4, ws.toString) // 3 real windows + degenerate tail
@@ -317,6 +317,18 @@ class JdbcE2ESpec extends SparkSpec {
       s"time-delta run must load only the 10 new rows: $r2")
     val tgt = spark.read.schema(schema).parquet(s"$root/target")
     assert(tgt.count() == 70L && tgt.select("ID").distinct().count() == 70L)
+    // Derby compares TIMESTAMP with a bare string too, to the µs: the last
+    // first-drop row sits at 00:29:30, so one µs below it counts 11 rows
+    // and the instant itself 10, both as strings and as TIMESTAMP('…');
+    // only the ANSI typed literal is refused
+    Seq("2024-03-01 00:29:29.999999" -> 11L, "2024-03-01 00:29:30.000000" -> 10L)
+      .foreach { case (w, n) =>
+        assert(src.count("ARCHDB", "EVENTS_TS", s"TS > '$w'") == n, w)
+        assert(src.count("ARCHDB", "EVENTS_TS", s"TS > ${src.timestampLiteral(w)}") == n, w)
+      }
+    val ansi = intercept[java.sql.SQLException](
+      src.count("ARCHDB", "EVENTS_TS", "TS > TIMESTAMP '2024-03-01 00:29:30'"))
+    assert(ansi.getSQLState == "42X01", ansi.getMessage)
   }
 
   test("multi-schema db@table regex archives several LIVE tables into one " +

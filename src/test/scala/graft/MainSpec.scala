@@ -139,6 +139,49 @@ class MainSpec extends SparkSpec {
     assert(spark.read.parquet(tgt).count() == expected)
   }
 
+  test("Main.run --landing json: a db@table regex sweeps every drop under its own contract") {
+    // orders is the config table, orders_b only matches the regex and holds
+    // one truncated line: it is quarantined and printed, not archived
+    val srcDir = Files.createTempDirectory("graft-main-lregex").toString
+    val tgt = Files.createTempDirectory("graft-main-lregex-tgt").toString + "/t"
+    val orders = spark.read.parquet(s"$sf/orders.parquet")
+      .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
+    orders.write.mode("overwrite")
+      .option("timestampFormat", graft.sink.StagedLoader.MicrosTimestampFormat)
+      .json(s"$srcDir/orders.json")
+    val b = orders.where("o_orderkey < 4").withColumn("o_orderkey",
+      org.apache.spark.sql.functions.col("o_orderkey") + 1000000L)
+    b.write.mode("overwrite")
+      .option("timestampFormat", graft.sink.StagedLoader.MicrosTimestampFormat)
+      .json(s"$srcDir/orders_b.json")
+    Files.write(java.nio.file.Paths.get(s"$srcDir/orders_b.json/part-99999.json"),
+      """{"o_orderkey": 1000009, "o_cus""".getBytes("UTF-8"))
+    val db = new java.io.File(srcDir).getName
+    val cfg = ArchiverConfig.fromJson(
+      s"""{
+         |  "sourceDB": "$db",
+         |  "sourceTable": "orders",
+         |  "sourceDbTables": [".*@^orders"],
+         |  "sourceWhereCondition": "o_totalprice > 0",
+         |  "sourceSplitKey": "o_orderkey",
+         |  "batchSize": 500,
+         |  "maxThread": 4
+         |}""".stripMargin).fold(e => fail(s"config parse: $e"), identity)
+    val printed = new java.io.ByteArrayOutputStream
+    assert(Console.withOut(printed)(
+      Main.run(spark, cfg, srcDir, tgt, landing = Some("json"))))
+    assert(printed.toString("UTF-8").contains("[quarantine] 1 corrupt landing rows excluded"),
+      printed.toString("UTF-8"))
+    val got = spark.read.parquet(tgt)
+    assert(got.count() == orders.count() + b.count())
+    // the sink schema is the config table's drop as inference reads it
+    val inferred = spark.read
+      .option("timestampFormat", graft.sink.StagedLoader.MicrosTimestampFormat)
+      .option("inferTimestamp", "true").json(s"$srcDir/orders.json")
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      inferred.schema.map(f => f.name -> f.dataType))
+  }
+
   test("Main.run --landing + incremental-time: inferred schema carries a real timestamp") {
     // the CLI landing probe infers the sink schema from the first drop;
     // without inferTimestamp the ts column would infer as STRING and the
@@ -165,6 +208,7 @@ class MainSpec extends SparkSpec {
          |  "sourceSplitTimeKey": "ts",
          |  "timeSplitUnit": "day",
          |  "batchSize": 100000,
+         |  "batchMaxInterval": 0,
          |  "maxThread": 1
          |}""".stripMargin).fold(e => fail(s"config parse: $e"), identity)
     assert(Main.run(spark, cfg, srcDir, tgt, incremental = true,

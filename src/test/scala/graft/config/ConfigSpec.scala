@@ -44,10 +44,9 @@ class ConfigSpec extends AnyFunSuite {
     assert(preCheck(tm.copy(sourceWhereCondition = "t1 = '2024-01-01'")).isLeft)
   }
 
-  test("preCheck normalizes defaults (userStage, maxThread)") {
+  test("preCheck normalizes defaults (maxThread)") {
     val c = preCheck(ArchiverConfig(sourceSplitKey = "id",
-      sourceWhereCondition = "id > 0", userStage = "", maxThread = 0)).toOption.get
-    assert(c.userStage == "~")
+      sourceWhereCondition = "id > 0", maxThread = 0)).toOption.get
     assert(c.maxThread == 1)
   }
 
@@ -62,7 +61,6 @@ class ConfigSpec extends AnyFunSuite {
     assert(c.isRight, c)
     assert(c.toOption.get.batchSize == 2L)
     assert(c.toOption.get.maxThread == 10)
-    assert(c.toOption.get.copyPurge)
   }
 
   test("preCheck: staging format whitelisted, defaults to NDJSON") {
